@@ -7,7 +7,9 @@ shuffle → sort → group-by-key → reduce`` over string KV pairs
 index, access counts) as the canonical applications. Each function here is
 the Spark-first formulation of one of those workloads; ``map_reduce`` keeps
 the reference's raw ``(mapf, reducef)`` programming contract for users who
-want to bring arbitrary Python functions.
+want to bring arbitrary Python functions, and ``map_reduce_scalable`` is its
+Arrow-batched twin: the JVM groups and sorts each key's values, and Python
+calls ``reducef`` in a loop over each Arrow batch of whole groups.
 
 Scale notes per operator are inline. The common theme: Catalyst inserts
 partial (map-side) aggregation automatically — the combiner the reference
@@ -21,6 +23,7 @@ from collections.abc import Callable, Iterable
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -162,9 +165,8 @@ def map_reduce(
     pair_rdd = src.rdd.flatMap(lambda row: mapf(row[0], row[1]))
     # The reference's KeyValue fields are non-nullable Go strings
     # (worker.go:26-29): a mapf emitting None has left the contract. Drop
-    # such pairs identically in BOTH engines — without this, array_sort
-    # here places nulls last while the scalable twin's Python sorted()
-    # raises, so the twins would diverge on the same user program.
+    # such pairs identically in BOTH engines, so reducef only ever sees
+    # str keys and values (array_sort would otherwise hand it nulls last).
     pairs = spark.createDataFrame(pair_rdd, "key string, value string").where(
         F.col("key").isNotNull() & F.col("value").isNotNull()
     )
@@ -187,29 +189,28 @@ def map_reduce_scalable(
     reducef: Callable[[str, list[str]], str],
     key_col: str = "file",
     value_col: str = "content",
-    arrow_groups: bool = False,
 ) -> DataFrame:
     """The scalable twin of ``map_reduce``: same (mapf, reducef) user
     contract (worker.go:51, README.MD:82), Arrow-batched execution.
 
     - map phase: ``mapInPandas`` — columnar batches in/out, no pickled
       rows (vs the RDD flatMap in ``map_reduce``);
-    - reduce phase: ``applyInPandas`` — one pandas frame per key with the
-      full sorted value list, honoring the reference's reducef contract
-      (``values []string`` per key, worker.go:161-165).
+    - group phase: the JVM groups and sorts, exactly as ``map_reduce``
+      does (``array_sort(collect_list(value))`` per key, worker.go:153-164);
+      ``collect_list``'s partial aggregation combines lists before the
+      shuffle. UTF-8 byte order is code-point order, so each list is in
+      Python ``sorted()`` order;
+    - reduce phase: ``mapInArrow`` — one Python call per Arrow batch of
+      groups, looping ``reducef(key, values)`` over its rows with
+      ``values`` a ``list[str]`` (worker.go:161-165). No per-key pandas
+      frame or Arrow round trip
+      (bench_runs/mr_reduce_batched_ab.json).
 
-    ``arrow_groups=True`` swaps the reduce to ``applyInArrow`` (one
-    Arrow table per key-group, skipping the per-group pandas block
-    construction). Measured r18 (VERDICT r17 #7, guide §4) and
-    REJECTED as the default: A/B 1.038 — at this group size the pandas
-    materialization is not the cost, and the contract's own
-    ``sorted(to_pylist())`` dominates either way
-    (bench_runs/r18_mr_arrow_ab.json, outputs bit-identical; parity
-    pinned by tests/test_mapreduce_core.py).
-
-    The whole-group-per-task memory shape is inherent to that contract
-    (the reference has it too, worker.go:142-153); for unbounded 100 TB
-    groups use algebraic DataFrame aggregates instead.
+    Memory shape: one reduce batch holds up to
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` groups' full value
+    lists. That is the whole-group contract ``map_reduce`` has, and the
+    reference has too (worker.go:142-153); for unbounded 100 TB groups
+    use algebraic DataFrame aggregates instead.
     """
 
     ensure_package_on_executors(df.sparkSession)
@@ -225,25 +226,20 @@ def map_reduce_scalable(
                     vals.append(ov)
             yield pd.DataFrame({"key": keys, "value": vals}, dtype=object)
 
+    def reduce_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            keys = batch.column("key")
+            out = map(reducef, keys.to_pylist(), batch.column("values").to_pylist())
+            yield pa.RecordBatch.from_arrays(
+                [keys, pa.array(out, type=keys.type)], names=["key", "value"]
+            )
+
     pairs = df.select(key_col, value_col).mapInPandas(
         map_batches, "key string, value string"
     ).where(F.col("key").isNotNull() & F.col("value").isNotNull())
     # null-pair filter: same non-null contract as map_reduce (see there)
-
-    if arrow_groups:
-        import pyarrow as pa
-
-        def reduce_group_arrow(tbl: "pa.Table") -> "pa.Table":
-            key = tbl.column("key")[0].as_py()
-            vals = sorted(tbl.column("value").to_pylist())
-            return pa.table({"key": [key], "value": [reducef(key, vals)]})
-
-        return pairs.groupBy("key").applyInArrow(
-            reduce_group_arrow, "key string, value string"
-        )
-
-    def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = pdf["key"].iloc[0]
-        return pd.DataFrame({"key": [key], "value": [reducef(key, sorted(pdf["value"]))]})
-
-    return pairs.groupBy("key").applyInPandas(reduce_group, "key string, value string")
+    return (
+        pairs.groupBy("key")
+        .agg(F.array_sort(F.collect_list("value")).alias("values"))
+        .mapInArrow(reduce_batches, "key string, value string")
+    )

@@ -89,31 +89,78 @@ def test_map_reduce_scalable_matches_rdd_variant(spark):
     assert scalable == rdd_based == {"hello": "2", "is": "2", "my": "1", "name": "3"}
 
 
-def test_map_reduce_scalable_arrow_and_pandas_reduce_agree(spark):
-    """The applyInArrow reduce (r18 default) ≡ the applyInPandas form —
-    same keys, same sorted value lists handed to reducef, same output.
-    The reducef here ECHOES its value list so ordering drift (not just
+def test_map_reduce_scalable_echo_reduce_matches_rdd_variant(spark):
+    """Both engines hand reducef the same keys and the same sorted value
+    lists. The reducef ECHOES its value list, so ordering drift (not just
     count drift) would fail."""
     df = spark.createDataFrame(
         [("f1", "b a c a"), ("f2", "a c b b")], ["file", "content"]
     )
 
     def mapf(fname, content):
-        return [(w, f"{fname}:{i}") for i, w in enumerate(content.split())]
+        # values count down, so emission order is never sorted order
+        return [(w, f"{9 - i}:{fname}") for i, w in enumerate(content.split())]
 
     def reducef(key, values):
         return "|".join(values)  # sorted order is part of the contract
 
-    arrow = {
-        r.key: r.value
-        for r in MR.map_reduce_scalable(df, mapf, reducef, arrow_groups=True).collect()
-    }
-    pandas_ = {
-        r.key: r.value
-        for r in MR.map_reduce_scalable(df, mapf, reducef, arrow_groups=False).collect()
-    }
-    assert arrow == pandas_
-    assert arrow["a"] == "f1:1|f1:3|f2:0"
+    scalable = {r.key: r.value for r in MR.map_reduce_scalable(df, mapf, reducef).collect()}
+    rdd_based = {r.key: r.value for r in MR.map_reduce(spark, df, mapf, reducef).collect()}
+    assert scalable == rdd_based
+    assert scalable["a"] == "6:f1|8:f1|9:f2"
+
+
+def test_map_reduce_scalable_values_in_python_sorted_order(spark):
+    """The JVM sorts UTF-8 bytes and Python sorts code points; the lists
+    reducef receives must be in Python ``sorted()`` order for non-ASCII
+    and astral-plane strings too."""
+    values = ["z", "é", "Z", "😀", "a", "ß", "Ω", "𝔸", "\uffff", "é"]
+    df = spark.createDataFrame([("f", " ".join(values))], ["file", "content"])
+
+    def mapf(fname, content):
+        return [("k", v) for v in content.split()]
+
+    def reducef(key, values):
+        return "|".join(values)
+
+    got = MR.map_reduce_scalable(df, mapf, reducef).collect()
+    assert [(r.key, r.value) for r in got] == [("k", "|".join(sorted(values)))]
+
+
+def test_map_reduce_scalable_small_arrow_batches(spark):
+    """With 3 groups per Arrow batch, 20 keys span several reduce batches:
+    each key is reduced exactly once with its whole value list, a None
+    from reducef is a NULL value, and empty input is an empty frame."""
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(conf, None)
+    spark.conf.set(conf, "3")
+    try:
+        keys = [f"k{i:02d}" for i in range(20)]
+        df = spark.createDataFrame(
+            [(f"f{j}", " ".join(keys)) for j in range(3)], ["file", "content"]
+        )
+
+        def mapf(fname, content):
+            return [(w, fname) for w in content.split()]
+
+        def reducef(key, values):
+            return None if key == "k07" else "|".join(values)
+
+        rows = MR.map_reduce_scalable(df, mapf, reducef).collect()
+        assert sorted(r.key for r in rows) == keys
+        got = {r.key: r.value for r in rows}
+        assert got.pop("k07") is None
+        assert set(got.values()) == {"f0|f1|f2"}
+
+        empty = spark.createDataFrame([], "file string, content string")
+        out = MR.map_reduce_scalable(empty, mapf, reducef)
+        assert out.columns == ["key", "value"]
+        assert out.collect() == []
+    finally:
+        if before is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, before)
 
 
 def test_generic_contract_mapf_tolerates_null_text():
