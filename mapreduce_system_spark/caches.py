@@ -1,4 +1,4 @@
-"""Tracked ``.cache()`` registry so long-lived sessions can release them.
+"""Cached relations and eager checkpoints that harnesses can release.
 
 Operators that cache an intermediate (e.g. the shingle sets in
 ``operators.dedup``) return *lazy* plans — the cache cannot be unpersisted
@@ -6,6 +6,16 @@ inside the operator because nothing has executed yet. Registering every
 cached relation here lets harnesses that run many queries in one session
 (bench.py, the driver's correctness sweep, pytest) call ``release()``
 between queries, so cached relations never accumulate across the run.
+
+Iterative operators pin per-round state with ``checkpoint(df)``, an eager
+``localCheckpoint``. Its blocks belong to an internal RDD that
+``DataFrame.unpersist()`` cannot reach, so ``checkpoint`` keeps a handle to
+that RDD, read from the checkpointed frame's own plan (a ``LogicalRDD``).
+A loop calls ``free(prev)`` once the successor round is materialized;
+frames never freed (the returned result, state a later round still reads)
+are released by ``release()``. Each handle names exactly one RDD, so
+operators checkpointing concurrently on one session release only their own
+blocks.
 
 Unreleased entries are bounded by the corpus the operator cached (a few
 MB at fixture scale) and are dropped with the session; ``release()`` makes
@@ -17,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
+_CHECKPOINTS: dict[int, object] = {}  # RDD id -> JVM RDD holding the blocks
 
 
 def tracked_cache(df: DataFrame) -> DataFrame:
@@ -26,54 +37,32 @@ def tracked_cache(df: DataFrame) -> DataFrame:
     return cached
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Register an ALREADY-cached relation for later ``release()`` (for
-    iterative operators that cache per-round state themselves and only
-    hand over the surviving relation)."""
-    _TRACKED.append(df)
-    return df
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now (eager local checkpoint) and register its
+    blocks for ``free`` or ``release()``. The result's lineage is the
+    checkpointed partitions alone."""
+    out = df.localCheckpoint(eager=True)
+    rdd = out._jdf.queryExecution().analyzed().rdd()
+    _CHECKPOINTS[rdd.id()] = rdd
+    return out
 
 
-_TRACKED_RDDS: list[tuple[object, frozenset[int]]] = []
-
-
-def persistent_rdd_ids(spark) -> set[int]:
-    """Ids of the RDDs currently persisted in the context — including
-    ``localCheckpoint`` blocks, which ``DataFrame.unpersist()`` can NOT
-    release (the checkpoint's storage belongs to an internal RDD the
-    DataFrame API never exposes). Iterative operators snapshot this
-    before/after a checkpoint to learn the ids they created; the diff is
-    only meaningful while one operator checkpoints at a time (true for
-    every harness here — bench/verify/driver run queries serially)."""
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    ids: set[int] = set()
-    while it.hasNext():
-        ids.add(it.next()._1())
-    return ids
-
-
-def unpersist_rdd_ids(spark, ids) -> int:
-    """Release the storage of the given persisted-RDD ids (non-blocking).
-    A locally-checkpointed RDD is unusable afterwards — callers must only
-    release rounds whose successors are already materialized."""
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    n = 0
-    while it.hasNext():
-        t = it.next()
-        if t._1() in ids:
-            t._2().unpersist(False)
-            n += 1
-    return n
-
-
-def track_rdd_ids(spark, ids) -> None:
-    """Register checkpoint-block RDD ids for the next ``release()`` —
-    the checkpoint analog of ``track`` for cached DataFrames."""
-    _TRACKED_RDDS.append((spark, frozenset(ids)))
+def free(df: DataFrame) -> None:
+    """Release the blocks of a frame ``checkpoint`` returned (non-blocking).
+    The frame, and every lazy plan over it, is unusable afterwards — free
+    a round only once its successor is materialized. Raises ValueError for
+    any other frame: a projection of a checkpoint is not one, and freeing
+    it would silently release nothing."""
+    plan = df._jdf.queryExecution().analyzed()
+    rdd = _CHECKPOINTS.pop(plan.rdd().id(), None) if plan.nodeName() == "LogicalRDD" else None
+    if rdd is None:
+        raise ValueError("free() takes a frame returned by checkpoint() and not yet freed")
+    rdd.unpersist(False)
 
 
 def release() -> int:
-    """Unpersist every tracked cached relation; returns how many."""
+    """Unpersist every tracked cached relation and checkpoint; returns how
+    many."""
     n = 0
     while _TRACKED:
         try:
@@ -81,10 +70,10 @@ def release() -> int:
             n += 1
         except Exception:  # session already stopped — nothing to release
             pass
-    while _TRACKED_RDDS:
-        spark, ids = _TRACKED_RDDS.pop()
+    while _CHECKPOINTS:
         try:
-            n += unpersist_rdd_ids(spark, ids)
+            _CHECKPOINTS.popitem()[1].unpersist(False)
+            n += 1
         except Exception:  # session already stopped — nothing to release
             pass
     return n

@@ -68,7 +68,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from mapreduce_system_spark.caches import persistent_rdd_ids, track_rdd_ids
+from mapreduce_system_spark.caches import checkpoint
 
 
 def global_sort_positions(
@@ -98,21 +98,18 @@ def global_sort_positions(
     returned lazy DataFrame is consumed, re-execution re-samples the
     range cuts and the collected offsets silently describe a different
     layout (duplicate/overflowing positions — the exact defect the
-    --sneighbor probe caught at 10x). Checkpoint blocks are registered
-    with caches.track_rdd_ids, so harnesses release them via
-    caches.release() AFTER consuming the result, like every tracked
-    relation."""
+    --sneighbor probe caught at 10x). ``caches.checkpoint`` registers
+    the blocks, so harnesses release them via caches.release() AFTER
+    consuming the result, like every tracked relation."""
     s = df.select(
         F.col(id_col).alias("id"), F.col(key_col).alias("key")
     ).where(F.col(id_col).isNotNull() & F.col(key_col).isNotNull())
     spark = df.sparkSession
-    before_ids = persistent_rdd_ids(spark)
-    ranged = (
-        s.repartitionByRange(num_partitions, "key", "id")
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    ranged = checkpoint(
+        s.repartitionByRange(num_partitions, "key", "id").withColumn(
+            "_pid", F.spark_partition_id()
+        )
     )
-    track_rdd_ids(spark, persistent_rdd_ids(spark) - before_ids)
     # partition-count-sized driver state — the operator's ONLY collect
     counts = {
         r["_pid"]: r["n"]

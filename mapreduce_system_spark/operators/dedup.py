@@ -31,12 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce_system_spark.caches import (
-    persistent_rdd_ids,
-    track_rdd_ids,
-    tracked_cache,
-    unpersist_rdd_ids,
-)
+from mapreduce_system_spark.caches import checkpoint, free, tracked_cache
 from mapreduce_system_spark.functions.text import (
     fingerprint,
     normalized_text,
@@ -555,10 +550,10 @@ def connected_components(
     max_iter rounds don't converge rather than returning a wrong
     labeling.
     """
-    # Caches are per-round working state: stale rounds are unpersisted
-    # inside the loop; the edge set and the final converged labeling go
-    # through tracked_cache so long-lived harnesses (bench, verify) can
-    # caches.release() them after the query is consumed.
+    # Checkpoints are per-round working state: stale rounds are freed
+    # inside the loop; the edge set (tracked_cache) and the final
+    # converged labeling stay registered so long-lived harnesses (bench,
+    # verify) can caches.release() them after the query is consumed.
     # No distinct() on the edge set: min-label propagation is idempotent
     # under duplicate edges (min over a multiset), and every pair
     # generator here already emits unique (id_a < id_b) pairs — the
@@ -575,9 +570,8 @@ def connected_components(
             ).alias("e")
         ).select("e.src", "e.dst")
     )
-    spark = pairs.sparkSession
     comp = edges.select(F.col("src").alias("id")).distinct().withColumn("comp", F.col("id"))
-    prev_ids: set[int] = set()
+    prev: DataFrame | None = None
     for round_no in range(1, max_iter + 1):
         if stats is not None:
             stats["rounds"] = round_no  # observability only (bench notes)
@@ -597,8 +591,7 @@ def connected_components(
         # The old label rides along as a flag column so convergence is a
         # filter-count over the materialized partitions — the separate
         # old-vs-new join (one extra shuffle per round) is gone.
-        before_ids = persistent_rdd_ids(spark)
-        stepped = (
+        stepped = checkpoint(
             comp.select("id", F.col("comp").alias("old"))
             .join(neighbor_min, "id", "left")
             .select(
@@ -608,25 +601,21 @@ def connected_components(
                 ),
                 "old",
             )
-            .localCheckpoint(eager=True)
         )
         # The eager checkpoint above just materialized this round from the
-        # previous one — the previous round's blocks are now dead weight.
-        # DataFrame.unpersist can't reach checkpoint storage, so release
-        # by RDD id; without this, long convergences accumulate one
-        # materialized labeling per round until the JVM GC/ContextCleaner
-        # happens to reclaim them.
-        step_ids = persistent_rdd_ids(spark) - before_ids
-        if prev_ids:
-            unpersist_rdd_ids(spark, prev_ids)
-        prev_ids = step_ids
+        # previous one — the previous round's blocks are now dead weight;
+        # without this, long convergences accumulate one materialized
+        # labeling per round until the JVM GC/ContextCleaner happens to
+        # reclaim them.
+        if prev is not None:
+            free(prev)
+        prev = stepped
         changed = stepped.where(F.col("comp") != F.col("old")).count()
         if changed == 0:
             # Neighbor-min stability is the fixpoint (for every edge
             # L(src) <= L(dst) and vice versa ⇒ labels constant per
             # component ⇒ each equals its component min), so checking
             # before the jump is sound.
-            track_rdd_ids(spark, step_ids)  # converged labeling: release()-able
             return stepped.select("id", F.col("comp").alias("survivor_id"))
         # Pointer jump (path doubling): a label is itself a node id, so
         # follow it one hop — L'(id) = L(L(id)) — before the next
@@ -644,7 +633,8 @@ def connected_components(
                 ),
             )
         )
-    unpersist_rdd_ids(spark, prev_ids)
+    if prev is not None:
+        free(prev)
     raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
 
 

@@ -44,11 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce_system_spark.caches import (
-    persistent_rdd_ids,
-    track_rdd_ids,
-    tracked_cache,
-)
+from mapreduce_system_spark.caches import checkpoint, tracked_cache
 from mapreduce_system_spark.operators.graph import degree_census
 
 
@@ -75,7 +71,6 @@ def densest_subgraph_rounds(
         raise ValueError(f"epsilon must be >= 0, got {epsilon}")
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    spark = edges.sparkSession
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
         F.col(src).isNotNull() & F.col(dst).isNotNull() & (F.col(src) != F.col(dst))
     )
@@ -113,26 +108,22 @@ def densest_subgraph_rounds(
 
     cur = pr
     out = census_row(cur, 0)
-    keep_ids: set[int] = set()
     for r in range(1, rounds + 1):
         deg = degree_census(cur)
         rho = cur.agg(F.count("*").alias("m")).crossJoin(
             deg.agg(F.count("*").alias("n"))
         )
-        before = persistent_rdd_ids(spark)
         # node-sized checkpoint (the k-core keep-set discipline): every
         # later round's lazy re-filter — and the final census union —
-        # reads it, so it stays pinned for the loop's remainder
-        keep = (
+        # reads it, so it stays pinned until release()
+        keep = checkpoint(
             deg.crossJoin(F.broadcast(rho))
             .where(
                 F.col("d")
                 > thr * (F.col("m") / F.nullif(F.col("n"), F.lit(0)))
             )
             .select(F.col("node"))
-            .localCheckpoint(eager=True)
         )
-        keep_ids |= persistent_rdd_ids(spark) - before
         ku = keep.select(F.col("node").alias("u"))
         kv = keep.select(F.col("node").alias("v"))
         # AQE owns the join strategy: keep is checkpoint-materialized,
@@ -142,6 +133,4 @@ def densest_subgraph_rounds(
         # which exists for its hint-unconvertible topology)
         cur = cur.join(ku, "u", "left_semi").join(kv, "v", "left_semi")
         out = out.unionByName(census_row(cur, r))
-    if keep_ids:
-        track_rdd_ids(spark, keep_ids)
     return out

@@ -10,9 +10,9 @@ scale discipline as ``operators/dedup.py::connected_components``:
   edge list) + ONE aggregation — partial+final, map-side combinable;
 - the contribution edge list (edge + 1/outdeg weight) is computed once
   and cached; iterations never re-derive the graph;
-- each round ``localCheckpoint``s its rank vector and releases the
-  previous round's blocks (``caches.unpersist_rdd_ids``), so lineage
-  and storage stay O(1) in the iteration count;
+- each round checkpoints its rank vector and frees the previous
+  round's (``caches.checkpoint``/``caches.free``), so lineage and
+  storage stay O(1) in the iteration count;
 - the only driver-side values are the node count N (one scalar) and
   the loop bound — rank vectors never leave the cluster.
 
@@ -28,12 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce_system_spark.caches import (
-    persistent_rdd_ids,
-    track_rdd_ids,
-    tracked_cache,
-    unpersist_rdd_ids,
-)
+from mapreduce_system_spark.caches import checkpoint, free, tracked_cache
 
 
 def pagerank(
@@ -107,7 +102,6 @@ def pagerank(
     added blocks + one extra job; revisit only for an uncached edge
     source, where the saved scan is a real fact-table pass).
     """
-    spark = edges.sparkSession
     if weight is None:
         e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         deg = e.groupBy("u").agg(F.count("*").cast("double").alias("outdeg"))
@@ -189,8 +183,7 @@ def pagerank(
     else:
         ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     base = teleport / n  # uniform-teleport scalar (unused on the seeds path)
-    prev_ids: set[int] = set()
-    for _ in range(iterations):
+    for i in range(iterations):
         contribs = (
             ce.join(ranks, ce.u == ranks.node)
             .select(F.col("v").alias("node"), (F.col("rank") * F.col("w")).alias("c"))
@@ -212,16 +205,12 @@ def pagerank(
                 if tpn is None
                 else F.col("m") * F.col("tp")
             )
-        before = persistent_rdd_ids(spark)
         new_rank_expr = (
             F.lit(base) + F.lit(damping) * gain
             if tpn is None
             else F.lit(teleport) * F.col("tp") + F.lit(damping) * gain
         )
-        new_ranks = updated.select("node", new_rank_expr.alias("rank")).localCheckpoint(
-            eager=True
-        )
-        step_ids = persistent_rdd_ids(spark) - before
+        new_ranks = checkpoint(updated.select("node", new_rank_expr.alias("rank")))
         done = False
         if tol is not None:
             delta = (
@@ -231,14 +220,11 @@ def pagerank(
                 .collect()[0]["d"]
             )
             done = delta is not None and delta < tol
-        if prev_ids:
-            unpersist_rdd_ids(spark, prev_ids)
-        prev_ids = step_ids
+        if i:
+            free(ranks)
         ranks = new_ranks
         if done:
             break
-    if prev_ids:
-        track_rdd_ids(spark, prev_ids)
     return ranks
 
 
@@ -249,7 +235,6 @@ def label_propagation(
     *,
     iterations: int = 3,
     edges_undirected_distinct: bool = False,
-    argmax_mode: bool = True,
 ) -> DataFrame:
     """Community detection by SYNCHRONOUS label propagation (LPA) over
     the undirected graph: every node starts labeled with its own id,
@@ -270,20 +255,16 @@ def label_propagation(
     u<v contract) and skips the symmetrize-distinct shuffle — the union
     with the reversed copy is then distinct by construction, saving one
     full-edge-list exchange before the cache (the NULL/self-loop filter
-    still applies, it is map-side-free). The per-round argmax defaults
-    to a single ``mode(lbl, deterministic=True)`` aggregate
-    (``argmax_mode=True``): Spark 4's deterministic mode returns the
-    LOWEST value among equally-frequent ones — exactly the
-    most-frequent-then-smallest tie-break — as one ObjectHashAggregate
-    whose partial count-maps combine map-side. ``argmax_mode=False``
-    keeps the two-phase count + ``max(struct(cnt, -label))`` form,
-    whose struct-typed max buffer forces a SortAggregate pair: two
-    per-round sorts of the vote counts on top of the extra aggregate
-    (node ids must then be non-NULL integers above LONG_MIN for the
-    negation to be exact). The r17 A/B on the registered query's graph measured
-    mode at 0.66x the two-phase wall with bit-identical labels
-    (bench_runs/r17_lpa_mode_ab.json; parity pinned by
-    tests/test_lpa.py::test_lpa_mode_argmax_is_bit_identical).
+    still applies, it is map-side-free). The per-round argmax is a
+    single ``mode(lbl, deterministic=True)`` aggregate: Spark 4's
+    deterministic mode returns the LOWEST value among equally-frequent
+    ones — exactly the most-frequent-then-smallest tie-break — as one
+    ObjectHashAggregate whose partial count-maps combine map-side. It
+    replaced a two-phase count + ``max(struct(cnt, -label))`` form,
+    whose struct-typed max buffer forces a SortAggregate pair (two
+    per-round sorts of the vote counts); the r17 A/B on the registered
+    query's graph measured mode at 0.66x its wall with bit-identical
+    labels (bench_runs/r17_lpa_mode_ab.json).
 
     Scale shape, mirroring ``pagerank``'s audit: per round ONE
     equi-join (labels onto the symmetrized edge list) + ONE aggregation
@@ -301,7 +282,6 @@ def label_propagation(
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    spark = edges.sparkSession
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
         F.col(src).isNotNull() & F.col(dst).isNotNull() & (F.col(src) != F.col(dst))
     )
@@ -313,52 +293,19 @@ def label_propagation(
     labels = sym.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    prev_ids: set[int] = set()
-    for _ in range(iterations):
+    for i in range(iterations):
         neigh = sym.join(labels, sym.u == labels.node).select(
             F.col("v").alias("node"), F.col("label").alias("lbl")
         )
-        before = persistent_rdd_ids(spark)
-        if argmax_mode:
-            # ONE aggregate chain per round: mode(lbl, deterministic=
-            # True) IS "most frequent neighbor label, smallest on ties"
-            # — the exact LPA tie-break — computed as an
-            # ObjectHashAggregate whose partial count-maps combine
-            # map-side. The two-phase form below plans the argmax as a
-            # SortAggregate pair (the struct-typed max buffer forces
-            # SortAggregate, tests/test_plan_guards.py:354's documented
-            # behavior), paying two per-round SORTs of the vote counts
-            # on top of the extra aggregate pair — see
-            # plans/r17/graph_label_propagation_round_{before,after}.txt.
-            # r17 A/B at sf0.1 on the registered query's graph:
-            # bench_runs/r17_lpa_mode_ab.json, 0.66x, bit-identical.
-            new_labels = (
-                neigh.groupBy("node")
-                .agg(F.mode("lbl", True).alias("label"))
-                .localCheckpoint(eager=True)
-            )
-        else:
-            # deterministic argmax without a window: max over
-            # (count, -label) = most frequent label, smallest on ties
-            new_labels = (
-                neigh.groupBy("node", "lbl")
-                .agg(F.count("*").alias("cnt"))
-                .groupBy("node")
-                .agg(
-                    F.max(
-                        F.struct(F.col("cnt"), (-F.col("lbl")).alias("nl"))
-                    ).alias("m")
-                )
-                .select("node", (-F.col("m.nl")).alias("label"))
-                .localCheckpoint(eager=True)
-            )
-        step_ids = persistent_rdd_ids(spark) - before
-        if prev_ids:
-            unpersist_rdd_ids(spark, prev_ids)
-        prev_ids = step_ids
+        # ONE aggregate chain per round: mode(lbl, deterministic=True) IS
+        # "most frequent neighbor label, smallest on ties" — see
+        # plans/r17/graph_label_propagation_round_{before,after}.txt
+        new_labels = checkpoint(
+            neigh.groupBy("node").agg(F.mode("lbl", True).alias("label"))
+        )
+        if i:
+            free(labels)
         labels = new_labels
-    if prev_ids:
-        track_rdd_ids(spark, prev_ids)
     return labels
 
 
@@ -425,7 +372,6 @@ def k_core_peel(
         raise ValueError(f"k must be >= 1, got {k}")
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    spark = edges.sparkSession
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).where(
         F.col(src).isNotNull() & F.col(dst).isNotNull() & (F.col(src) != F.col(dst))
     )
@@ -439,19 +385,12 @@ def k_core_peel(
     # the pure-Python reference both mirror)
     sym = tracked_cache(sym)
     cur = sym
-    keep_ids: set[int] = set()
     for _ in range(rounds):
         deg = cur.groupBy("u").agg(F.count("*").alias("d"))
-        before = persistent_rdd_ids(spark)
         # node-sized checkpoint (the pagerank rank-vector discipline);
-        # each kept set stays pinned for the loop's remainder because
-        # EVERY later round's lazy re-filter reads it
-        keep = (
-            deg.where(F.col("d") >= k)
-            .select("u")
-            .localCheckpoint(eager=True)
-        )
-        keep_ids |= persistent_rdd_ids(spark) - before
+        # each kept set stays pinned until release() because EVERY later
+        # round's lazy re-filter, and the returned plan, reads it
+        keep = checkpoint(deg.where(F.col("d") >= k).select("u"))
         # gate the broadcast hint on the MEASURED keep size (ADVICE r14
         # #1): the count is a cheap job over the just-checkpointed
         # node-sized blocks; under the cap the hint buys the 10x probe
@@ -474,10 +413,7 @@ def k_core_peel(
         if keep_n <= broadcast_max_nodes:
             k1, k2 = F.broadcast(k1), F.broadcast(k2)
         cur = cur.join(k1, "u", "left_semi").join(k2, "v", "left_semi")
-    out = cur.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("degree"))
-    if keep_ids:
-        track_rdd_ids(spark, keep_ids)
-    return out
+    return cur.groupBy(F.col("u").alias("node")).agg(F.count("*").alias("degree"))
 
 
 def degree_census(pr: DataFrame) -> DataFrame:
@@ -610,8 +546,8 @@ def bfs_hops(
     checkpointed per round — the visited set is the lazy union of the
     already-materialized frontiers, so each round materializes O(new
     nodes), not O(all visited); every round's blocks stay live (the
-    union references them) and are handed to ``track_rdd_ids`` for the
-    harness-level ``release()``, total storage O(V). The only
+    union references them) until the harness-level ``release()``,
+    total storage O(V). The only
     driver-side value is the per-round frontier count that detects
     exhaustion — never a node list. On a 1000-executor cluster the
     frontier join co-partitions with the edge list's hash
@@ -625,38 +561,29 @@ def bfs_hops(
             f"bfs_hops: seeds must be a single-column node-id frame, "
             f"got columns {seeds.columns}"
         )
-    spark = edges.sparkSession
     e = tracked_cache(edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
-    before0 = persistent_rdd_ids(spark)
-    dist = (
+    dist = checkpoint(
         seeds.select(F.col(seeds.columns[0]).alias("node"))
         # a NULL seed is not a node: it matches no edge (NULL equi-join)
         # and would only emit a spurious (NULL, 0) row
         .where(F.col("node").isNotNull())
         .distinct()
         .withColumn("hop", F.lit(0))
-        .localCheckpoint(eager=True)
     )
     frontier = dist
-    all_ids = persistent_rdd_ids(spark) - before0
     for h in range(1, max_hops + 1):
-        nxt = (
+        nxt = checkpoint(
             frontier.join(e, frontier["node"] == e["u"])
             .select(F.col("v").alias("node"))
             .distinct()
             .join(dist, "node", "left_anti")
             .withColumn("hop", F.lit(h))
         )
-        before = persistent_rdd_ids(spark)
-        nxt = nxt.localCheckpoint(eager=True)
-        all_ids |= persistent_rdd_ids(spark) - before
         n_new = nxt.count()  # bounded driver scalar: frontier size
         if n_new == 0:
             break
         dist = dist.union(nxt)
         frontier = nxt
-    if all_ids:
-        track_rdd_ids(spark, all_ids)
     return dist
 
 
@@ -668,8 +595,6 @@ def k_truss_edges(
     *,
     rounds: int = 2,
     edges_undirected_distinct: bool = False,
-    reuse_orientation: bool = True,
-    explode_members: bool = True,
 ) -> DataFrame:
     """SYNCHRONOUS k-truss peeling — the EDGE-level density filter next
     to ``k_core_peel``'s node-level one: each round removes EVERY edge
@@ -698,13 +623,11 @@ def k_truss_edges(
     triangle's minimum-(degree, id) vertex, so the wedge volume is
     O(E·arboricity), never Θ(Σ d²) — then ONE edge-keyed support
     aggregate over the triangle stream exploded into its three member
-    edges (``explode_members=True``, the r17 default: one pass over the
-    enumeration; the unionAll-of-three-projections form re-planned the
-    wedge self-join + closing-edge probe once per projection — the A/B
+    edges (one pass over the enumeration; the unionAll of three member
+    projections it replaced re-planned the wedge self-join +
+    closing-edge probe once per projection — the A/B
     bench_runs/r17_ktruss_members_ab.json measured explode at 0.38x
-    with bit-identical output, parity pinned by tests/test_ktruss.py::
-    test_ktruss_explode_members_is_bit_identical; both forms stay
-    partial+final combinable). UNLIKE k-core, the per-round checkpoint
+    with bit-identical output). UNLIKE k-core, the per-round checkpoint
     is EDGE-sized: the recurrence state IS the surviving edge set (the
     answer itself), so an E-sized materialization per round is the
     honest floor here, not the defect it was for k-core's node-sized
@@ -724,7 +647,6 @@ def k_truss_edges(
         raise ValueError(f"k must be >= 2, got {k}")
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    spark = edges.sparkSession
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
         F.col(src).isNotNull() & F.col(dst).isNotNull() & (F.col(src) != F.col(dst))
     )
@@ -740,22 +662,18 @@ def k_truss_edges(
     if not edges_undirected_distinct:
         pr = pr.distinct()
 
-    # reuse_orientation: compact-forward enumeration needs only SOME
-    # total vertex order to count each triangle exactly once (at its
-    # minimum vertex in that order); the ROUND-0 (degree, id) order
-    # remains a valid total order on every shrunken edge set, so later
-    # support calls can skip re-deriving degree_census (a 2E-row
-    # shuffle per call) and orient against the pinned round-0 table.
-    # Support counts are orientation-independent — the output is
-    # bit-identical either way (pinned by test). The O(E·arboricity)
-    # wedge bound degrades only as far as the peeled graph's degree
-    # order drifts from round 0's — peeling removes edges, so round-0
-    # degrees only over-estimate. The r17 A/B at sf0.1 (alternating
-    # arms, median-of-3, bench_runs/r17_ktruss_ab.json) measured reuse
-    # at 0.76x the re-derive wall at the registered k=8/rounds=2 — the
-    # degraded bound never showed — so reuse is the default; re-derive
-    # (False) is the right call only for many-round peels where the
-    # drift could compound.
+    # compact-forward enumeration needs only SOME total vertex order to
+    # count each triangle exactly once (at its minimum vertex in that
+    # order); the ROUND-0 (degree, id) order remains a valid total order
+    # on every shrunken edge set, so every support call orients against
+    # the pinned round-0 table instead of re-deriving degree_census (a
+    # 2E-row shuffle per call). Support counts are orientation-
+    # independent. The O(E·arboricity) wedge bound degrades only as far
+    # as the peeled graph's degree order drifts from round 0's — peeling
+    # removes edges, so round-0 degrees only over-estimate. The r17 A/B
+    # at sf0.1 (bench_runs/r17_ktruss_ab.json) measured reuse at 0.76x
+    # the re-derive wall at the registered k=8/rounds=2; re-deriving per
+    # round only pays for many-round peels where the drift compounds.
     # cache the normalized edge list BEFORE deriving ord0 (r17): the
     # ord0 checkpoint and round 0's support are SEPARATE actions, and
     # AQE exchange reuse never spans actions — deriving ord0 from the
@@ -763,17 +681,12 @@ def k_truss_edges(
     # action. Censusing the cache instead fills it during the ord0 job
     # and every later action reads blocks.
     cur = tracked_cache(pr)
-    ord0: DataFrame | None = None
-    if reuse_orientation:
-        before0 = persistent_rdd_ids(spark)
-        ord0 = degree_census(cur).localCheckpoint(eager=True)
-        track_rdd_ids(spark, persistent_rdd_ids(spark) - before0)
+    ord0 = checkpoint(degree_census(cur))
 
     def support(cur: DataFrame) -> DataFrame:
         """(u, v, cnt) triangle support of a value-ordered edge set —
         triangle_stats' enumeration, re-keyed to member edges."""
-        deg = ord0 if ord0 is not None else degree_census(cur)
-        eo = orient_by_degree(cur, deg)
+        eo = orient_by_degree(cur, ord0)
         e1, e2 = eo.alias("e1"), eo.alias("e2")
         wedges = e1.join(
             e2, (F.col("e1.s") == F.col("e2.s")) & (F.col("e1.t") < F.col("e2.t"))
@@ -789,75 +702,45 @@ def k_truss_edges(
             cur.hint("shuffle_hash"),
             (F.col("u") == F.col("b")) & (F.col("v") == F.col("c")),
         ).select("a", "b", "c")
-        if explode_members:
-            # ONE pass over the triangle stream: each triangle explodes
-            # into its three member edges (a<b and a<c re-ordered by
-            # value; b<c already value-ordered by construction) — the
-            # connected_components explode trick, here applied so the
-            # wedge self-join + closing-edge probe above evaluate ONCE.
-            # The unionAll form re-plans that whole subtree THREE times
-            # (one per member projection); AQE's runtime stage reuse
-            # dedups only the shuffle-feeding map stages, not the three
-            # reduce-side closing-join executions (their downstream
-            # projections differ, so the stages never canonicalize
-            # equal). r17 A/B at the registered constants:
-            # bench_runs/r17_ktruss_members_ab.json.
-            members = tri.select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.least("a", "b").alias("u"),
-                            F.greatest("a", "b").alias("v"),
-                        ),
-                        F.struct(
-                            F.least("a", "c").alias("u"),
-                            F.greatest("a", "c").alias("v"),
-                        ),
-                        F.struct(F.col("b").alias("u"), F.col("c").alias("v")),
-                    )
-                ).alias("e")
-            ).select("e.u", "e.v")
-        else:
-            members = (
-                tri.select(
-                    F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
+        # ONE pass over the triangle stream: each triangle explodes into
+        # its three member edges (a<b and a<c re-ordered by value; b<c
+        # already value-ordered by construction), so the wedge self-join
+        # + closing-edge probe above evaluate ONCE. A unionAll of three
+        # member projections re-plans that whole subtree per projection;
+        # AQE's runtime stage reuse dedups only the shuffle-feeding map
+        # stages, not the three reduce-side closing-join executions.
+        members = tri.select(
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.least("a", "b").alias("u"),
+                        F.greatest("a", "b").alias("v"),
+                    ),
+                    F.struct(
+                        F.least("a", "c").alias("u"),
+                        F.greatest("a", "c").alias("v"),
+                    ),
+                    F.struct(F.col("b").alias("u"), F.col("c").alias("v")),
                 )
-                .unionAll(
-                    tri.select(
-                        F.least("a", "c").alias("u"), F.greatest("a", "c").alias("v")
-                    )
-                )
-                .unionAll(tri.select(F.col("b").alias("u"), F.col("c").alias("v")))
-            )
+            ).alias("e")
+        ).select("e.u", "e.v")
         return members.groupBy("u", "v").agg(F.count("*").alias("cnt"))
 
-    kept_ids: set[int] = set()
-    for _ in range(rounds):
-        supp = support(cur)
-        before = persistent_rdd_ids(spark)
+    for r in range(rounds):
         # edge-sized checkpoint: the recurrence state is the edge set
-        # itself (see docstring); previous rounds' blocks are released
-        # once the new state is pinned, so storage stays one edge set
-        nxt = (
-            cur.join(supp, ["u", "v"], "left")
+        # itself (see docstring); the previous round's is freed once the
+        # new state is pinned, so storage stays one edge set
+        nxt = checkpoint(
+            cur.join(support(cur), ["u", "v"], "left")
             .where(F.coalesce(F.col("cnt"), F.lit(0)) >= k - 2)
             .select("u", "v")
-            .localCheckpoint(eager=True)
         )
-        step_ids = persistent_rdd_ids(spark) - before
-        if kept_ids:
-            unpersist_rdd_ids(spark, kept_ids)
-        kept_ids = step_ids
+        if r:
+            free(cur)
         cur = nxt
-    out = (
-        cur.join(support(cur), ["u", "v"], "left")
-        .select(
-            "u", "v", F.coalesce(F.col("cnt"), F.lit(0)).cast("long").alias("support")
-        )
+    return cur.join(support(cur), ["u", "v"], "left").select(
+        "u", "v", F.coalesce(F.col("cnt"), F.lit(0)).cast("long").alias("support")
     )
-    if kept_ids:
-        track_rdd_ids(spark, kept_ids)
-    return out
 
 
 def connected_components_jump(
@@ -866,7 +749,6 @@ def connected_components_jump(
     id_b: str = "id_b",
     *,
     rounds: int = 6,
-    cache_jump_input: bool = False,
 ) -> DataFrame:
     """POINTER-JUMPING connected components: (id, lab) where ``lab``
     converges to the component-minimum id. Staged r16 for a later debut
@@ -928,7 +810,6 @@ def connected_components_jump(
     """
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    spark = pairs.sparkSession
     pr = (
         pairs.select(
             F.least(id_a, id_b).alias("u"), F.greatest(id_a, id_b).alias("v")
@@ -952,8 +833,7 @@ def connected_components_jump(
     lab = edges.select(F.col("src").alias("id")).distinct().withColumn(
         "lab", F.col("id")
     )
-    kept_ids: set[int] = set()
-    for _ in range(rounds):
+    for i in range(rounds):
         # (1) neighbor-min incl. self. Semantically the oracle's
         # UNION ALL + min, but spelled as one edge-keyed aggregate +
         # one node-keyed LEFT join: a Union INSIDE the recurrence trips
@@ -979,33 +859,13 @@ def connected_components_jump(
                 F.col("lab"), F.coalesce(F.col("nmin"), F.col("lab"))
             ).alias("lab"),
         )
-        # cache_jump_input: the jump below references m TWICE (both
-        # self-join sides), and the two sides never canonicalize to one
-        # AQE stage (one is the broadcast/build side, one the stream
-        # side), so m's neighbor-min subtree computes twice per round;
-        # a node-sized cache pinned only until this round's checkpoint
-        # is materialized computes it once. A/B'd either way at sf0.1:
-        # bench_runs/r17_ccjump_cachem_ab.json.
-        if cache_jump_input:
-            m = m.cache()
-        # (2) pointer jump: lab(v) <- lab(lab(v)) — node-sized self-join.
-        # try/finally: an exception between cache() and the checkpoint
-        # must not leak m's blocks past this round (ADVICE r17)
-        try:
-            before = persistent_rdd_ids(spark)
-            lab = (
-                m.alias("a")
-                .join(m.alias("b"), F.col("a.lab") == F.col("b.id"))
-                .select(F.col("a.id").alias("id"), F.col("b.lab").alias("lab"))
-                .localCheckpoint(eager=True)
-            )
-        finally:
-            if cache_jump_input:
-                m.unpersist(False)  # checkpoint materialized — no consumer
-        step_ids = persistent_rdd_ids(spark) - before
-        if kept_ids:
-            unpersist_rdd_ids(spark, kept_ids)
-        kept_ids = step_ids
-    if kept_ids:
-        track_rdd_ids(spark, kept_ids)
+        # (2) pointer jump: lab(v) <- lab(lab(v)) — node-sized self-join
+        nxt = checkpoint(
+            m.alias("a")
+            .join(m.alias("b"), F.col("a.lab") == F.col("b.id"))
+            .select(F.col("a.id").alias("id"), F.col("b.lab").alias("lab"))
+        )
+        if i:
+            free(lab)
+        lab = nxt
     return lab

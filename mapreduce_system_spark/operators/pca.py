@@ -20,8 +20,8 @@ Scale shape (the 100 TB audit):
   table is (component, pos, loading), dots are k-row aggregates, norms are
   one-row aggregates — all broadcast back, nothing collects to the driver
   except the dimension d (one scalar, read from one row);
-- per-component state is ``localCheckpoint``ed (d rows) and the previous
-  round's blocks released, so lineage stays O(1) in ``rounds`` exactly as
+- per-round state is checkpointed (d rows) and the previous round's
+  freed, so lineage stays O(1) in ``rounds`` exactly as
   ``operators/graph.py::pagerank`` does for its rank vectors;
 - the exploded (id, pos, val) stream is cached for the fixture regime where
   it fits cluster storage; eviction is safe (Spark recomputes from the
@@ -45,12 +45,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce_system_spark.caches import (
-    persistent_rdd_ids,
-    track_rdd_ids,
-    tracked_cache,
-    unpersist_rdd_ids,
-)
+from mapreduce_system_spark.caches import checkpoint, free, tracked_cache
 
 
 def _project_out(vec: DataFrame, prev: DataFrame | None) -> DataFrame:
@@ -80,7 +75,6 @@ def pca_topk(
     rounds: int = 3,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    checkpoint_w: bool = True,
 ) -> DataFrame:
     """Top-``k`` principal directions of the (uncentered) corpus:
     (component, pos, loading), component 0 = leading. Directions are
@@ -92,20 +86,16 @@ def pca_topk(
     the fixture corpus to 6 decimals, and a production caller loops to
     a Rayleigh tolerance the way ``clustering.kmeans_fit`` does.
 
-    ``checkpoint_w`` (r18, guide §5): materialize the d-row loading
-    iterate ``w`` once per round BEFORE the norm/normalize step. The
-    norm rides ``v`` as a broadcast subtree, so without this the
-    round's checkpoint action computed the corpus-sized s→w aggregate
-    chain once for the norm subtree and once for the main branch (AQE
-    exchange reuse dedups the shuffle-feeding map stages within the
-    action, but the final round's SEPARATE norm checkpoint action
-    re-ran the whole chain — reuse never spans actions). With the
-    d-row ``w`` checkpointed, every reader — norm, normalize, the
-    final-round norm checkpoint — reads d local rows; the corpus cache
-    is touched exactly 2 times per round. Same doubles: checkpointing
-    changes where a value is read from, never its arithmetic
-    (A/B bit-identical: bench_runs/r18_pca_wckpt_ab.json).
-    ``checkpoint_w=False`` keeps the pre-r18 shape for that A/B.
+    The d-row loading iterate ``w`` is checkpointed once per round
+    BEFORE the norm/normalize step. The norm rides ``v`` as a broadcast
+    subtree, so without it the round's checkpoint action computed the
+    corpus-sized s→w aggregate chain once for the norm subtree and once
+    for the main branch, and the final round's SEPARATE norm checkpoint
+    re-ran the whole chain (AQE exchange reuse never spans actions).
+    With ``w`` pinned, every reader reads d local rows and the corpus
+    cache is touched exactly 2 times per round. Same doubles:
+    checkpointing changes where a value is read from, never its
+    arithmetic (A/B 0.91x, bit-identical: bench_runs/r18_pca_wckpt_ab.json).
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -128,10 +118,8 @@ def pca_topk(
         raise ValueError(f"k ({k}) cannot exceed the dimensionality ({d})")
     positions = spark.range(d).select(F.col("id").cast("int").alias("pos"))
     prev: DataFrame | None = None
-    prev_ids: set[int] = set()
-    round_ids: set[int] = set()
-    ref_nrm: DataFrame | None = None  # component 0's final norm (one row)
-    ref_ids: set[int] = set()
+    ref: DataFrame | None = None  # component 0's final norm (one row)
+    v_done: DataFrame | None = None  # the last checkpointed iterate
     for ci in range(k):
         # uniform unit start (the fresh8m convention), deflated up front.
         # math.sqrt, not d**0.5: sqrt is IEEE correctly-rounded in both
@@ -140,9 +128,7 @@ def pca_topk(
         # (the parity class registry.py documents for computed doubles)
         v = positions.select("pos", F.lit(1.0 / math.sqrt(d)).alias("v"))
         v = _project_out(v, prev)
-        nrm = None
-        nrm_ids: set[int] = set()
-        w_ids: set[int] = set()
+        w_done: DataFrame | None = None
         for r in range(rounds):
             s = (
                 comp.join(F.broadcast(v), "pos")
@@ -154,51 +140,42 @@ def pca_topk(
                 .groupBy("pos")
                 .agg(F.sum(F.col("val") * F.col("s")).alias("v"))
             )
-            w = _project_out(w, prev)
-            if checkpoint_w:
-                # materialize the d-row iterate once; the norm subtree and
-                # the normalize branch below both read these blocks instead
-                # of re-running the corpus aggregates (docstring, r18)
-                before_w = persistent_rdd_ids(spark)
-                w = w.localCheckpoint(eager=True)
-                new_w_ids = persistent_rdd_ids(spark) - before_w
-                if w_ids:
-                    unpersist_rdd_ids(spark, w_ids)
-                w_ids = new_w_ids
+            # materialize the d-row iterate once; the norm subtree and
+            # the normalize branch below both read these blocks instead
+            # of re-running the corpus aggregates (docstring)
+            w = checkpoint(_project_out(w, prev))
+            if w_done is not None:
+                free(w_done)
+            w_done = w
             nrm = w.agg(F.sqrt(F.sum(F.col("v") * F.col("v"))).alias("nrm"))
             if r == rounds - 1:
                 # the FINAL norm outlives the round (the exhaustion guard
                 # and the ci=0 reference read it after this round's input
                 # blocks are released) — checkpoint the one row so its
                 # lineage is self-contained
-                before_n = persistent_rdd_ids(spark)
-                nrm = nrm.localCheckpoint(eager=True)
-                nrm_ids = persistent_rdd_ids(spark) - before_n
+                nrm = checkpoint(nrm)
             # nullif: an iterate orthogonal to the residual spectrum
-            # (measure-zero) must go NULL, not abort under ANSI
-            v = w.crossJoin(F.broadcast(nrm)).select(
-                "pos", (F.col("v") / F.nullif(F.col("nrm"), F.lit(0.0))).alias("v")
+            # (measure-zero) must go NULL, not abort under ANSI.
+            # The d-row iterate is checkpointed EVERY round: without this
+            # the per-round join/projection subtrees nest and analysis
+            # cost grows superlinearly in `rounds` (the pagerank
+            # per-iteration discipline)
+            v = checkpoint(
+                w.crossJoin(F.broadcast(nrm)).select(
+                    "pos", (F.col("v") / F.nullif(F.col("nrm"), F.lit(0.0))).alias("v")
+                )
             )
-            # checkpoint the d-row iterate EVERY round: without this the
-            # per-round join/projection subtrees nest and analysis cost
-            # grows superlinearly in `rounds` (the pagerank per-iteration
-            # discipline — block release keeps storage O(1) too)
-            before_r = persistent_rdd_ids(spark)
-            v = v.localCheckpoint(eager=True)
-            new_round_ids = persistent_rdd_ids(spark) - before_r
-            if round_ids:
-                unpersist_rdd_ids(spark, round_ids)
-            round_ids = new_round_ids
-        if w_ids:
-            # the final round's iterate blocks: nrm and v are checkpointed
-            # on their own blocks now, so these are release-now garbage
-            unpersist_rdd_ids(spark, w_ids)
-        if ci == 0:
+            if v_done is not None:
+                free(v_done)
+            v_done = v
+        # the final round's w: nrm and v are checkpointed on their own
+        # blocks now, so it is release-now garbage
+        free(w_done)
+        if ref is None:
             # the guard's reference rides component 0's already-
-            # checkpointed final norm (no second checkpoint); its blocks
-            # are exempt from the per-component release below
-            ref_nrm = nrm.select(F.col("nrm").alias("ref_nrm"))
-            ref_ids = set(nrm_ids)
+            # checkpointed final norm; it is freed only after the last
+            # component
+            ref = nrm
         # SPECTRUM-EXHAUSTION GUARD (r11 embeddings fuzz): when k exceeds
         # the corpus's effective rank, the deflated iterate is zero in
         # exact arithmetic and its computed norm is pure round-off
@@ -213,7 +190,7 @@ def pca_topk(
         # power iteration can resolve anyway.
         new_dir = (
             v.crossJoin(F.broadcast(nrm))
-            .crossJoin(F.broadcast(ref_nrm))
+            .crossJoin(F.broadcast(ref.select(F.col("nrm").alias("ref_nrm"))))
             .select(
                 F.lit(ci).alias("component"),
                 "pos",
@@ -222,26 +199,15 @@ def pca_topk(
                 ).alias("loading"),
             )
         )
-        before = persistent_rdd_ids(spark)
-        prev = (
-            new_dir if prev is None else prev.unionByName(new_dir)
-        ).localCheckpoint(eager=True)
-        step_ids = persistent_rdd_ids(spark) - before
-        if prev_ids:
-            unpersist_rdd_ids(spark, prev_ids)
-        prev_ids = step_ids
-        if nrm_ids:
-            # the final-norm row is baked into prev's blocks now —
-            # release, but never the ci=0 reference the guard still reads
-            unpersist_rdd_ids(spark, nrm_ids - ref_ids)
-    if round_ids:
-        # the last round's iterate blocks — prev is checkpointed on its
-        # own blocks, so these are release-now garbage, not a dependency
-        unpersist_rdd_ids(spark, round_ids)
-    if ref_ids:
-        # the one-row guard reference (component 0's final norm) is baked
-        # into prev's checkpointed blocks — release-now garbage
-        unpersist_rdd_ids(spark, ref_ids)
-    if prev_ids:
-        track_rdd_ids(spark, prev_ids)
+        nxt = checkpoint(new_dir if prev is None else prev.unionByName(new_dir))
+        if prev is not None:
+            free(prev)
+        prev = nxt
+        if nrm is not ref:
+            # the final-norm row is baked into prev's blocks now
+            free(nrm)
+    # the last iterate and the guard reference are baked into prev's
+    # checkpointed blocks — release-now garbage, not a dependency
+    free(v_done)
+    free(ref)
     return prev.orderBy("component", "pos")

@@ -183,11 +183,9 @@ def q_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize before the scratch dir (including the sink) is
         # removed — localCheckpoint pins the result partitions
-        from mapreduce_system_spark.caches import persistent_rdd_ids, track_rdd_ids
+        from mapreduce_system_spark.caches import checkpoint
 
-        before = persistent_rdd_ids(spark)
-        out = out.localCheckpoint(eager=True)
-        track_rdd_ids(spark, persistent_rdd_ids(spark) - before)
+        out = checkpoint(out)
     finally:
         try:
             q.stop()
@@ -373,11 +371,9 @@ def _run_session_stream(
         )
         # materialize before the scratch dir (including the sink) is
         # removed — localCheckpoint pins the result partitions
-        from mapreduce_system_spark.caches import persistent_rdd_ids, track_rdd_ids
+        from mapreduce_system_spark.caches import checkpoint
 
-        before = persistent_rdd_ids(spark)
-        out = out.localCheckpoint(eager=True)
-        track_rdd_ids(spark, persistent_rdd_ids(spark) - before)
+        out = checkpoint(out)
     finally:
         try:
             q.stop()

@@ -41,7 +41,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_system_spark.caches import persistent_rdd_ids, track_rdd_ids
+from mapreduce_system_spark.caches import checkpoint
 from mapreduce_system_spark.registry import register
 from mapreduce_system_spark.sources.tables import load_table
 
@@ -121,9 +121,7 @@ def bloom_pruned_revenue(spark: SparkSession, sf_dir: str, *, require_filter: bo
             opt = out._jdf.queryExecution().optimizedPlan().toString()
             if "bloom_filter_agg" not in opt or "might_contain" not in opt:
                 raise RuntimeError("runtime Bloom filter was not injected into the join plan")
-        before = persistent_rdd_ids(spark)
-        out = out.localCheckpoint(eager=True)
-        track_rdd_ids(spark, persistent_rdd_ids(spark) - before)
+        out = checkpoint(out)
     return out
 
 

@@ -352,11 +352,9 @@ def q_stream_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize before the checkpoint is removed — the audit reads
         # the store's files, which are part of the scratch dir
-        from mapreduce_system_spark.caches import persistent_rdd_ids, track_rdd_ids
+        from mapreduce_system_spark.caches import checkpoint
 
-        before = persistent_rdd_ids(spark)
-        out = out.localCheckpoint(eager=True)
-        track_rdd_ids(spark, persistent_rdd_ids(spark) - before)
+        out = checkpoint(out)
     finally:
         try:
             q.stop()

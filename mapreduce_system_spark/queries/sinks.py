@@ -315,13 +315,11 @@ def q_sink_dpp_join_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     the call — each app run used to leave one behind in /tmp."""
     import shutil
 
-    from mapreduce_system_spark.caches import persistent_rdd_ids, track_rdd_ids
+    from mapreduce_system_spark.caches import checkpoint
 
     out, base = dpp_pruned_totals(spark, sf_dir)
     try:
-        before = persistent_rdd_ids(spark)
-        out = out.localCheckpoint(eager=True)
-        track_rdd_ids(spark, persistent_rdd_ids(spark) - before)
+        out = checkpoint(out)
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return out

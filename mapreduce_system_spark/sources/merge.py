@@ -39,7 +39,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_system_spark.caches import persistent_rdd_ids, unpersist_rdd_ids
+from mapreduce_system_spark.caches import checkpoint, free
 
 _BUCKET = "__bucket"
 
@@ -105,11 +105,9 @@ def merge_upsert(
     # expensive (or nondeterministic) upstream is computed once — a
     # second evaluation would double the batch cost and could even
     # disagree with the collected bucket list
-    before0 = persistent_rdd_ids(spark)
-    b = batch.withColumn(
-        _BUCKET, F.pmod(F.hash(*key_cols), F.lit(n_buckets))
-    ).localCheckpoint(eager=True)
-    batch_ids = persistent_rdd_ids(spark) - before0
+    b = checkpoint(
+        batch.withColumn(_BUCKET, F.pmod(F.hash(*key_cols), F.lit(n_buckets)))
+    )
     # everything after the batch checkpoint runs under this try so the
     # checkpointed batch blocks are released even when _sink_exists, the
     # touched-bucket collect, or the union planning raises — not only on
@@ -140,9 +138,7 @@ def merge_upsert(
         # Sever the plan from the sink before overwriting it (Spark
         # refuses a write whose source plan reads the target path). The
         # checkpointed blocks are released right after the write commits.
-        before = persistent_rdd_ids(spark)
-        merged = merged.localCheckpoint(eager=True)
-        step_ids = persistent_rdd_ids(spark) - before
+        merged = checkpoint(merged)
         prev_mode = spark.conf.get(
             "spark.sql.sources.partitionOverwriteMode"
         )
@@ -157,8 +153,6 @@ def merge_upsert(
             spark.conf.set(
                 "spark.sql.sources.partitionOverwriteMode", prev_mode
             )
-            if step_ids:
-                unpersist_rdd_ids(spark, step_ids)
+            free(merged)
     finally:
-        if batch_ids:
-            unpersist_rdd_ids(spark, batch_ids)
+        free(b)

@@ -26,3 +26,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def persisted_rdd_ids(spark) -> set[int]:
+    """Ids of every RDD persisted in the context, checkpoint blocks
+    included — the JVM's own view, independent of ``caches``' registry."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
+    ids: set[int] = set()
+    while it.hasNext():
+        ids.add(it.next())
+    return ids

@@ -153,25 +153,26 @@ def test_paraphrase_candidates_disjoint_from_text_pairs(spark):
 def test_connected_components_releases_previous_rounds(spark):
     """Each label-propagation round must free the previous round's
     localCheckpoint blocks (DataFrame.unpersist can't reach them, so the
-    operator releases by RDD id); after caches.release() nothing the
-    operator persisted survives."""
+    operator frees them through caches.free); after caches.release()
+    nothing the operator persisted survives."""
     from mapreduce_system_spark import caches
     from mapreduce_system_spark.operators.dedup import connected_components
+    from tests.conftest import persisted_rdd_ids
 
     caches.release()
     # a 31-node path needs several pointer-jump rounds to converge
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(30)], "id_a long, id_b long"
     )
-    before = caches.persistent_rdd_ids(spark)
+    before = persisted_rdd_ids(spark)
     out = connected_components(pairs)
     assert {r.survivor_id for r in out.collect()} == {0}
-    grown = caches.persistent_rdd_ids(spark) - before
+    grown = persisted_rdd_ids(spark) - before
     # bounded: the edge cache + the final round's checkpoint — NOT one
     # materialized labeling per round
     assert len(grown) <= 3, grown
     caches.release()
-    assert not (caches.persistent_rdd_ids(spark) - before)
+    assert not (persisted_rdd_ids(spark) - before)
 
 
 def test_containment_catches_subset_duplicate(spark):

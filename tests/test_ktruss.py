@@ -202,77 +202,3 @@ def test_ktruss_contract_flag_order_insensitive(spark):
         ).collect()
     }
     assert got == _ref_ktruss(_EDGES, 4, 2)
-
-
-def test_ktruss_orientation_reuse_is_bit_identical(spark):
-    """VERDICT r16 #4: compact-forward enumeration only needs SOME total
-    vertex order, so reusing the round-0 (degree, id) order across all
-    support calls must produce the exact same surviving edges and
-    supports as re-deriving the order per round. Dense-ish seeded graph
-    where two peel rounds actually remove edges (both code paths
-    exercised past round 0)."""
-    import random
-
-    rng = random.Random(9100)
-    n = 30
-    edges = [
-        (a, b)
-        for a in range(n)
-        for b in range(a + 1, n)
-        if rng.random() < 0.25
-    ]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    base = {
-        (r.u, r.v): r.support
-        for r in k_truss_edges(
-            df, 4, rounds=2, reuse_orientation=False
-        ).collect()
-    }
-    reused = {
-        (r.u, r.v): r.support
-        for r in k_truss_edges(
-            df, 4, rounds=2, reuse_orientation=True
-        ).collect()
-    }
-    assert base == reused
-    assert base == _ref_ktruss(edges, 4, 2)
-    # peeling genuinely removed edges (the reuse path saw a shrunken set)
-    assert len(base) < len(edges)
-
-
-def test_ktruss_explode_members_is_bit_identical(spark):
-    """r17 optimization: the member-edge census as ONE explode(array(...))
-    pass over the triangle stream must produce the exact same surviving
-    edges and supports as the unionAll of three member projections (the
-    same three structs per triangle, by construction — the explode form
-    merely stops re-planning the wedge self-join + closing-edge probe
-    three times per support call; A/B bench_runs/r17_ktruss_members_ab
-    .json measured 0.38x at the registered constants). Same dense-ish
-    seeded graph as the orientation-reuse pin: two peel rounds actually
-    remove edges, so every support call sees both forms."""
-    import random
-
-    rng = random.Random(9100)
-    n = 30
-    edges = [
-        (a, b)
-        for a in range(n)
-        for b in range(a + 1, n)
-        if rng.random() < 0.25
-    ]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    union_form = {
-        (r.u, r.v): r.support
-        for r in k_truss_edges(
-            df, 4, rounds=2, explode_members=False
-        ).collect()
-    }
-    explode_form = {
-        (r.u, r.v): r.support
-        for r in k_truss_edges(
-            df, 4, rounds=2, explode_members=True
-        ).collect()
-    }
-    assert union_form == explode_form
-    assert explode_form == _ref_ktruss(edges, 4, 2)
-    assert len(explode_form) < len(edges)  # peeling genuinely removed edges

@@ -64,16 +64,6 @@ def test_pca_topk_k1_matches_single_direction_query_convention(spark):
     assert abs(float(np.dot(vs[0], vt[0]))) > 1 - 1e-8
 
 
-def test_pca_topk_checkpoint_w_is_bit_identical(spark):
-    """checkpoint_w=True (r18 default) ≡ =False bit-for-bit: the per-round
-    d-row checkpoint changes where the norm/normalize steps READ the
-    iterate from, never its arithmetic — any divergence means the knob
-    re-ordered a float operation and must fail here, not at the oracle."""
-    a = pca_topk(_corpus(spark), k=2, rounds=3, checkpoint_w=True).collect()
-    b = pca_topk(_corpus(spark), k=2, rounds=3, checkpoint_w=False).collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
 def test_pca_topk_validates_arguments(spark):
     import pytest
 

@@ -546,7 +546,7 @@ def test_join_cardinality_estimate_pushes_sample_filter_to_scan(spark):
 
 def test_label_propagation_argmax_is_aggregate_not_window(spark, monkeypatch):
     """LPA's per-node argmax must stay a map-side-combinable aggregate
-    (max over (count, -label)) — a refactor to row_number-over-window
+    (one deterministic mode() aggregate) — a refactor to row_number-over-window
     would pass every value check while adding a per-node SORT to every
     round at corpus scale. The operator localCheckpoints each round (the
     returned plan is just Scan ExistingRDD), so the guard captures the

@@ -934,14 +934,13 @@ def sim_recall_profile(spark, sf_dir: str, runs: int = 3) -> dict:
     # between scales actually reaps them (localCheckpoint storage is
     # invisible to DataFrame.unpersist — caches.py) — otherwise the 10x
     # signature/code tables would stay persisted under the timed runs.
-    from mapreduce_system_spark.caches import persistent_rdd_ids, track_rdd_ids
+    from mapreduce_system_spark.caches import checkpoint
 
     t0 = time.time()
     csig = SIM.lsh_signatures(emb, 64, n_planes=4, n_tables=2, id_col="vec_id")
     qsig = SIM.lsh_signatures(q, 64, n_planes=4, n_tables=2, id_col="query_id", vec_col="query_vec")
-    before = persistent_rdd_ids(spark)
-    csig = csig.localCheckpoint(eager=True)
-    qsig = qsig.localCheckpoint(eager=True)
+    csig = checkpoint(csig)
+    qsig = checkpoint(qsig)
     build_lsh = round(time.time() - t0, 3)
     got, wall = timed(
         lambda: {
@@ -960,11 +959,13 @@ def sim_recall_profile(spark, sf_dir: str, runs: int = 3) -> dict:
     # so the probe cannot drift from the shipped algorithm
     t0 = time.time()
     books = PQ.pq_fit(emb, m=16, ks=16, max_iter=5)
-    codes = PQ.pq_encode(emb, books).localCheckpoint(eager=True)
-    cb = spark.createDataFrame(
-        [(j, c, books[j][c]) for j in range(16) for c in range(len(books[j]))],
-        "subspace int, code int, centroid array<double>",
-    ).localCheckpoint(eager=True)
+    codes = checkpoint(PQ.pq_encode(emb, books))
+    cb = checkpoint(
+        spark.createDataFrame(
+            [(j, c, books[j][c]) for j in range(16) for c in range(len(books[j]))],
+            "subspace int, code int, centroid array<double>",
+        )
+    )
     build_pq = round(time.time() - t0, 3)
 
     got, wall = timed(
@@ -976,10 +977,6 @@ def sim_recall_profile(spark, sf_dir: str, runs: int = 3) -> dict:
         }
     )
     out["pq_m16_sl50"] = {"wall_s": wall, "build_s": build_pq, "recall": recall(got)}
-    # now that no timed run needs them, hand every checkpoint block this
-    # profile created to the tracker — the caller's caches.release()
-    # between scales reaps them
-    track_rdd_ids(spark, persistent_rdd_ids(spark) - before)
     # duplication profile: how deep do the organic near-clone cliques go
     lab = emb.groupBy("label").count().agg(
         F.max("count").alias("mx"), F.expr("percentile(count, 0.5)").alias("med")
