@@ -38,9 +38,17 @@ from mapreduce_system_spark.sources.tables import load_table
 @contextmanager
 def _pinned_conf(spark: SparkSession, key: str, value: str):
     """Pin one session conf around a stream START and restore it exactly
-    (unset stays unset) — the shared shape behind the shuffle-partition
-    and state-store-provider pins, so the restore semantics cannot
-    drift between copies."""
+    (unset stays unset). A stream's shuffle-partition count and state-store
+    provider bind to its fresh checkpoint at start, so the session value
+    is restored immediately after: it is the STREAM's knob, not the
+    session's.
+
+    Every stream here pins ``spark.sql.shuffle.partitions`` to 8 (one
+    state-store instance per shuffle partition per batch): on 32 cores
+    the constant 8 ran ``stream_stateful_user_totals`` in 3.39 s and
+    ``stream_stateful_sessions`` in 7.26 s (bench_runs/r18a.json) where
+    ``max(8, defaultParallelism)`` took 14.14 s and 14.25 s
+    (BENCH_r18.json)."""
     try:
         old = spark.conf.get(key)
     except Exception:
@@ -54,49 +62,6 @@ def _pinned_conf(spark: SparkSession, key: str, value: str):
         else:
             spark.conf.set(key, old)
 
-
-# r18 A/B flag (tools/ab_stream_shuffle.py patches this to a fixed int;
-# None = the scale-adaptive default below, the measured winner recorded
-# in bench_runs/r18_stream_shuffle_ab.json)
-_STREAM_SHUFFLE_PIN: int | None = None
-
-
-@contextmanager
-def _stream_shuffle(spark: SparkSession, n: int | None = None):
-    """Pin the stream's shuffle-partition count around its START: the
-    state store creates one instance per shuffle partition per batch,
-    and the count binds to the query's fresh checkpoint at start (the
-    session value is restored immediately after — it is the STREAM's
-    knob, not the session's).
-
-    Default (r18): ``max(8, defaultParallelism)`` — scale-adaptive, not
-    a constant. The r12-era constant 8 was sized when per-instance
-    state-store overhead dominated; the r18 profile shows the dominant
-    term is now the per-group Python handler time
-    (``allUpdatesTimeMs`` ~1.4 s/batch across 8 partitions at sf0.1),
-    which the pin was CAPPING at 8 concurrent workers on a 32-core
-    master. Deriving from ``defaultParallelism`` keeps the 8-core
-    driver run at the old shape (8) while wider masters get their
-    cores; at production volume the same rule sizes the store shards to
-    the cluster, with ``$SPARK_GRAFT_STREAM_SHUFFLE`` as the explicit
-    override."""
-    if n is None:
-        n = _STREAM_SHUFFLE_PIN
-    if n is None:
-        import os
-
-        env = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE")
-        n = (
-            int(env)
-            if env
-            else max(8, spark.sparkContext.defaultParallelism)
-        )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 # Same oracle as stream_user_totals_batch (queries/streaming.py): the
 # stream's final state must equal the batch aggregate.
@@ -152,7 +117,7 @@ def q_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    with _stream_shuffle(spark):
+    with _pinned_conf(spark, "spark.sql.shuffle.partitions", "8"):
         q = (
             ST.user_running_totals(stream)
             .writeStream.foreachBatch(persist_updates)
@@ -328,7 +293,7 @@ def _run_session_stream(
         if stats is not None
         else nullcontext()
     )
-    with _stream_shuffle(spark), prog_pin:
+    with _pinned_conf(spark, "spark.sql.shuffle.partitions", "8"), prog_pin:
         q = (
             sessionize(stream)
             .writeStream.foreachBatch(persist_appends)
@@ -405,11 +370,6 @@ def q_stateful_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# r18 A/B flag (tools/ab_tws_changelog.py patches this; default is the
-# measured winner recorded in bench_runs/r18_tws_changelog_ab.json)
-_TWS_CHANGELOG_CKPT = True
-
-
 @register("stream_stateful_sessions_tws", _STATEFUL_SESSIONS_SQL)
 def q_stateful_sessions_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same sessionization on ``transformWithStateInPandas`` — the
@@ -421,7 +381,7 @@ def q_stateful_sessions_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     TWS requires the RocksDB state-store provider; the conf binds to the
     query's fresh checkpoint at start and the session value is restored
-    immediately after (the _stream_shuffle pattern). The protobuf
+    immediately after (``_pinned_conf``). The protobuf
     runtime TWS's state protocol needs is bound for the stream's
     duration by ``pbshim.tws_protobuf_env`` (no-op where a real
     google.protobuf is installed)."""
@@ -436,18 +396,15 @@ def q_stateful_sessions_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     # upload the batch's CHANGELOG instead of snapshotting RocksDB
     # SST files — snapshots move to a background maintenance thread, so
     # the per-micro-batch commit path stops paying the full-store
-    # upload. A/B'd on this query's replay (2-3 micro-batches):
-    # bench_runs/r18_tws_changelog_ab.json; the module flag exists for
-    # that harness.
+    # upload. A/B'd on this query's replay (2-3 micro-batches, 0.979x):
+    # bench_runs/r18_tws_changelog_ab.json.
     changelog = (
         "spark.sql.streaming.stateStore.rocksdb."
         "changelogCheckpointing.enabled"
     )
     with _pinned_conf(
         spark, "spark.sql.streaming.stateStore.providerClass", rocksdb
-    ), _pinned_conf(
-        spark, changelog, "true" if _TWS_CHANGELOG_CKPT else "false"
-    ), tws_protobuf_env(spark):
+    ), _pinned_conf(spark, changelog, "true"), tws_protobuf_env(spark):
         return _run_session_stream(
             spark,
             sf_dir,

@@ -88,9 +88,7 @@ _PROFILE_SQL = (
 
 
 @register("rel_table_profile", _PROFILE_SQL)
-def q_table_profile(
-    spark: SparkSession, sf_dir: str, *, split_string_extrema: bool = True
-) -> DataFrame:
+def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-profile rows for every column of orders — row count, null
     count, exact distinct count, and typed min/max/mean — computed in
     one wide pass plus one slim pass (see below).
@@ -100,7 +98,7 @@ def q_table_profile(
     of k scans — the profiler trade) and all NUMERIC/TIMESTAMP extrema
     into a single one-row aggregation, and unpivots with ``stack``.
     The STRING min/max live in a SEPARATE slim global aggregate that is
-    broadcast-crossJoined back (r17, ``split_string_extrema=True``):
+    broadcast-crossJoined back (r17):
     min/max over a string column has an immutable aggregation buffer,
     which demotes the WHOLE aggregate — including the 7×-Expanded
     distinct rows — from HashAggregate to SortAggregate, paying a sort
@@ -133,12 +131,9 @@ def q_table_profile(
     for c in _TS_COLS:
         aggs.append(F.date_format(F.min(c), "yyyy-MM-dd").alias(f"{c}__mins"))
         aggs.append(F.date_format(F.max(c), "yyyy-MM-dd").alias(f"{c}__maxs"))
-    if split_string_extrema:
-        row = orders.agg(F.count("*").alias("__rows"), *aggs).crossJoin(
-            F.broadcast(orders.select(*_STR_COLS).agg(*str_aggs))
-        )
-    else:
-        row = orders.agg(F.count("*").alias("__rows"), *aggs, *str_aggs)
+    row = orders.agg(F.count("*").alias("__rows"), *aggs).crossJoin(
+        F.broadcast(orders.select(*_STR_COLS).agg(*str_aggs))
+    )
 
     branches = []
     for c in _NUM_COLS:

@@ -304,7 +304,7 @@ def q_stream_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     The NULL bookkeeping rides the state's ``n_vals`` field: a user
     whose every value is NULL totals NULL, not 0.0."""
     from mapreduce_system_spark.streaming import stateful as ST
-    from mapreduce_system_spark.queries.fresh6 import _stream_shuffle
+    from mapreduce_system_spark.queries.fresh6 import _pinned_conf
 
     app = spark.sparkContext.applicationId
     base = Path(
@@ -323,7 +323,7 @@ def q_stream_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    with _stream_shuffle(spark):
+    with _pinned_conf(spark, "spark.sql.shuffle.partitions", "8"):
         q = (
             ST.user_running_totals(stream)
             .writeStream.format("noop")

@@ -91,17 +91,6 @@ def test_table_profile_scan_and_aggregate_shape(spark):
     assert slim_schemas, plan
 
 
-def test_table_profile_split_arms_are_identical(spark):
-    """split_string_extrema=True (default) and =False must return the
-    same rows — the fallback arm exists for the A/B harness, and an
-    untested arm would be free to drift (ADVICE r17)."""
-    from mapreduce_system_spark.queries.fresh8g import q_table_profile
-
-    split = q_table_profile(spark, SF_DIR, split_string_extrema=True).collect()
-    folded = q_table_profile(spark, SF_DIR, split_string_extrema=False).collect()
-    assert split == folded
-
-
 # ---------------------------------------------------------------------------
 # rel_not_exists_subquery
 # ---------------------------------------------------------------------------

@@ -179,22 +179,3 @@ def test_matryoshka_raises_on_prefix_beyond_dimension(spark):
     with pytest.raises((SparkRuntimeException, Py4JJavaError)) as ei:
         matryoshka_norm_profile(_vecs(spark), [2, 8]).collect()
     assert "exceeds a vector's dimension" in str(ei.value)
-
-
-def test_rrf_fusion_shared_tf_matches_two_pass(spark):
-    """txt_rrf_fusion's shared-tf coverage (r18 default: counts rows of
-    BM25's tf postings table) ≡ the pre-r18 explode+distinct coverage —
-    the fused ranking must be bit-identical, or the tf reuse changed
-    what coverage counts."""
-    from mapreduce_system_spark.queries import fresh11
-    from tests.conftest import SF_DIR
-
-    orig = fresh11._RRF_SHARED_TF
-    try:
-        fresh11._RRF_SHARED_TF = True
-        shared = [tuple(r) for r in fresh11.q_rrf_fusion(spark, SF_DIR).collect()]
-        fresh11._RRF_SHARED_TF = False
-        two_pass = [tuple(r) for r in fresh11.q_rrf_fusion(spark, SF_DIR).collect()]
-    finally:
-        fresh11._RRF_SHARED_TF = orig
-    assert shared == two_pass
