@@ -17,6 +17,10 @@ are released by ``release()``. Each handle names exactly one RDD, so
 operators checkpointing concurrently on one session release only their own
 blocks.
 
+A loop that needs a driver scalar from each round (a convergence delta, a
+row count) takes it from ``checkpoint_with``: the aggregates are observed
+on the checkpoint's own eager job, so the scalar costs no job of its own.
+
 Unreleased entries are bounded by the corpus the operator cached (a few
 MB at fixture scale) and are dropped with the session; ``release()`` makes
 the bound zero for harnesses that care.
@@ -24,7 +28,7 @@ the bound zero for harnesses that care.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 _TRACKED: list[DataFrame] = []
 _CHECKPOINTS: dict[int, object] = {}  # RDD id -> JVM RDD holding the blocks
@@ -45,6 +49,17 @@ def checkpoint(df: DataFrame) -> DataFrame:
     rdd = out._jdf.queryExecution().analyzed().rdd()
     _CHECKPOINTS[rdd.id()] = rdd
     return out
+
+
+def checkpoint_with(df: DataFrame, **aggs: Column) -> tuple[DataFrame, dict]:
+    """``checkpoint(df)`` that also returns the named aggregates over its
+    rows, e.g. ``checkpoint_with(df, n=F.count(F.lit(1)))``. They are
+    computed by the checkpoint's own job (``DataFrame.observe``), not by a
+    second pass over the blocks. An empty frame gives ``count`` 0 and
+    ``sum``/``min``/``max`` None."""
+    obs = Observation()
+    out = checkpoint(df.observe(obs, *(c.alias(k) for k, c in aggs.items())))
+    return out, obs.get
 
 
 def free(df: DataFrame) -> None:

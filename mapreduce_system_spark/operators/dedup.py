@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce_system_spark.caches import checkpoint, free, tracked_cache
+from mapreduce_system_spark.caches import checkpoint_with, free, tracked_cache
 from mapreduce_system_spark.functions.text import (
     fingerprint,
     normalized_text,
@@ -546,7 +546,7 @@ def connected_components(
     suffices at any corpus size; each round is one equi-join + one
     aggregation, the same shuffle shape as everything else here. The
     loop stops early on a converged round (one driver-side count per
-    round — the iterative-algorithm pattern, like k-means). Raises if
+    round, observed by the round's checkpoint job). Raises if
     max_iter rounds don't converge rather than returning a wrong
     labeling.
     """
@@ -588,10 +588,10 @@ def connected_components(
         # materialized partitions — per-round plan size is now constant.
         # (Local checkpoint, not reliable checkpoint: labels are cheap to
         # recompute from scratch if an executor dies mid-algorithm.)
-        # The old label rides along as a flag column so convergence is a
-        # filter-count over the materialized partitions — the separate
-        # old-vs-new join (one extra shuffle per round) is gone.
-        stepped = checkpoint(
+        # The old label rides along as a column so the number of changed
+        # labels is counted by the checkpoint job itself — no old-vs-new
+        # join and no separate count job per round.
+        stepped, info = checkpoint_with(
             comp.select("id", F.col("comp").alias("old"))
             .join(neighbor_min, "id", "left")
             .select(
@@ -600,7 +600,8 @@ def connected_components(
                     "comp"
                 ),
                 "old",
-            )
+            ),
+            changed=F.count_if(F.col("comp") != F.col("old")),
         )
         # The eager checkpoint above just materialized this round from the
         # previous one — the previous round's blocks are now dead weight;
@@ -610,8 +611,7 @@ def connected_components(
         if prev is not None:
             free(prev)
         prev = stepped
-        changed = stepped.where(F.col("comp") != F.col("old")).count()
-        if changed == 0:
+        if info["changed"] == 0:
             # Neighbor-min stability is the fixpoint (for every edge
             # L(src) <= L(dst) and vice versa ⇒ labels constant per
             # component ⇒ each equals its component min), so checking

@@ -13,8 +13,11 @@ scale discipline as ``operators/dedup.py::connected_components``:
 - each round checkpoints its rank vector and frees the previous
   round's (``caches.checkpoint``/``caches.free``), so lineage and
   storage stay O(1) in the iteration count;
-- the only driver-side values are the node count N (one scalar) and
-  the loop bound — rank vectors never leave the cluster.
+- the driver sees scalars only — the node count N and, with ``tol``,
+  each round's L1 rank change — and both are aggregates observed by a
+  checkpoint job that runs anyway (``caches.checkpoint_with``), so no
+  round launches a job just to read them. Rank vectors never leave the
+  cluster.
 
 Float discipline for oracle parity: contributions are
 ``rank * (1.0 / outdeg)`` (multiply by reciprocal, NOT a division per
@@ -28,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mapreduce_system_spark.caches import checkpoint, free, tracked_cache
+from mapreduce_system_spark.caches import checkpoint, checkpoint_with, free, tracked_cache
 
 
 def pagerank(
@@ -68,8 +71,9 @@ def pagerank(
       value), so total rank stays 1 at any graph size.
 
     ``tol`` (optional) stops early once the L1 rank change of a round
-    drops below it (same driver-scalar-per-round posture as
-    ``clustering.kmeans_fit``); ``iterations`` is then the cap. With
+    drops below it; ``iterations`` is then the cap. The rank state
+    carries the previous rank as ``prev``, so the change is summed by
+    the round's own checkpoint job. With
     ``tol=None`` the loop runs exactly ``iterations`` rounds so the
     unrolled oracles stay exact. Returns (node, rank).
 
@@ -82,9 +86,9 @@ def pagerank(
     to the SEEDS, the standard restart semantics. Iteration starts at
     the teleport vector. Seeds outside the node set are ignored (inner
     semi-join); an empty effective seed set raises. The teleport column
-    rides the same per-round join the uniform path already pays for the
-    node list, so the iteration cost is unchanged — and ``seeds``
-    composes freely with ``weight``.
+    rides in the rank state, which the update already joins, so the
+    iteration cost is unchanged — and ``seeds`` composes freely with
+    ``weight``.
 
     Rejected levers (do not retry without new evidence): per-round
     repartition+SHJ on the iteration join (r9 A/B: adverse — AQE already
@@ -142,10 +146,11 @@ def pagerank(
         ce = tracked_cache(
             e.join(deg, "u").select("u", "v", (F.col("wt") / F.col("outw")).alias("w"))
         )
-    nodes = tracked_cache(
-        e.select(F.col("u").alias("node")).union(e.select(F.col("v").alias("node"))).distinct()
+    nodes, info = checkpoint_with(
+        e.select(F.col("u").alias("node")).union(e.select(F.col("v").alias("node"))).distinct(),
+        n=F.count(F.lit(1)),
     )
-    n = nodes.count()  # bounded driver scalar (node count)
+    n = info["n"]  # bounded driver scalar (node count)
     if n == 0:
         return nodes.withColumn("rank", F.lit(0.0))
     dang = None
@@ -156,8 +161,8 @@ def pagerank(
     elif dangling != "none":
         raise ValueError(f"dangling must be 'none' or 'redistribute', got {dangling!r}")
     teleport = 0.15 if damping == 0.85 else 1.0 - damping
-    tpn = None
-    if seeds is not None:
+    seeded = seeds is not None
+    if seeded:
         # effective seeds = seeds ∩ nodes (ids outside the graph carry no
         # walk to restart); |S| is a bounded driver scalar like n
         sd = (
@@ -169,17 +174,16 @@ def pagerank(
         if ns == 0:
             raise ValueError("seeds: no seed id matches a graph node")
         # per-node teleport column: 1/|S| on seeds, 0.0 elsewhere — rides
-        # the node list the update join already touches, so the loop pays
-        # no extra join for personalization
-        tpn = tracked_cache(
+        # in the rank state, so the loop pays no extra join for
+        # personalization
+        ranks = tracked_cache(
             nodes.join(sd.withColumn("__s", F.lit(1)), "node", "left").select(
                 "node",
                 F.when(F.col("__s").isNotNull(), F.lit(1.0 / ns))
                 .otherwise(F.lit(0.0))
                 .alias("tp"),
             )
-        )
-        ranks = tpn.select("node", F.col("tp").alias("rank"))
+        ).withColumn("rank", F.col("tp"))
     else:
         ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     base = teleport / n  # uniform-teleport scalar (unused on the seeds path)
@@ -191,7 +195,8 @@ def pagerank(
             .agg(F.sum("c").alias("contrib"))
         )
         gain = F.coalesce("contrib", F.lit(0.0))
-        updated = (nodes if tpn is None else tpn).join(contribs, "node", "left")
+        # the state holds every node, so it is the update's left side
+        updated = ranks.join(contribs, "node", "left")
         if dang is not None:
             # one-row dangling-mass aggregate, broadcast into the update —
             # the division by N (uniform) / multiplication by tp (seeds)
@@ -201,31 +206,30 @@ def pagerank(
             )
             updated = updated.crossJoin(F.broadcast(mdf))
             gain = gain + (
-                F.col("m") / F.lit(float(n))
-                if tpn is None
-                else F.col("m") * F.col("tp")
+                F.col("m") * F.col("tp") if seeded else F.col("m") / F.lit(float(n))
             )
         new_rank_expr = (
-            F.lit(base) + F.lit(damping) * gain
-            if tpn is None
-            else F.lit(teleport) * F.col("tp") + F.lit(damping) * gain
+            F.lit(teleport) * F.col("tp") + F.lit(damping) * gain
+            if seeded
+            else F.lit(base) + F.lit(damping) * gain
         )
-        new_ranks = checkpoint(updated.select("node", new_rank_expr.alias("rank")))
-        done = False
-        if tol is not None:
-            delta = (
-                new_ranks.alias("a")
-                .join(ranks.alias("b"), "node")
-                .agg(F.sum(F.abs(F.col("a.rank") - F.col("b.rank"))).alias("d"))
-                .collect()[0]["d"]
-            )
-            done = delta is not None and delta < tol
+        # the previous rank rides along as ``prev``, so the round's L1
+        # change is observed by the checkpoint job itself
+        new_ranks, info = checkpoint_with(
+            updated.select(
+                "node",
+                new_rank_expr.alias("rank"),
+                F.col("rank").alias("prev"),
+                *(["tp"] if seeded else []),
+            ),
+            d=F.sum(F.abs(F.col("rank") - F.col("prev"))),
+        )
         if i:
             free(ranks)
         ranks = new_ranks
-        if done:
+        if tol is not None and info["d"] < tol:
             break
-    return ranks
+    return ranks.select("node", "rank")
 
 
 def label_propagation(
@@ -349,8 +353,9 @@ def k_core_peel(
     aggregate re-filters the ONE cached symmetrized edge list through r
     semi-joins against eagerly-checkpointed keep sets. The broadcast
     hint is GATED on the keep set's measured row count (ADVICE r14 #1):
-    the eager checkpoint makes ``keep.count()`` a cheap node-sized job,
-    so each round hints ``F.broadcast`` only when the keep set is under
+    the count is observed by the keep set's own checkpoint job
+    (``caches.checkpoint_with``), so it costs no job, and each round
+    hints ``F.broadcast`` only when the keep set is under
     ``broadcast_max_nodes`` and falls back to a plain semi-join above
     it — a billion-node keep set degrades to a shuffle join instead of
     OOMing the driver. Measured both ways before the ``graph_k_core``
@@ -390,25 +395,17 @@ def k_core_peel(
         # node-sized checkpoint (the pagerank rank-vector discipline);
         # each kept set stays pinned until release() because EVERY later
         # round's lazy re-filter, and the returned plan, reads it
-        keep = checkpoint(deg.where(F.col("d") >= k).select("u"))
+        keep, info = checkpoint_with(
+            deg.where(F.col("d") >= k).select("u"), n=F.count(F.lit(1))
+        )
         # gate the broadcast hint on the MEASURED keep size (ADVICE r14
-        # #1): the count is a cheap job over the just-checkpointed
-        # node-sized blocks; under the cap the hint buys the 10x probe
-        # wall x2.5 vs x3.89 hint-free (AQE cannot convert these joins —
-        # no shuffle stage on the checkpointed side to re-measure),
-        # above it a plain semi-join degrades gracefully instead of
-        # OOMing the driver on a billion-node keep set.
-        # SCOPE WARNING (VERDICT r15 #8) — this per-round driver action
-        # is only valid because BOTH conditions hold: (1) the loop is
-        # LOW-round-count (rounds <= ~3 registered; the count's fixed
-        # job-submission floor would become LPA's per-round action cost
-        # in a 20-round recurrence), and (2) the counted relation is the
-        # just-checkpointed NODE-sized state (already materialized — the
-        # count scans local blocks, it does not recompute the plan). Do
-        # NOT copy this gate into a high-round-count loop or onto an
-        # unmaterialized relation; prefer AQE or a fixed structural
-        # bound there.
-        keep_n = keep.count()
+        # #1): the count comes with the checkpoint job, no job of its
+        # own; under the cap the hint buys the 10x probe wall x2.5 vs
+        # x3.89 hint-free (AQE cannot convert these joins — no shuffle
+        # stage on the checkpointed side to re-measure), above it a
+        # plain semi-join degrades gracefully instead of OOMing the
+        # driver on a billion-node keep set.
+        keep_n = info["n"]
         k1, k2 = keep, keep.select(F.col("u").alias("v"))
         if keep_n <= broadcast_max_nodes:
             k1, k2 = F.broadcast(k1), F.broadcast(k2)
@@ -549,7 +546,8 @@ def bfs_hops(
     union references them) until the harness-level ``release()``,
     total storage O(V). The only
     driver-side value is the per-round frontier count that detects
-    exhaustion — never a node list. On a 1000-executor cluster the
+    exhaustion — never a node list — and the frontier's checkpoint job
+    computes it (``caches.checkpoint_with``). On a 1000-executor cluster the
     frontier join co-partitions with the edge list's hash
     distribution; ``max_hops`` bounds the round count the way the
     small-world diameter bounds real graphs.
@@ -572,15 +570,15 @@ def bfs_hops(
     )
     frontier = dist
     for h in range(1, max_hops + 1):
-        nxt = checkpoint(
+        nxt, info = checkpoint_with(
             frontier.join(e, frontier["node"] == e["u"])
             .select(F.col("v").alias("node"))
             .distinct()
             .join(dist, "node", "left_anti")
-            .withColumn("hop", F.lit(h))
+            .withColumn("hop", F.lit(h)),
+            n=F.count(F.lit(1)),
         )
-        n_new = nxt.count()  # bounded driver scalar: frontier size
-        if n_new == 0:
+        if info["n"] == 0:  # bounded driver scalar: frontier size
             break
         dist = dist.union(nxt)
         frontier = nxt
@@ -790,12 +788,13 @@ def connected_components_jump(
     assert the fixed point the way tests/test_fresh15_queries.py does.
 
     Scale shape: per round ONE edge-keyed equi-join + ONE node-keyed
-    min aggregate (partial+final combinable) + ONE node-sized self-join
-    + ONE node-sized eager checkpoint (previous round's blocks released
-    — lineage and storage stay O(1) in rounds, the pagerank
-    discipline). NO per-round driver actions (contrast k_core_peel's
-    measured-count gate, which is valid only for low-round-count loops
-    — see the SCOPE WARNING there); broadcast decisions stay AQE's.
+    min aggregate (partial+final combinable) + ONE node-sized self-join,
+    and TWO node-sized eager checkpoints: the neighbor-min labels, which
+    both sides of the self-join read (lazy, the plan would evaluate the
+    neighbor-min subtree once per side), and the jumped labels. Each is
+    freed once its successor is materialized, so lineage and storage
+    stay O(1) in rounds, the pagerank discipline. NO driver scalars at
+    all; broadcast decisions stay AQE's.
 
     Input normalization is the family's: value-ordered distinct pairs,
     self-loops and NULL endpoints dropped, then symmetrized through one
@@ -853,19 +852,23 @@ def connected_components_jump(
             .groupBy("src")
             .agg(F.min("nlab").alias("nmin"))
         )
-        m = lab.join(nmin, F.col("id") == F.col("src"), "left").select(
-            "id",
-            F.least(
-                F.col("lab"), F.coalesce(F.col("nmin"), F.col("lab"))
-            ).alias("lab"),
+        # checkpointed: both sides of the jump's self-join read m, and a
+        # lazy m would evaluate the neighbor-min subtree once per side
+        m = checkpoint(
+            lab.join(nmin, F.col("id") == F.col("src"), "left").select(
+                "id",
+                F.least(
+                    F.col("lab"), F.coalesce(F.col("nmin"), F.col("lab"))
+                ).alias("lab"),
+            )
         )
+        if i:
+            free(lab)
         # (2) pointer jump: lab(v) <- lab(lab(v)) — node-sized self-join
-        nxt = checkpoint(
+        lab = checkpoint(
             m.alias("a")
             .join(m.alias("b"), F.col("a.lab") == F.col("b.id"))
             .select(F.col("a.id").alias("id"), F.col("b.lab").alias("lab"))
         )
-        if i:
-            free(lab)
-        lab = nxt
+        free(m)
     return lab

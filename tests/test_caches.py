@@ -8,8 +8,10 @@ import threading
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from mapreduce_system_spark import caches
-from mapreduce_system_spark.operators.graph import label_propagation
+from mapreduce_system_spark.operators.graph import label_propagation, pagerank
 from tests.conftest import REPO, persisted_rdd_ids
 
 
@@ -45,10 +47,41 @@ def test_free_rejects_frames_checkpoint_did_not_return(spark):
     assert caches.release() == 0
 
 
+def test_checkpoint_with_matches_a_separate_aggregate(spark):
+    caches.release()
+    df = spark.range(100).selectExpr("id", "id % 7 AS k")
+    aggs = dict(
+        n=F.count(F.lit(1)), s=F.sum("id"), hi=F.max("k"), odd=F.count_if(F.col("id") % 2 == 1)
+    )
+    out, got = caches.checkpoint_with(df, **aggs)
+    want = df.agg(*(c.alias(k) for k, c in aggs.items())).collect()[0].asDict()
+    assert got == want
+    assert out.count() == 100
+    caches.free(out)
+    assert caches.release() == 0
+
+
+def test_checkpoint_with_on_a_frame_folded_to_empty(spark):
+    """where(lit(False)) is folded to an empty relation by the optimizer;
+    the observation must still be reported, not waited on forever."""
+    import time
+
+    caches.release()
+    t0 = time.monotonic()
+    out, got = caches.checkpoint_with(
+        spark.range(10).where(F.lit(False)), n=F.count(F.lit(1)), s=F.sum("id")
+    )
+    assert got == {"n": 0, "s": None}
+    assert time.monotonic() - t0 < 60
+    assert out.count() == 0
+    caches.free(out)
+    assert caches.release() == 0
+
+
 def test_label_propagation_from_two_threads_matches_serial(spark):
     """Two operators checkpointing and freeing round by round on one
-    session at once: neither may free the other's label vectors."""
-    caches.release()
+    session at once: neither may free the other's state, and each reads
+    its own per-round observations (pagerank's tol stop)."""
     rng = random.Random(31)
     frames = [
         spark.createDataFrame(
@@ -57,26 +90,31 @@ def test_label_propagation_from_two_threads_matches_serial(spark):
         )
         for _ in range(2)
     ]
+    for op in (
+        lambda df: label_propagation(df, iterations=4),
+        lambda df: pagerank(df, iterations=20, tol=1e-3),
+    ):
+        caches.release()
 
-    def run(df):
-        return sorted(tuple(r) for r in label_propagation(df, iterations=4).collect())
+        def run(df, op=op):
+            return sorted(tuple(r) for r in op(df).collect())
 
-    serial = [run(df) for df in frames]
-    caches.release()
-    got: dict[int, object] = {}
+        serial = [run(df) for df in frames]
+        caches.release()
+        got: dict[int, object] = {}
 
-    def worker(i):
-        try:
-            got[i] = run(frames[i])
-        except Exception as e:  # noqa: BLE001 - reported by the assert below
-            got[i] = e
+        def worker(i, run=run):
+            try:
+                got[i] = run(frames[i])
+            except Exception as e:  # noqa: BLE001 - reported by the assert below
+                got[i] = e
 
-    threads = [threading.Thread(target=worker, args=(i,)) for i in range(2)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert [got[0], got[1]] == serial
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert [got[0], got[1]] == serial
     caches.release()
 
 

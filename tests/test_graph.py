@@ -117,6 +117,73 @@ def test_pagerank_tol_converges_to_fixed_point(spark):
     assert abs(got["b"] - rb) < 1e-10
 
 
+def _tol_case(spark):
+    """(edges frame, tol, R) on a seeded random digraph: R is the first
+    round whose L1 rank change, computed in pure Python, drops below
+    tol; tol sits midway (geometrically) between rounds R-1 and R."""
+    import random
+    from collections import Counter
+
+    rng = random.Random(7)
+    edges = sorted({(rng.randrange(60), rng.randrange(60)) for _ in range(240)})
+    nodes = {x for e in edges for x in e}
+    outdeg = Counter(u for u, _ in edges)
+    n = len(nodes)
+    ranks = {x: 1.0 / n for x in nodes}
+    deltas = []
+    for _ in range(8):
+        contrib = dict.fromkeys(nodes, 0.0)
+        for u, v in edges:
+            contrib[v] += ranks[u] * (1.0 / outdeg[u])
+        new = {x: 0.15 / n + 0.85 * contrib[x] for x in nodes}
+        deltas.append(sum(abs(new[x] - ranks[x]) for x in nodes))
+        ranks = new
+    r = 5
+    assert deltas[r - 2] > deltas[r - 1] * 1.5, deltas  # a clear gap to sit in
+    tol = (deltas[r - 2] * deltas[r - 1]) ** 0.5
+    return spark.createDataFrame(edges, "src long, dst long"), tol, r
+
+
+def test_pagerank_tol_stops_at_the_first_round_below_tol(spark):
+    """pagerank(tol=t) returns pagerank(iterations=R), where R is the
+    first round whose L1 change is below t. Equal up to summation-order
+    ulps: one round early or late would move the ranks by about t."""
+    from mapreduce_system_spark import caches
+    from mapreduce_system_spark.operators.graph import pagerank
+
+    e, tol, r = _tol_case(spark)
+    got = sorted(tuple(x) for x in pagerank(e, iterations=20, tol=tol).collect())
+    want = sorted(tuple(x) for x in pagerank(e, iterations=r).collect())
+    assert [x for x, _ in got] == [x for x, _ in want]
+    assert max(abs(a[1] - b[1]) for a, b in zip(got, want)) < 1e-12
+    caches.release()
+
+
+def test_pagerank_tol_launches_no_more_jobs_than_fixed_rounds(spark):
+    """The tol stop reads each round's L1 change from that round's
+    checkpoint job: stopping after R rounds costs no job beyond
+    running exactly R rounds."""
+    from mapreduce_system_spark import caches
+    from mapreduce_system_spark.operators.graph import pagerank
+
+    e, tol, r = _tol_case(spark)
+    sc = spark.sparkContext
+
+    def jobs(group, run):
+        caches.release()  # a cached edge list from the other run is no shortcut
+        sc.setJobGroup(group, group)
+        try:
+            run().collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    fixed = jobs("pagerank_fixed_rounds", lambda: pagerank(e, iterations=r))
+    tolled = jobs("pagerank_tol", lambda: pagerank(e, iterations=20, tol=tol))
+    caches.release()
+    assert tolled <= fixed, (tolled, fixed)
+
+
 def test_pagerank_rejects_unknown_dangling_mode(spark):
     import pytest
 
