@@ -5,11 +5,11 @@ shuffle → sort → group-by-key → reduce`` over string KV pairs
 (``worker.go:92-171``), with word count as the worked flagship example
 (README.MD:25-53) and the OSDI'04 paper's workloads (grep, sort, inverted
 index, access counts) as the canonical applications. Each function here is
-the Spark-first formulation of one of those workloads; ``map_reduce`` keeps
-the reference's raw ``(mapf, reducef)`` programming contract for users who
-want to bring arbitrary Python functions, and ``map_reduce_scalable`` is its
-Arrow-batched twin: the JVM groups and sorts each key's values, and Python
-calls ``reducef`` in a loop over each Arrow batch of whole groups.
+the Spark-first formulation of one of those workloads. ``map_reduce_scalable``
+keeps the reference's raw ``(mapf, reducef)`` programming contract for users
+who want to bring arbitrary Python functions: the JVM groups and sorts each
+key's values, and Python calls ``reducef`` in a loop over each Arrow batch of
+whole groups. ``map_reduce`` adds the reference's ``n_reduce`` output layout.
 
 Scale notes per operator are inline. The common theme: Catalyst inserts
 partial (map-side) aggregation automatically — the combiner the reference
@@ -139,45 +139,20 @@ def map_reduce(
     key_col: str = "file",
     value_col: str = "content",
 ) -> DataFrame:
-    """Generic MapReduce with the reference's exact user contract.
+    """Generic MapReduce with the reference's exact user contract and
+    output layout.
 
     ``mapf(key, value) -> [(k, v), ...]`` and ``reducef(key, sorted_values)
     -> str`` mirror ``worker.go:51`` / ``README.MD:82`` (there injected via
-    Go plugin; here plain Python callables). Implementation is the
-    reference pipeline on Spark primitives:
-
-      flatMap(mapf)                      ≡ doMapTask        worker.go:92-120
-      repartition(n_reduce, key)         ≡ ihash%nReduce    worker.go:105-110
-      groupBy + sorted collect_list      ≡ sort+group       worker.go:153-164
-      reducef UDF                        ≡ reduce call      worker.go:165
-
-    Arbitrary Python ``mapf``/``reducef`` is the one place the RDD layer is
-    justified (per-record imperative user code); everything engine-side
-    stays in the DataFrame API. Results are (key, value) strings like
-    ``mr-out-*`` files (``worker.go:167``).
+    Go plugin; here plain Python callables). Execution is
+    ``map_reduce_scalable``; its (key, value) rows are then laid out like
+    the reference's ``mr-out-*`` files (``worker.go:167``): ``n_reduce``
+    partitions by key hash (ihash % nReduce, ``worker.go:105-110``), each
+    sorted by key (``worker.go:153``). ``spark`` is unused; it stays for
+    callers of the original signature.
     """
-    ensure_package_on_executors(spark)
-    # same parallelism guard as the scalable twin and every other
-    # mapper-heavy operator: a single-split input (one fixture file)
-    # would otherwise run every Python mapf call on ONE core — and this
-    # RDD path exists precisely for heavy per-record user code
-    src = ensure_parallelism(df.select(key_col, value_col))
-    pair_rdd = src.rdd.flatMap(lambda row: mapf(row[0], row[1]))
-    # The reference's KeyValue fields are non-nullable Go strings
-    # (worker.go:26-29): a mapf emitting None has left the contract. Drop
-    # such pairs identically in BOTH engines, so reducef only ever sees
-    # str keys and values (array_sort would otherwise hand it nulls last).
-    pairs = spark.createDataFrame(pair_rdd, "key string, value string").where(
-        F.col("key").isNotNull() & F.col("value").isNotNull()
-    )
-    reduce_udf = F.udf(lambda k, vs: reducef(k, list(vs)), "string")
     return (
-        pairs.groupBy("key")
-        .agg(F.array_sort(F.collect_list("value")).alias("values"))
-        .select("key", reduce_udf(F.col("key"), F.col("values")).alias("value"))
-        # nReduce controls *output* partitioning (one file per reduce
-        # partition, worker.go:167); applying it before groupBy would be a
-        # wasted extra shuffle (groupBy re-shuffles to shuffle.partitions).
+        map_reduce_scalable(df, mapf, reducef, key_col, value_col)
         .repartition(n_reduce, "key")
         .sortWithinPartitions("key")
     )
@@ -190,13 +165,13 @@ def map_reduce_scalable(
     key_col: str = "file",
     value_col: str = "content",
 ) -> DataFrame:
-    """The scalable twin of ``map_reduce``: same (mapf, reducef) user
+    """The engine behind ``map_reduce``: the (mapf, reducef) user
     contract (worker.go:51, README.MD:82), Arrow-batched execution.
 
     - map phase: ``mapInPandas`` — columnar batches in/out, no pickled
-      rows (vs the RDD flatMap in ``map_reduce``);
-    - group phase: the JVM groups and sorts, exactly as ``map_reduce``
-      does (``array_sort(collect_list(value))`` per key, worker.go:153-164);
+      rows;
+    - group phase: the JVM groups and sorts
+      (``array_sort(collect_list(value))`` per key, worker.go:153-164);
       ``collect_list``'s partial aggregation combines lists before the
       shuffle. UTF-8 byte order is code-point order, so each list is in
       Python ``sorted()`` order;
@@ -208,9 +183,9 @@ def map_reduce_scalable(
 
     Memory shape: one reduce batch holds up to
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` groups' full value
-    lists. That is the whole-group contract ``map_reduce`` has, and the
-    reference has too (worker.go:142-153); for unbounded 100 TB groups
-    use algebraic DataFrame aggregates instead.
+    lists. That is the whole-group contract the reference has too
+    (worker.go:142-153); for unbounded 100 TB groups use algebraic
+    DataFrame aggregates instead.
     """
 
     ensure_package_on_executors(df.sparkSession)
@@ -237,7 +212,9 @@ def map_reduce_scalable(
     pairs = df.select(key_col, value_col).mapInPandas(
         map_batches, "key string, value string"
     ).where(F.col("key").isNotNull() & F.col("value").isNotNull())
-    # null-pair filter: same non-null contract as map_reduce (see there)
+    # The reference's KeyValue fields are non-nullable Go strings
+    # (worker.go:26-29): a mapf emitting None has left the contract, and
+    # such pairs are dropped so reducef only ever sees str keys and values.
     return (
         pairs.groupBy("key")
         .agg(F.array_sort(F.collect_list("value")).alias("values"))

@@ -47,17 +47,6 @@ textstats2 2 + fresh7b 3 (through slot 49) + fresh8b's first query
 open r20, followed by the r16-row modules, then the r17/r18-window
 modules with the freshest rows close the rotation. Keep the
 arithmetic ledgered here when the r19 rotation lands.
-
-Debut candidates, STAGED r17 with tests + drafted oracles + probe
-modes, still UNREGISTERED (r18 is an optimization round — no feature
-additions): the densest-subgraph greedy peel (operators/densest.py —
-Bahmani et al.'s synchronous 2(1+eps)-approx; tests/test_densest.py;
-probe --densest; registration note: at eps=0.5 the RAW co-purchase
-graph peels to empty by round 3 — pick the support-thresholded graph
-or a smaller eps with data, the k-truss lesson) and the
-SESSION-WINDOW stream-stream join (streaming/windows.py::session_join;
-tests/test_sessionjoin.py; probe --sessjoin). Both follow the
-wire-in-N+1 precedent when a build round next registers queries.
 """
 
 from __future__ import annotations

@@ -66,7 +66,7 @@ ORDER BY id_a, id_b
 # rows to the share-join, so one boilerplate shingle is the job-killing skew
 # key at corpus scale. 100 ≈ 20% of the sf0.01 corpus — well above any real
 # near-dup cluster, low enough to kill template text.
-_MAX_SHINGLE_DF = 100
+MAX_SHINGLE_DF = 100
 
 # Same pair algebra with the stop-shingle cap mirrored: hot shingles
 # (df > cap) are removed from the *intersection*, while set sizes stay the
@@ -86,7 +86,7 @@ _JACCARD_CAPPED_CTES = rf"""toks AS (
   SELECT COALESCE(list(shingle), []) AS hots
   FROM (
     SELECT shingle FROM (SELECT doc_id, unnest(sg) AS shingle FROM sh)
-    GROUP BY shingle HAVING count(*) > {_MAX_SHINGLE_DF}
+    GROUP BY shingle HAVING count(*) > {MAX_SHINGLE_DF}
   )
 ), shf AS (
   SELECT doc_id, len(sg) AS sz,
@@ -122,7 +122,7 @@ def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     a pair disappears entirely only when every shared shingle is a
     stop-shingle. The oracle mirrors the identical algebra."""
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    out = DD.jaccard_pairs(docs, n=3, threshold=0.5, max_shingle_df=_MAX_SHINGLE_DF)
+    out = DD.jaccard_pairs(docs, n=3, threshold=0.5, max_shingle_df=MAX_SHINGLE_DF)
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard")).orderBy(
         "id_a", "id_b"
     )
@@ -226,7 +226,7 @@ def q_cluster_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the DuckDB recursive-CTE reachability closure — two very
     different algorithms that must agree on the exact labeling."""
     docs = load_table(spark, sf_dir, "documents", columns=["doc_id", "text"])
-    pairs = DD.jaccard_pairs(docs, n=3, threshold=0.5, max_shingle_df=_MAX_SHINGLE_DF)
+    pairs = DD.jaccard_pairs(docs, n=3, threshold=0.5, max_shingle_df=MAX_SHINGLE_DF)
     return DD.connected_components(pairs).orderBy("id")
 
 
@@ -311,7 +311,7 @@ def q_crossmodal_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (measured: 2.3 -> 5.1 s median at sf0.1 when the cache was lost
     # in the left-join rework; back to ~2.6 s with it)
     pairs = tracked_cache(
-        DD.jaccard_pairs(docs, n=3, threshold=0.5, max_shingle_df=_MAX_SHINGLE_DF)
+        DD.jaccard_pairs(docs, n=3, threshold=0.5, max_shingle_df=MAX_SHINGLE_DF)
     )
     # An outer join can never broadcast its preserved side (the build side
     # must be the nullable side — here the corpus-sized embeddings table),
@@ -377,7 +377,7 @@ def q_paraphrase_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings", columns=["vec_id", "embedding", "label"])
     emb_pairs = SIM.cosine_dup_pairs(emb, threshold=0.4, block_col="label")
     text_pairs = DD.jaccard_pairs(
-        docs, n=3, threshold=0.5, max_shingle_df=_MAX_SHINGLE_DF
+        docs, n=3, threshold=0.5, max_shingle_df=MAX_SHINGLE_DF
     ).select("id_a", "id_b")
     return (
         emb_pairs.join(text_pairs, ["id_a", "id_b"], "left_anti")

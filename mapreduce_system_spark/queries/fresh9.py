@@ -46,14 +46,11 @@ checkpoint (state audit).
 
 from __future__ import annotations
 
-import shutil
-import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_system_spark import caches
 from mapreduce_system_spark.functions.hashing import md5_bucket32_sql
 from mapreduce_system_spark.operators import multimodal as MM
 from mapreduce_system_spark.operators.cardinality import (
@@ -63,6 +60,7 @@ from mapreduce_system_spark.operators.cardinality import (
 from mapreduce_system_spark.operators.hll import distinct_sketch_rollup
 from mapreduce_system_spark.registry import register
 from mapreduce_system_spark.sources.tables import load_table
+from mapreduce_system_spark.streaming.replay import Replay
 
 # ---------------------------------------------------------------------------
 # rel_join_cardinality_exact — |lineitem ⋈ orders| without the join
@@ -304,43 +302,16 @@ def q_stream_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     The NULL bookkeeping rides the state's ``n_vals`` field: a user
     whose every value is NULL totals NULL, not 0.0."""
     from mapreduce_system_spark.streaming import stateful as ST
-    from mapreduce_system_spark.queries.fresh6 import _pinned_conf
 
-    app = spark.sparkContext.applicationId
-    base = Path(
-        f"/tmp/spark_graft_stateaudit_{Path(sf_dir).name}_{app}_{uuid.uuid4().hex[:8]}"
-    )
-    caches.reap_stale_stagings(
-        f"spark_graft_stateaudit_{Path(sf_dir).name}_", base.name
-    )
-    src, ck = str(base / "src"), str(base / "ck")
     ev = load_table(spark, sf_dir, "events", columns=["user_id", "value"])
-    # two files = two micro-batches: the audit must see state that
-    # CARRIED across a batch boundary, not a single-batch aggregate
-    ev.repartition(2).write.mode("overwrite").parquet(src)
-    stream = (
-        spark.readStream.schema("user_id long, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    with _pinned_conf(spark, "spark.sql.shuffle.partitions", "8"):
-        q = (
-            ST.user_running_totals(stream)
+    with Replay(spark, "stateaudit", sf_dir) as r:
+        # the audit reads the store's files, which live in the scratch
+        # dir: run() checkpoints the result before the dir goes
+        return r.run(
+            ST.user_running_totals(r.stage(ev))
             .writeStream.format("noop")
-            .outputMode("update")
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-    try:
-        q.awaitTermination()
-        last = q.lastProgress
-        if last is None or int(last["batchId"]) < 1:
-            # the cross-batch claim needs >=2 batches (ids 0 and 1) —
-            # same silent-weakening guard as stream_stateful_user_totals
-            raise RuntimeError(f"expected >=2 micro-batches, saw {last}")
-        out = (
-            ST.read_group_state(spark, ck)
+            .outputMode("update"),
+            lambda: ST.read_group_state(spark, r.ck)
             .select(
                 "user_id",
                 F.col("n").alias("n_events"),
@@ -348,17 +319,5 @@ def q_stream_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("n_vals") > 0, F.round(F.col("total"), 2)
                 ).alias("total_value"),
             )
-            .orderBy("user_id")
+            .orderBy("user_id"),
         )
-        # materialize before the checkpoint is removed — the audit reads
-        # the store's files, which are part of the scratch dir
-        from mapreduce_system_spark.caches import checkpoint
-
-        out = checkpoint(out)
-    finally:
-        try:
-            q.stop()
-        except Exception:
-            pass
-        shutil.rmtree(base, ignore_errors=True)
-    return out

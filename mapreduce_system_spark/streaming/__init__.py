@@ -6,6 +6,8 @@
   file-source stream).
 - ``stateful`` — applyInPandasWithState custom operators (the streaming
   analog of the reference's reducef fold contract).
+- ``replay``   — the harness the stream queries share: replays staged
+  files one per micro-batch and checks that it did.
 """
 
-from mapreduce_system_spark.streaming import stateful, windows  # noqa: F401
+from mapreduce_system_spark.streaming import replay, stateful, windows  # noqa: F401

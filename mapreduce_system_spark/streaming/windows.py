@@ -345,93 +345,3 @@ def dedup_keys(df: DataFrame, keys: list[str], within_watermark: bool = False) -
         return df.dropDuplicatesWithinWatermark(keys)
     return df.dropDuplicates(keys)
 
-
-def session_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    gap: str = "30 minutes",
-) -> DataFrame:
-    """SESSION-WINDOW stream-stream join (the session twin of
-    ``interval_join``, completing the window-join matrix the way
-    Flink's session window join defines it): sessions form over the
-    UNION of both sides' events per key — any inactivity gap strictly
-    greater than ``gap`` splits — and every left row pairs with every
-    right row of the SAME session. Output columns are l_/r_ prefixed
-    like ``interval_join``'s, plus the shared ``session_id`` (0-based
-    per key in time order).
-
-    What the interval join cannot express: transitive co-presence. An
-    interval join pairs rows within a FIXED span of each other; a
-    session join pairs rows BRIDGED by intermediate activity on either
-    stream — a click 50 minutes after a view still joins it if any
-    event kept the session alive in between (pinned by test). Session
-    membership is data-dependent, which is exactly why Spark cannot run
-    this as a native stream-stream join (those require fixed time-range
-    predicates to bound state): the streaming form needs custom session
-    state per key (transformWithState / applyInPandasWithState, the
-    patterns in streaming/stateful.py), while THIS batch-twin spelling
-    is the oracle-checkable semantics both must agree with
-    (tests/test_sessionjoin.py carries the reference + DuckDB draft).
-
-    Scale shape: ONE exchange on the key covers both window passes over
-    the tagged union (lag + cumulative-sum gaps-and-islands — the
-    rel_sessionize_events algebra, same partitioning, compatible
-    ordering), then the sides split and equi-join on (key, session_id)
-    — no theta join, no per-key quadratic blowup beyond the join's own
-    output. Ties (equal timestamps across sides) cannot split a session
-    (gap 0 never starts one), so membership is order-deterministic.
-    Reference contrast: worker.go:16-21,153 sorts within one reduce
-    partition; the session boundary depends on the MERGED cross-stream
-    timeline per key — derived state across two inputs the one-shot
-    pipeline cannot express.
-    """
-    gap_s = _interval_seconds(gap)
-    if gap_s <= 0:
-        raise ValueError(f"gap must be positive, got {gap!r}")
-
-    def tag(df: DataFrame, ts: str, side: int) -> DataFrame:
-        return df.select(
-            F.col(on).alias("_k"),
-            F.col(ts).cast("double").alias("_t"),
-            F.lit(side).alias("_side"),
-            F.struct(*df.columns).alias("_p"),
-        ).where(F.col("_k").isNotNull() & F.col("_t").isNotNull())
-
-    lt, rt = tag(left, left_ts, 0), tag(right, right_ts, 1)
-    # both sides' payload structs ride the union in side-specific
-    # columns (NULL on the other side) so one window pass covers both
-    u = lt.select(
-        "_k", "_t", "_side", F.col("_p").alias("_lp"),
-        F.lit(None).cast(rt.schema["_p"].dataType).alias("_rp"),
-    ).unionByName(
-        rt.select(
-            "_k", "_t", "_side",
-            F.lit(None).cast(lt.schema["_p"].dataType).alias("_lp"),
-            F.col("_p").alias("_rp"),
-        )
-    )
-    from pyspark.sql import Window as W
-
-    w_lag = W.partitionBy("_k").orderBy("_t", "_side")
-    w_cum = (
-        W.partitionBy("_k")
-        .orderBy("_t", "_side")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    start = F.when(
-        F.col("_prev").isNull() | (F.col("_t") - F.col("_prev") > F.lit(gap_s)), 1
-    ).otherwise(0)
-    s = (
-        u.withColumn("_prev", F.lag("_t").over(w_lag))
-        .withColumn("session_id", (F.sum(start).over(w_cum) - 1).cast("long"))
-    )
-    lefts = s.where(F.col("_side") == 0).select("_k", "session_id", "_lp")
-    rights = s.where(F.col("_side") == 1).select("_k", "session_id", "_rp")
-    lcols = [F.col(f"_lp.{c}").alias(f"l_{c}") for c in left.columns]
-    rcols = [F.col(f"_rp.{c}").alias(f"r_{c}") for c in right.columns]
-    return lefts.join(rights, ["_k", "session_id"]).select(
-        *lcols, *rcols, "session_id"
-    )

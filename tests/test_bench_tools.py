@@ -102,6 +102,32 @@ def test_tools_never_patch_package_modules():
     assert not offenders, offenders
 
 
+def test_tools_import_no_private_names_from_queries():
+    """Tools use what queries export, not their internals."""
+    offenders = []
+    for path in sorted((REPO / "tools").glob("*.py")):
+        tree = ast.parse(path.read_text())
+        query_mods = set()
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(
+                "mapreduce_system_spark.queries"
+            ):
+                for a in node.names:
+                    if a.name.startswith("_"):
+                        offenders.append(f"{path.name}: {node.module}.{a.name}")
+                    if node.module == "mapreduce_system_spark.queries":
+                        query_mods.add(a.asname or a.name)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id in query_mods
+                and node.attr.startswith("_")
+            ):
+                offenders.append(f"{path.name}: {node.value.id}.{node.attr}")
+    assert not offenders, offenders
+
+
 def _stub_tree(root: Path, name: str, walls: list[float], verify_rc: int = 0) -> Path:
     """A checkout whose bench.py prints the next of ``walls`` and whose
     tools/verify_local.py exits ``verify_rc``; both log to root/log."""

@@ -70,11 +70,21 @@ def test_generic_map_reduce_word_count(spark):
     assert out == {"hello": "2", "is": "2", "my": "1", "name": "3"}
 
 
+def _reference_map_reduce(rows, mapf, reducef):
+    """The reference's contract in plain Python: map every row, group the
+    non-null pairs by key, call ``reducef(k, sorted(values))``."""
+    groups: dict[str, list[str]] = {}
+    for k, v in rows:
+        for ok, ov in mapf(k, v):
+            if ok is not None and ov is not None:
+                groups.setdefault(ok, []).append(ov)
+    return {k: reducef(k, sorted(vs)) for k, vs in groups.items()}
+
+
 def test_map_reduce_scalable_matches_rdd_variant(spark):
-    """Arrow-batched generic engine ≡ RDD fidelity engine on the same job."""
-    df = spark.createDataFrame(
-        [("f1", "Hello my name is"), ("f2", "name name Hello is")], ["file", "content"]
-    )
+    """Both entry points equal the pure-Python reference on word count."""
+    rows = [("f1", "Hello my name is"), ("f2", "name name Hello is")]
+    df = spark.createDataFrame(rows, ["file", "content"])
 
     def mapf(fname, content):
         import re
@@ -84,18 +94,18 @@ def test_map_reduce_scalable_matches_rdd_variant(spark):
     def reducef(key, values):
         return str(len(values))
 
+    want = _reference_map_reduce(rows, mapf, reducef)
     scalable = {r.key: r.value for r in MR.map_reduce_scalable(df, mapf, reducef).collect()}
-    rdd_based = {r.key: r.value for r in MR.map_reduce(spark, df, mapf, reducef, n_reduce=4).collect()}
-    assert scalable == rdd_based == {"hello": "2", "is": "2", "my": "1", "name": "3"}
+    laid_out = {r.key: r.value for r in MR.map_reduce(spark, df, mapf, reducef, n_reduce=4).collect()}
+    assert scalable == laid_out == want == {"hello": "2", "is": "2", "my": "1", "name": "3"}
 
 
 def test_map_reduce_scalable_echo_reduce_matches_rdd_variant(spark):
-    """Both engines hand reducef the same keys and the same sorted value
-    lists. The reducef ECHOES its value list, so ordering drift (not just
-    count drift) would fail."""
-    df = spark.createDataFrame(
-        [("f1", "b a c a"), ("f2", "a c b b")], ["file", "content"]
-    )
+    """Both entry points hand reducef the keys and sorted value lists the
+    pure-Python reference does. The reducef ECHOES its value list, so
+    ordering drift (not just count drift) would fail."""
+    rows = [("f1", "b a c a"), ("f2", "a c b b")]
+    df = spark.createDataFrame(rows, ["file", "content"])
 
     def mapf(fname, content):
         # values count down, so emission order is never sorted order
@@ -104,10 +114,27 @@ def test_map_reduce_scalable_echo_reduce_matches_rdd_variant(spark):
     def reducef(key, values):
         return "|".join(values)  # sorted order is part of the contract
 
+    want = _reference_map_reduce(rows, mapf, reducef)
     scalable = {r.key: r.value for r in MR.map_reduce_scalable(df, mapf, reducef).collect()}
-    rdd_based = {r.key: r.value for r in MR.map_reduce(spark, df, mapf, reducef).collect()}
-    assert scalable == rdd_based
-    assert scalable["a"] == "6:f1|8:f1|9:f2"
+    laid_out = {r.key: r.value for r in MR.map_reduce(spark, df, mapf, reducef).collect()}
+    assert scalable == laid_out == want
+    assert want["a"] == "6:f1|8:f1|9:f2"
+
+
+def test_map_reduce_output_is_n_reduce_partitions_sorted_by_key(spark):
+    """``map_reduce`` lays its output out like the reference's mr-out-*
+    files: ``n_reduce`` partitions, each sorted by key, every key in one
+    partition only."""
+    keys = [f"k{i:02d}" for i in range(30)]
+    df = spark.createDataFrame([("f", " ".join(reversed(keys)))], ["file", "content"])
+    out = MR.map_reduce(
+        spark, df, lambda f, c: [(w, "1") for w in c.split()],
+        lambda k, vs: str(len(vs)), n_reduce=3,
+    )
+    parts = out.rdd.glom().map(lambda rows: [r.key for r in rows]).collect()
+    assert len(parts) == 3
+    assert all(p == sorted(p) for p in parts)
+    assert sorted(k for p in parts for k in p) == keys
 
 
 def test_map_reduce_scalable_values_in_python_sorted_order(spark):

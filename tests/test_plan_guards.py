@@ -926,46 +926,3 @@ def test_kneser_ney_registered_joins_stay_keyed(spark):
         if ln.strip().startswith("(") and "BroadcastNestedLoopJoin" in ln
     )
     assert n_bnlj <= 1, plan
-
-
-def test_densest_peel_no_cartesian_beyond_one_row_rho(spark):
-    """densest_subgraph_rounds (staged r17): per round one degree
-    aggregate + two semi equi-joins; the only nested-loop shapes are
-    the documented ONE-ROW density/census broadcasts. A refactor that
-    fans edges against nodes would surface as a CartesianProduct."""
-    from mapreduce_system_spark import caches
-    from mapreduce_system_spark.operators.densest import (
-        densest_subgraph_rounds,
-    )
-
-    edges = spark.createDataFrame(
-        [(a, b) for a in range(20) for b in range(a + 1, 20) if (a + b) % 3],
-        "src long, dst long",
-    )
-    try:
-        plan = formatted_plan(densest_subgraph_rounds(edges, rounds=2))
-        assert "CartesianProduct" not in plan, plan
-        assert "Exchange SinglePartition" not in plan, plan
-    finally:
-        caches.release()
-
-
-def test_session_join_equi_join_key_partitioned_windows(spark):
-    """session_join (staged r17): the pair generator is an EQUI-join on
-    (key, session_id) — never a time-range theta join — and both
-    gaps-and-islands windows are key-partitioned, never the textbook
-    single-partition global sort."""
-    from mapreduce_system_spark.streaming.windows import session_join
-
-    left = spark.createDataFrame(
-        [(1, 10.0, 1), (2, 20.0, 2)], "k long, ts double, id long"
-    )
-    right = spark.createDataFrame(
-        [(1, 15.0, 9), (2, 700.0, 8)], "k long, ts double, id long"
-    )
-    df = session_join(left, right, "k", "ts", "ts", "10 minutes")
-    plan = formatted_plan(df)
-    _assert_equi_join_only(df)
-    assert "Window" in plan, plan
-    assert "Exchange SinglePartition" not in plan, plan
-    assert "hashpartitioning(_k" in plan, plan

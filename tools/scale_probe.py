@@ -46,8 +46,6 @@ Usage::
     python tools/scale_probe.py --wsample [--out NAME] [reps] [src_sf_dir]
     python tools/scale_probe.py --sneighbor [--out NAME] [reps] [src_sf_dir]
     python tools/scale_probe.py --knlm [--out NAME] [reps] [src_sf_dir]
-    python tools/scale_probe.py --densest [--out NAME] [reps] [src_sf_dir]
-    python tools/scale_probe.py --sessjoin [--out NAME] [reps] [src_sf_dir]
     python tools/scale_probe.py --manifest [--out NAME]
 
 NOTE: in ``--asof`` mode the third positional is HOT_PCT (default 20) —
@@ -107,7 +105,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from mapreduce_system_spark import caches  # noqa: E402
 from mapreduce_system_spark.operators import dedup as DD  # noqa: E402
 from mapreduce_system_spark.operators import similarity as SIM  # noqa: E402
-from mapreduce_system_spark.queries.dedup import _MAX_SHINGLE_DF  # noqa: E402
+from mapreduce_system_spark.queries.dedup import MAX_SHINGLE_DF  # noqa: E402
 from mapreduce_system_spark.session import get_spark  # noqa: E402
 from mapreduce_system_spark.sources.tables import load_table  # noqa: E402
 
@@ -207,7 +205,7 @@ def shingle_candidates(spark, sf_dir: str) -> int:
     sets = DD.shingle_sets(load_table(spark, sf_dir, "documents", columns=["doc_id", "text"]))
     ex = sets.select("id", F.explode("sg").alias("shingle"))
     df_ = ex.groupBy("shingle").agg(F.count("*").alias("c")).where(
-        F.col("c") <= _MAX_SHINGLE_DF
+        F.col("c") <= MAX_SHINGLE_DF
     )
     return _pairs_in_groups(df_)
 
@@ -226,7 +224,7 @@ def shingle_df_profile(spark, sf_dir: str) -> dict:
         F.expr("percentile_approx(c, array(0.5, 0.9, 0.99), 10000)").alias("p"),
         F.max("c").alias("mx"),
         F.count("*").alias("n"),
-        F.count_if(F.col("c") > _MAX_SHINGLE_DF).alias("capped"),
+        F.count_if(F.col("c") > MAX_SHINGLE_DF).alias("capped"),
     ).collect()[0]
     return {
         "n_shingles": int(row["n"]),
@@ -686,12 +684,6 @@ def main() -> int:
     knlm_mode = "--knlm" in args
     if knlm_mode:
         args.remove("--knlm")
-    densest_mode = "--densest" in args
-    if densest_mode:
-        args.remove("--densest")
-    sessjoin_mode = "--sessjoin" in args
-    if sessjoin_mode:
-        args.remove("--sessjoin")
     reps = int(args[0]) if len(args) > 0 else 10
     src = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
     organic_pct = int(args[2]) if len(args) > 2 else (
@@ -754,18 +746,6 @@ def main() -> int:
                   f"extra arg(s): {args[2:]}", file=sys.stderr)
             return 2
         return knlm_main(reps, src, out_name)
-    if densest_mode:
-        if len(args) > 2:
-            print(f"# --densest takes [reps] [src_sf_dir] only; unexpected "
-                  f"extra arg(s): {args[2:]}", file=sys.stderr)
-            return 2
-        return densest_main(reps, src, out_name)
-    if sessjoin_mode:
-        if len(args) > 2:
-            print(f"# --sessjoin takes [reps] [src_sf_dir] only; unexpected "
-                  f"extra arg(s): {args[2:]}", file=sys.stderr)
-            return 2
-        return sessjoin_main(reps, src, out_name)
     if (stream_mode or rules_mode or card_mode or tfidf_mode or lpa_mode
             or sessions_mode or boilerplate_mode):
         if len(args) > 2:
@@ -1242,14 +1222,15 @@ def asof_main(reps: int, src: str, hot_pct: int, out_name: str | None = None) ->
 # Claims under test: (1) wall tracks total per-group work (keys x batches +
 # closed-session flushes), not superlinearly; (2) the RocksDB store's row
 # count peaks at O(live keys), the eviction bound user_sessions_stateful
-# documents — measured from the harness's own stateOperators progress
-# (queries/fresh6.py::_run_session_stream stats capture), not a re-derived
-# replay.
+# documents — measured from the query's own replay progress
+# (queries/fresh6.py::replay_sessions), not a re-derived replay.
 # ---------------------------------------------------------------------------
 
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
+_ROCKSDB_CONF = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    ),
+}
 
 
 def _write_replicated(spark, df, offset_cols: list[str], reps: int, dst: str) -> None:
@@ -1326,28 +1307,22 @@ def stream_main(reps: int, src: str, out_name: str | None = None) -> int:
     build_scaled_stream_events(spark, src, dst, reps)
 
     def run_once(d: str, tag: str) -> tuple[float, int, dict]:
-        stats: dict = {}
         t0 = time.time()
-        with fresh6._pinned_conf(
-            spark, "spark.sql.streaming.stateStore.providerClass",
-            _ROCKSDB_PROVIDER,
-        ):
-            out = fresh6._run_session_stream(
-                spark, d, f"probe_stream_{tag}",
-                lambda s: ST.user_sessions_stateful(s, gap_s=fresh6._GAP_S),
-                stats=stats,
-            )
-            closed = out.count()
+        out, progress = fresh6.replay_sessions(
+            spark, d, f"probe_stream_{tag}", ST.user_sessions_stateful,
+            _ROCKSDB_CONF,
+        )
+        closed = out.count()
         wall = time.time() - t0
         caches.release()
-        return wall, int(closed), _state_metrics(stats.get("progress", []))
+        return wall, int(closed), _state_metrics(progress)
 
     # untimed warm-up (JVM + Python pool + RocksDB JNI load)
     run_once(src, "warm")
 
     record: dict = {
         "mode": "stream", "reps": reps, "src": src,
-        "provider": "rocksdb", "gap_s": fresh6._GAP_S, "scales": {},
+        "provider": "rocksdb", "gap_s": fresh6.GAP_S, "scales": {},
     }
     closed_counts: dict[str, int] = {}
     for label, d in [("sf0.1", src), ("sf1", dst)]:
@@ -1432,26 +1407,22 @@ def sessions_main(reps: int, src: str, out_name: str | None = None) -> int:
     build_scaled_stream_events(spark, src, dst, reps)
 
     sessionizers = {
-        "gst": lambda s: ST.user_sessions_stateful(s, gap_s=fresh6._GAP_S),
-        "tws": lambda s: ST.user_sessions_tws(s, gap_s=fresh6._GAP_S),
+        "gst": ST.user_sessions_stateful,
+        "tws": ST.user_sessions_tws,
     }
 
     def run_once(variant: str, d: str, tag: str) -> tuple[float, int, dict]:
-        stats: dict = {}
         env = tws_protobuf_env(spark) if variant == "tws" else nullcontext()
         t0 = time.time()
-        with fresh6._pinned_conf(
-            spark, "spark.sql.streaming.stateStore.providerClass",
-            _ROCKSDB_PROVIDER,
-        ), env:
-            out = fresh6._run_session_stream(
+        with env:
+            out, progress = fresh6.replay_sessions(
                 spark, d, f"probe_sess_{variant}_{tag}",
-                sessionizers[variant], stats=stats,
+                sessionizers[variant], _ROCKSDB_CONF,
             )
             closed = out.count()
         wall = time.time() - t0
         caches.release()
-        return wall, int(closed), _state_metrics(stats.get("progress", []))
+        return wall, int(closed), _state_metrics(progress)
 
     # one untimed warm-up per variant (JVM + Python pool + RocksDB JNI +
     # the TWS protobuf shim install)
@@ -1460,7 +1431,7 @@ def sessions_main(reps: int, src: str, out_name: str | None = None) -> int:
 
     record: dict = {
         "mode": "sessions", "reps": reps, "src": src,
-        "provider": "rocksdb", "gap_s": fresh6._GAP_S, "variants": {},
+        "provider": "rocksdb", "gap_s": fresh6.GAP_S, "variants": {},
     }
     ok = True
     for variant in sessionizers:
@@ -2216,20 +2187,17 @@ def fjoin_main(reps: int, src: str, out_name: str | None = None) -> int:
     (staged r16, completing the inner -> left_outer -> full_outer
     matrix; VERDICT r15 #5's probe-before-registration cadence). Each
     side staged as two time-contiguous chunks + a far-future sentinel
-    (fresh6's replay discipline — sentinels on BOTH streams because the
+    (``streaming.replay`` — sentinels on BOTH streams because the
     global watermark is the min across inputs). Hard gates: the
     streaming (matched, left-unmatched, right-unmatched) census equals
     the batch FULL JOIN census at BOTH scales, and the census scales
     EXACTLY reps x (replicas are key-disjoint). Free variables: wall
     and peak join-state rows (both sides' in-flight windows — expect
     ~linear in rows, the watermark-eviction contract)."""
-    import os
     import statistics
-    import uuid as _uuid
-    from pathlib import Path as _P
 
-    from mapreduce_system_spark.queries import fresh6
     from mapreduce_system_spark.streaming import windows as SW
+    from mapreduce_system_spark.streaming.replay import Replay
 
     spark = get_spark("scale_probe_fjoin")
     MAX_DELAY = "30 minutes"
@@ -2254,36 +2222,6 @@ def fjoin_main(reps: int, src: str, out_name: str | None = None) -> int:
         clicks = ev.where(F.col("event_type") == "click").select("user_id", "ts")
         purch = ev.where(F.col("event_type") == "purchase").select("user_id", "ts")
         return clicks, purch
-
-    def stage_side(df, base: _P, name: str, sentinel_es: int) -> None:
-        d = base / name
-        d.mkdir(parents=True)
-        tmp = str(base / f"tmp_{name}")
-        df.withColumn("es", F.unix_timestamp("ts")).repartitionByRange(
-            2, "es", "user_id"
-        ).write.mode("overwrite").parquet(tmp)
-        parts = sorted(
-            p for p in _P(tmp).iterdir() if p.name.endswith(".parquet")
-        )
-        if len(parts) < 2:
-            raise RuntimeError(f"expected 2 time-range chunks, saw {len(parts)}")
-        for i, part in enumerate(parts, start=1):
-            chunk = d / f"chunk-{i}.parquet"
-            part.rename(chunk)
-            t = 1_700_000_000 + i * 10
-            os.utime(chunk, (t, t))
-        spark.range(1).select(
-            F.lit(-1).cast("long").alias("user_id"),
-            F.timestamp_seconds(F.lit(sentinel_es)).alias("ts"),
-            F.lit(sentinel_es).cast("long").alias("es"),
-        ).coalesce(1).write.mode("overwrite").parquet(str(base / f"tmp_s_{name}"))
-        s = d / "chunk-9-sentinel.parquet"
-        next(
-            p for p in (base / f"tmp_s_{name}").iterdir()
-            if p.name.endswith(".parquet")
-        ).rename(s)
-        t = 1_700_000_000 + 990
-        os.utime(s, (t, t))
 
     def census_of(df) -> dict:
         row = (
@@ -2315,60 +2253,42 @@ def fjoin_main(reps: int, src: str, out_name: str | None = None) -> int:
             .collect()[0][0]
         )
         sentinel_es = int(max_es) + 3 * 3600  # beyond every join window
-        base = _P(f"/tmp/spark_graft_fjoin_{rep}x_{_uuid.uuid4().hex[:8]}")
-        try:
-            stage_side(clicks, base, "clicks", sentinel_es)
-            stage_side(purch, base, "purch", sentinel_es)
-            sink, ck = str(base / "out"), str(base / "ck")
+        sentinel = spark.range(1).select(
+            F.lit(-1).cast("long").alias("user_id"),
+            F.timestamp_seconds(F.lit(sentinel_es)).alias("ts"),
+            F.lit(sentinel_es).cast("long").alias("es"),
+        )
+        with Replay(spark, f"probe_fjoin_{rep}x", src) as r:
 
-            def read(name: str):
-                return (
-                    spark.readStream.schema("user_id long, ts timestamp, es long")
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(str(base / name))
+            def side(df, name: str):
+                staged = r.stage(
+                    df.withColumn("es", F.unix_timestamp("ts")), name,
+                    by=("es", "user_id"), sentinel=sentinel,
                 )
+                return SW.with_watermark(staged, delay="1 minute")
 
+            clicks_s, purch_s = side(clicks, "clicks"), side(purch, "purch")
             t0 = time.time()
             joined = SW.interval_join(
-                SW.with_watermark(read("clicks"), delay="1 minute"),
-                SW.with_watermark(read("purch"), delay="1 minute"),
+                clicks_s, purch_s,
                 on="user_id", max_delay=MAX_DELAY, how="full_outer",
             )
-            with fresh6._pinned_conf(
-                spark, "spark.sql.streaming.numRecentProgressUpdates", "10000"
-            ):
-                q = (
-                    joined.writeStream.foreachBatch(
-                        lambda b, _i: b.write.mode("append").parquet(sink)
-                    )
-                    .outputMode("append")
-                    .option("checkpointLocation", ck)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                try:
-                    q.awaitTermination()
-                    progress = [
-                        json.loads(p.json) if hasattr(p, "json") else dict(p)
-                        for p in q.recentProgress
-                    ]
-                finally:
-                    try:
-                        q.stop()
-                    except Exception:
-                        pass
-            stream_census = census_of(spark.read.parquet(sink))
-            wall = time.time() - t0
-            batch_census = census_of(
-                SW.interval_join(
-                    clicks, purch, on="user_id",
-                    max_delay=MAX_DELAY, how="full_outer",
-                )
+            out = r.run(
+                joined.writeStream.foreachBatch(
+                    lambda b, _i: b.write.mode("append").parquet(r.sink)
+                ).outputMode("append"),
+                lambda: spark.read.parquet(r.sink),
             )
-            caches.release()
-            return wall, stream_census, batch_census, _state_metrics(progress)
-        finally:
-            shutil.rmtree(base, ignore_errors=True)
+            stream_census = census_of(out)
+            wall = time.time() - t0
+        batch_census = census_of(
+            SW.interval_join(
+                clicks, purch, on="user_id",
+                max_delay=MAX_DELAY, how="full_outer",
+            )
+        )
+        caches.release()
+        return wall, stream_census, batch_census, _state_metrics(r.progress)
 
     run(1)  # untimed warm-up
     record: dict = {
@@ -3143,176 +3063,6 @@ def wsample_main(reps: int, src: str, out_name: str | None = None) -> int:
     out.write_text(json.dumps(record, indent=1, sort_keys=True) + "\n")
     print(f"# wrote {out}", file=sys.stderr)
     return 0 if ok else 1
-
-
-def densest_main(reps: int, src: str, out_name: str | None = None) -> int:
-    """Densest-subgraph peel at 1x vs reps x (staged r17,
-    operators/densest.py — the ktruss probe's disjoint construction
-    verbatim: replica r offsets l_orderkey AND l_partkey, so each
-    shard's co-purchase graph is an isomorphic copy). Hard gates: the
-    per-round census n_nodes and n_edges scale EXACTLY reps x (density
-    is shard-local, so the round-r density must be IDENTICAL across
-    scales up to the 1-ulp noise of dividing 10x-scaled integers —
-    tolerance 2e-6 on the 6-dp rounded value). Wall is the free
-    variable: per round one degree aggregate over the lazily
-    re-filtered edges + one node-sized keep checkpoint + two
-    semi-joins; nothing edge-sized materializes (the k-core shape, not
-    the k-truss one — expect a k-core-like ratio)."""
-    import statistics
-
-    from mapreduce_system_spark.operators.densest import densest_subgraph_rounds
-    from mapreduce_system_spark.queries._graphshared import copurchase_pairs
-
-    EPS, ROUNDS = 0.5, 4
-    dst = "/tmp/spark_graft_scale/densest_sf1"
-    spark = get_spark("scale_probe_densest")
-    li = load_table(spark, src, "lineitem", columns=["l_orderkey", "l_partkey"])
-    _write_replicated(
-        spark, li, ["l_orderkey", "l_partkey"], reps, f"{dst}/lineitem.parquet"
-    )
-
-    def run(d: str):
-        pr = copurchase_pairs(spark, d)
-        t0 = time.time()
-        rows = sorted(
-            (r["round"], r["n_nodes"], r["n_edges"], r["density"])
-            for r in densest_subgraph_rounds(
-                pr, epsilon=EPS, rounds=ROUNDS, src="u", dst="v",
-                edges_undirected_distinct=True,
-            ).collect()
-        )
-        wall = time.time() - t0
-        caches.release()
-        return wall, rows
-
-    run(src)  # untimed warm-up
-    record: dict = {
-        "mode": "densest", "reps": reps, "src": src,
-        "epsilon": EPS, "rounds": ROUNDS, "scales": {},
-    }
-    census: dict[str, list] = {}
-    for label, d in [("sf0.1", src), ("sf1", dst)]:
-        walls, rows = [], []
-        for _ in range(3):
-            w, rows = run(d)
-            walls.append(w)
-        census[label] = rows
-        record["scales"][label] = {
-            "census": [
-                {"round": r, "n_nodes": n, "n_edges": m, "density": rho}
-                for r, n, m, rho in rows
-            ],
-            "wall_s": round(statistics.median(walls), 2),
-        }
-        print(f"# {label}: census={rows} "
-              f"wall={record['scales'][label]['wall_s']}", file=sys.stderr)
-    a, bb = census["sf0.1"], census["sf1"]
-    counts_exact = all(
-        (br == ar and bn == reps * an and bm == reps * am)
-        for (ar, an, am, _), (br, bn, bm, _) in zip(a, bb)
-    )
-    density_tracks = all(
-        abs(brho - arho) <= 2e-6
-        for (_, _, _, arho), (_, _, _, brho) in zip(a, bb)
-    )
-    record["counts_exact_scale"] = counts_exact
-    record["density_shard_local"] = density_tracks
-    sa = record["scales"]["sf0.1"]["wall_s"]
-    sb = record["scales"]["sf1"]["wall_s"]
-    record["wall_ratio"] = round(sb / sa, 2) if sa else None
-    print("| scale | round0 nodes/edges | final density | wall s |")
-    print("|---|---|---|---|")
-    for label in ("sf0.1", "sf1"):
-        c = census[label]
-        print(f"| {label} | {c[0][1]}/{c[0][2]} | {c[-1][3]} "
-              f"| {record['scales'][label]['wall_s']} |")
-    print(f"| ratio | | | **{record['wall_ratio']}** |")
-    out = _record_out(out_name, "scale_probe_densest_latest.json")
-    out.write_text(json.dumps(record, indent=1, sort_keys=True) + "\n")
-    print(f"# wrote {out}", file=sys.stderr)
-    shutil.rmtree(dst, ignore_errors=True)
-    return 0 if (counts_exact and density_tracks) else 1
-
-
-def sessjoin_main(reps: int, src: str, out_name: str | None = None) -> int:
-    """Session-window join at 1x vs reps x (staged r17,
-    streaming/windows.py::session_join): replica r offsets user_id and
-    event_id, so every shard's per-user merged click/purchase timeline
-    is an exact clone and sessions never cross shards. Hard gates: the
-    joined-pair count AND the distinct joined-session count scale
-    EXACTLY reps x. Wall is the free variable: one exchange on the key
-    covers both window passes over the tagged union, then one
-    (key, session_id) equi-join — no theta join anywhere, so wall must
-    track the event volume."""
-    import statistics
-
-    from mapreduce_system_spark.streaming.windows import session_join
-
-    GAP = "30 minutes"
-    spark = get_spark("scale_probe_sessjoin")
-    ev = load_table(
-        spark, src, "events", columns=["user_id", "ts", "event_type", "event_id"]
-    )
-
-    def shards(rep: int):
-        rdf = spark.range(rep).select(F.col("id").alias("r"))
-        return ev.crossJoin(F.broadcast(rdf)).select(
-            (F.col("user_id") + F.col("r") * _OFFSET).alias("user_id"),
-            "ts",
-            "event_type",
-            (F.col("event_id") + F.col("r") * _OFFSET).alias("event_id"),
-        )
-
-    def run(rep: int):
-        e = shards(rep)
-        clicks = e.where(F.col("event_type") == "click").drop("event_type")
-        purchases = e.where(F.col("event_type") == "purchase").drop("event_type")
-        t0 = time.time()
-        pairs = session_join(clicks, purchases, "user_id", "ts", "ts", GAP)
-        agg = pairs.agg(
-            F.count("*").alias("n_pairs"),
-            F.countDistinct("l_user_id", "session_id").alias("n_sessions"),
-        ).collect()[0]
-        wall = time.time() - t0
-        caches.release()
-        return wall, int(agg["n_pairs"]), int(agg["n_sessions"])
-
-    run(1)  # untimed warm-up
-    record: dict = {
-        "mode": "sessjoin", "reps": reps, "src": src, "gap": GAP,
-        "scales": {},
-    }
-    for label, rep in [("1x", 1), (f"{reps}x", reps)]:
-        walls, n_pairs, n_sess = [], 0, 0
-        for _ in range(3):
-            w, n_pairs, n_sess = run(rep)
-            walls.append(w)
-        record["scales"][label] = {
-            "joined_pairs": n_pairs,
-            "joined_sessions": n_sess,
-            "wall_s": round(statistics.median(walls), 2),
-        }
-        print(f"# {label}: pairs={n_pairs} sessions={n_sess} "
-              f"wall={record['scales'][label]['wall_s']}", file=sys.stderr)
-    a, bb = record["scales"]["1x"], record["scales"][f"{reps}x"]
-    record["pairs_exact_scale"] = (
-        bb["joined_pairs"] == reps * a["joined_pairs"]
-        and bb["joined_sessions"] == reps * a["joined_sessions"]
-    )
-    record["wall_ratio"] = (
-        round(bb["wall_s"] / a["wall_s"], 2) if a["wall_s"] else None
-    )
-    print("| scale | pairs | sessions | wall s |")
-    print("|---|---|---|---|")
-    for label in ("1x", f"{reps}x"):
-        sc = record["scales"][label]
-        print(f"| {label} | {sc['joined_pairs']} | {sc['joined_sessions']} "
-              f"| {sc['wall_s']} |")
-    print(f"| ratio | | | **{record['wall_ratio']}** |")
-    out = _record_out(out_name, "scale_probe_sessjoin_latest.json")
-    out.write_text(json.dumps(record, indent=1, sort_keys=True) + "\n")
-    print(f"# wrote {out}", file=sys.stderr)
-    return 0 if record["pairs_exact_scale"] else 1
 
 
 if __name__ == "__main__":
