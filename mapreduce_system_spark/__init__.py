@@ -28,5 +28,15 @@ Everything is public PySpark; no custom Catalyst rules are required
 
 __version__ = "0.1.0"
 
+import os
+import sys
+
+if "PYTHON_WORKER_FACTORY_SECRET" in os.environ and sys.version_info < (3, 12):
+    # inside a PySpark worker: stop each task re-reading every zip on
+    # sys.path (see pyfiles)
+    from mapreduce_system_spark.pyfiles import install_zip_directory_cache
+
+    install_zip_directory_cache()
+
 from mapreduce_system_spark.session import get_spark  # noqa: F401
 from mapreduce_system_spark.sources.tables import TABLES, load_table  # noqa: F401

@@ -42,14 +42,14 @@ def weighted_mean():
     the numerator skips rows where either input is NULL, the
     denominator skips only NULL weights."""
 
-    @F.pandas_udf("double")
-    def _weighted_mean(value: pd.Series, weight: pd.Series) -> float:
-        import math
+    return F.pandas_udf(_weighted_mean, "double")
 
-        den = math.fsum(weight.dropna())
-        if den == 0.0:
-            return None
-        num = math.fsum((value * weight).dropna())
-        return num / den
 
-    return _weighted_mean
+def _weighted_mean(value: pd.Series, weight: pd.Series) -> float:
+    import math
+
+    den = math.fsum(weight.dropna())
+    if den == 0.0:
+        return None
+    num = math.fsum((value * weight).dropna())
+    return num / den

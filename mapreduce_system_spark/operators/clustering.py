@@ -28,6 +28,8 @@ README.MD:25-53); this is part of the mandated LLM-pipeline extension.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -57,6 +59,39 @@ def nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
         ]
     )
     return F.array_min(pairs)["j"]
+
+
+def _kmeans_partial_stats(k, d, cm, c_sqn, batches):
+    import numpy as np
+    import pandas as pd
+
+    # accumulate across the WHOLE partition's Arrow batches and
+    # emit once — per-batch emission would scale the collected
+    # rows with corpus size (batches ∝ rows/maxRecordsPerBatch),
+    # breaking the partitions×k wire invariant
+    sums = np.zeros((k, d))
+    counts = np.zeros(k, dtype=np.int64)
+    seen = False
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        seen = True
+        m = np.asarray([list(v) for v in pdf["__v"]], dtype=np.float64)
+        # argmin_j |x-c_j|^2 == argmin_j (|c_j|^2 - 2 x·c_j)
+        assign = (c_sqn - 2.0 * (m @ cm.T)).argmin(axis=1)
+        for j in np.unique(assign):
+            sel = m[assign == j]
+            counts[j] += len(sel)
+            sums[j] += sel.sum(axis=0)
+    if seen:
+        nz = np.nonzero(counts)[0]
+        yield pd.DataFrame(
+            {
+                "cluster": [int(j) for j in nz],
+                "cnt": [int(counts[j]) for j in nz],
+                "vsum": [sums[j].tolist() for j in nz],
+            }
+        )
 
 
 def kmeans_fit(
@@ -155,43 +190,17 @@ def kmeans_fit(
         d = centroids.shape[1]
         stats_schema = "cluster int, cnt long, vsum array<double>"
         for _ in range(max_iter):
-            cm = centroids  # capture current value in the task closure
-            c_sqn = (cm * cm).sum(axis=1)
-
-            def partial_stats(batches):
-                import pandas as pd
-
-                # accumulate across the WHOLE partition's Arrow batches and
-                # emit once — per-batch emission would scale the collected
-                # rows with corpus size (batches ∝ rows/maxRecordsPerBatch),
-                # breaking the partitions×k wire invariant (r10 review)
-                sums = np.zeros((k, d))
-                counts = np.zeros(k, dtype=np.int64)
-                seen = False
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    seen = True
-                    m = np.asarray([list(v) for v in pdf["__v"]], dtype=np.float64)
-                    # argmin_j |x-c_j|^2 == argmin_j (|c_j|^2 - 2 x·c_j)
-                    assign = (c_sqn - 2.0 * (m @ cm.T)).argmin(axis=1)
-                    for j in np.unique(assign):
-                        sel = m[assign == j]
-                        counts[j] += len(sel)
-                        sums[j] += sel.sum(axis=0)
-                if seen:
-                    nz = np.nonzero(counts)[0]
-                    yield pd.DataFrame(
-                        {
-                            "cluster": [int(j) for j in nz],
-                            "cnt": [int(counts[j]) for j in nz],
-                            "vsum": [sums[j].tolist() for j in nz],
-                        }
-                    )
+            c_sqn = (centroids * centroids).sum(axis=1)
 
             # partial per-batch stats (the map-side combine): rows crossing
             # the wire = partitions × k, each k·d doubles — never the corpus.
-            parts = base.select("__v").mapInPandas(partial_stats, schema=stats_schema).collect()
+            parts = (
+                base.select("__v")
+                .mapInPandas(
+                    partial(_kmeans_partial_stats, k, d, centroids, c_sqn), schema=stats_schema
+                )
+                .collect()
+            )
             sums = np.zeros((k, d))
             counts = np.zeros(k)
             for r in parts:

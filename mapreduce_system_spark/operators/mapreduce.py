@@ -20,6 +20,7 @@ distinct keys per partition, not input rows.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterable
+from functools import partial
 from typing import Iterator
 
 import pandas as pd
@@ -190,27 +191,8 @@ def map_reduce_scalable(
 
     ensure_package_on_executors(df.sparkSession)
     df = ensure_parallelism(df)
-
-    def map_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys: list[str] = []
-            vals: list[str] = []
-            for k, v in zip(pdf[key_col], pdf[value_col]):
-                for ok, ov in mapf(k, v):
-                    keys.append(ok)
-                    vals.append(ov)
-            yield pd.DataFrame({"key": keys, "value": vals}, dtype=object)
-
-    def reduce_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            keys = batch.column("key")
-            out = map(reducef, keys.to_pylist(), batch.column("values").to_pylist())
-            yield pa.RecordBatch.from_arrays(
-                [keys, pa.array(out, type=keys.type)], names=["key", "value"]
-            )
-
     pairs = df.select(key_col, value_col).mapInPandas(
-        map_batches, "key string, value string"
+        partial(_map_batches, mapf, key_col, value_col), "key string, value string"
     ).where(F.col("key").isNotNull() & F.col("value").isNotNull())
     # The reference's KeyValue fields are non-nullable Go strings
     # (worker.go:26-29): a mapf emitting None has left the contract, and
@@ -218,5 +200,27 @@ def map_reduce_scalable(
     return (
         pairs.groupBy("key")
         .agg(F.array_sort(F.collect_list("value")).alias("values"))
-        .mapInArrow(reduce_batches, "key string, value string")
+        .mapInArrow(partial(_reduce_batches, reducef), "key string, value string")
     )
+
+
+def _map_batches(
+    mapf, key_col, value_col, batches: Iterator[pd.DataFrame]
+) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        keys: list[str] = []
+        vals: list[str] = []
+        for k, v in zip(pdf[key_col], pdf[value_col]):
+            for ok, ov in mapf(k, v):
+                keys.append(ok)
+                vals.append(ov)
+        yield pd.DataFrame({"key": keys, "value": vals}, dtype=object)
+
+
+def _reduce_batches(reducef, batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in batches:
+        keys = batch.column("key")
+        out = map(reducef, keys.to_pylist(), batch.column("values").to_pylist())
+        yield pa.RecordBatch.from_arrays(
+            [keys, pa.array(out, type=keys.type)], names=["key", "value"]
+        )

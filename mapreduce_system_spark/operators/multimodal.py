@@ -19,6 +19,7 @@ memory for wide blobs.
 from __future__ import annotations
 
 import hashlib
+from functools import partial
 from typing import Iterator
 
 import pandas as pd
@@ -52,24 +53,29 @@ def binarize_text(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
+def _blob_feature_batches(
+    id_col, blob_col, batches: Iterator[pd.DataFrame]
+) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        blobs = pdf[blob_col]
+        yield pd.DataFrame(
+            {
+                "id": pdf[id_col],
+                "n_bytes": blobs.map(len).astype("int64"),
+                "md5": blobs.map(lambda b: hashlib.md5(bytes(b)).hexdigest()),
+            }
+        )
+
+
 def blob_features(df: DataFrame, id_col: str = "id", blob_col: str = "blob") -> DataFrame:
     """Byte-level features per blob via Arrow-batched mapInPandas:
     (id, n_bytes, md5). The pattern every decode/extract op follows."""
 
     ensure_package_on_executors(df.sparkSession)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = pdf[blob_col]
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "n_bytes": blobs.map(len).astype("int64"),
-                    "md5": blobs.map(lambda b: hashlib.md5(bytes(b)).hexdigest()),
-                }
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(extract, schema=FEATURE_SCHEMA)
+    return df.select(id_col, blob_col).mapInPandas(
+        partial(_blob_feature_batches, id_col, blob_col), schema=FEATURE_SCHEMA
+    )
 
 
 _PIL_IMAGE_CACHE: list = []  # [PIL.Image module or None], resolved once
@@ -889,6 +895,26 @@ GIF_PLANES_SCHEMA = (
 )
 
 
+def _gif_plane_batches(id_col, blob_col, batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        out = {"id": [], "width": [], "height": [], "pal_luma": [], "idx": []}
+        for i, blob in zip(pdf[id_col], pdf[blob_col]):
+            parsed = _gif_parse_first_frame(bytes(blob))
+            if parsed is None:
+                continue
+            w, h, pal, idx = parsed
+            luma = _gif_palette_luma(pal)
+            n_colors = len(luma)
+            if any(px >= n_colors for px in idx[: w * h]):
+                continue  # index beyond palette: corrupt stream
+            out["id"].append(i)
+            out["width"].append(w)
+            out["height"].append(h)
+            out["pal_luma"].append(luma)
+            out["idx"].append(list(idx[: w * h]))
+        yield pd.DataFrame(out)
+
+
 def decode_image_gif_planes(
     df: DataFrame, id_col: str = "id", blob_col: str = "blob"
 ) -> DataFrame:
@@ -907,27 +933,8 @@ def decode_image_gif_planes(
     ITU-R 601-2 integer spelling (``decode_image_png``)."""
     ensure_package_on_executors(df.sparkSession)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"id": [], "width": [], "height": [], "pal_luma": [], "idx": []}
-            for i, blob in zip(pdf[id_col], pdf[blob_col]):
-                parsed = _gif_parse_first_frame(bytes(blob))
-                if parsed is None:
-                    continue
-                w, h, pal, idx = parsed
-                luma = _gif_palette_luma(pal)
-                n_colors = len(luma)
-                if any(px >= n_colors for px in idx[: w * h]):
-                    continue  # index beyond palette: corrupt stream
-                out["id"].append(i)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["pal_luma"].append(luma)
-                out["idx"].append(list(idx[: w * h]))
-            yield pd.DataFrame(out)
-
     return df.select(id_col, blob_col).mapInPandas(
-        extract, schema=GIF_PLANES_SCHEMA
+        partial(_gif_plane_batches, id_col, blob_col), schema=GIF_PLANES_SCHEMA
     )
 
 
@@ -1027,6 +1034,26 @@ def _default_image_decoder(blob: bytes):
     return out
 
 
+def _image_feature_batches(
+    decode, id_col, blob_col, batches: Iterator[pd.DataFrame]
+) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        rows = {"id": [], "width": [], "height": [], "mean_value": [], "decoder": []}
+        for id_, blob in zip(pdf[id_col], pdf[blob_col]):
+            b = bytes(blob)
+            decoded = decode(b)
+            if decoded is None:
+                # deterministic fake: 16x16, mean intensity = mean byte
+                decoded = (16, 16, (sum(b) / len(b)) if b else 0.0, "fake")
+            w, h, mean, dec = decoded
+            rows["id"].append(id_)
+            rows["width"].append(w)
+            rows["height"].append(h)
+            rows["mean_value"].append(mean)
+            rows["decoder"].append(dec)
+        yield pd.DataFrame(rows)
+
+
 def extract_image_features(
     df: DataFrame, id_col: str = "id", blob_col: str = "blob", decoder=None
 ) -> DataFrame:
@@ -1046,24 +1073,10 @@ def extract_image_features(
     ensure_package_on_executors(df.sparkSession)
     decode = decoder if decoder is not None else _default_image_decoder
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"id": [], "width": [], "height": [], "mean_value": [], "decoder": []}
-            for id_, blob in zip(pdf[id_col], pdf[blob_col]):
-                b = bytes(blob)
-                decoded = decode(b)
-                if decoded is None:
-                    # deterministic fake: 16x16, mean intensity = mean byte
-                    decoded = (16, 16, (sum(b) / len(b)) if b else 0.0, "fake")
-                w, h, mean, dec = decoded
-                rows["id"].append(id_)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["mean_value"].append(mean)
-                rows["decoder"].append(dec)
-            yield pd.DataFrame(rows)
-
-    return df.select(id_col, blob_col).mapInPandas(extract, schema=IMAGE_FEATURE_SCHEMA)
+    return df.select(id_col, blob_col).mapInPandas(
+        partial(_image_feature_batches, decode, id_col, blob_col),
+        schema=IMAGE_FEATURE_SCHEMA,
+    )
 
 
 RESIZED_SCHEMA = "id long, width int, height int, pixels binary, decoder string"
@@ -1103,6 +1116,66 @@ def _default_pixel_decoder(blob: bytes):
     return out
 
 
+def _resize_batches(
+    decode_px, width, height, id_col, blob_col, batches: Iterator[pd.DataFrame]
+) -> Iterator[pd.DataFrame]:
+    import numpy as np
+
+    n_px = width * height
+    for pdf in batches:
+        out = {"id": [], "width": [], "height": [], "pixels": [], "decoder": []}
+        for id_, blob in zip(pdf[id_col], pdf[blob_col]):
+            b = bytes(blob)
+            decoded = decode_px(b)
+            if decoded is not None:
+                _w, _h, plane, dec = decoded
+                src_h, src_w = plane.shape
+                # area-mean via two reduceat passes (rows then
+                # columns) instead of a per-cell Python loop: the
+                # integer-boundary boxes are exactly reduceat's
+                # segments ([y0_j, y0_{j+1}) contiguous when
+                # downscaling; a repeated index degenerates to the
+                # single row a[y0] — the same [y0, y0+1)
+                # replication box the loop used when upscaling).
+                # Box sums of uint8 values are exact in float64, so
+                # the output is bit-identical to the per-cell
+                # slice-mean at any summation order — this is pure
+                # interpreter-dispatch savings (a 224x224 target is
+                # 50k Python iterations per blob the old way).
+                ys = np.arange(height) * src_h // height
+                xs = np.arange(width) * src_w // width
+                cy = np.maximum(ys + 1, np.append(ys[1:], src_h)) - ys
+                cx = np.maximum(xs + 1, np.append(xs[1:], src_w)) - xs
+                pf = plane.astype(np.float64)
+                sums = np.add.reduceat(
+                    np.add.reduceat(pf, ys, axis=0), xs, axis=1
+                )
+                grid = np.minimum(
+                    255.0, np.rint(sums / (cy[:, None] * cx[None, :]))
+                ).astype(np.uint8)
+                px = grid.tobytes()
+            else:
+                dec = "fake"
+                sig = np.frombuffer(b, dtype=np.uint8)
+                if len(sig) >= n_px:
+                    step = len(sig) // n_px
+                    px = (
+                        sig[: n_px * step]
+                        .reshape(n_px, step)
+                        .mean(axis=1)
+                        .astype(np.uint8)
+                        .tobytes()
+                    )
+                else:  # shorter than the grid → zero-pad
+                    px = sig.tobytes() + bytes(n_px - len(sig))
+            out["id"].append(id_)
+            out["width"].append(width)
+            out["height"].append(height)
+            out["pixels"].append(px)
+            out["decoder"].append(dec)
+        yield pd.DataFrame(out)
+
+
 def resize_image(
     df: DataFrame,
     width: int = 8,
@@ -1127,64 +1200,10 @@ def resize_image(
     ensure_package_on_executors(df.sparkSession)
     decode_px = pixel_decoder if pixel_decoder is not None else _default_pixel_decoder
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        n_px = width * height
-        for pdf in batches:
-            out = {"id": [], "width": [], "height": [], "pixels": [], "decoder": []}
-            for id_, blob in zip(pdf[id_col], pdf[blob_col]):
-                b = bytes(blob)
-                decoded = decode_px(b)
-                if decoded is not None:
-                    _w, _h, plane, dec = decoded
-                    src_h, src_w = plane.shape
-                    # area-mean via two reduceat passes (rows then
-                    # columns) instead of a per-cell Python loop: the
-                    # integer-boundary boxes are exactly reduceat's
-                    # segments ([y0_j, y0_{j+1}) contiguous when
-                    # downscaling; a repeated index degenerates to the
-                    # single row a[y0] — the same [y0, y0+1)
-                    # replication box the loop used when upscaling).
-                    # Box sums of uint8 values are exact in float64, so
-                    # the output is bit-identical to the per-cell
-                    # slice-mean at any summation order — this is pure
-                    # interpreter-dispatch savings (a 224x224 target is
-                    # 50k Python iterations per blob the old way).
-                    ys = np.arange(height) * src_h // height
-                    xs = np.arange(width) * src_w // width
-                    cy = np.maximum(ys + 1, np.append(ys[1:], src_h)) - ys
-                    cx = np.maximum(xs + 1, np.append(xs[1:], src_w)) - xs
-                    pf = plane.astype(np.float64)
-                    sums = np.add.reduceat(
-                        np.add.reduceat(pf, ys, axis=0), xs, axis=1
-                    )
-                    grid = np.minimum(
-                        255.0, np.rint(sums / (cy[:, None] * cx[None, :]))
-                    ).astype(np.uint8)
-                    px = grid.tobytes()
-                else:
-                    dec = "fake"
-                    sig = np.frombuffer(b, dtype=np.uint8)
-                    if len(sig) >= n_px:
-                        step = len(sig) // n_px
-                        px = (
-                            sig[: n_px * step]
-                            .reshape(n_px, step)
-                            .mean(axis=1)
-                            .astype(np.uint8)
-                            .tobytes()
-                        )
-                    else:  # shorter than the grid → zero-pad
-                        px = sig.tobytes() + bytes(n_px - len(sig))
-                out["id"].append(id_)
-                out["width"].append(width)
-                out["height"].append(height)
-                out["pixels"].append(px)
-                out["decoder"].append(dec)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, blob_col).mapInPandas(resize, schema=RESIZED_SCHEMA)
+    return df.select(id_col, blob_col).mapInPandas(
+        partial(_resize_batches, decode_px, width, height, id_col, blob_col),
+        schema=RESIZED_SCHEMA,
+    )
 
 
 def decode_audio_wave(blob: bytes):
@@ -1226,6 +1245,33 @@ def decode_audio_wave(blob: bytes):
         return None
 
 
+def _audio_feature_batches(
+    decoder, sample_rate, id_col, blob_col, batches: Iterator[pd.DataFrame]
+) -> Iterator[pd.DataFrame]:
+    import numpy as np
+
+    for pdf in batches:
+        out = {"id": [], "n_samples": [], "duration_s": [], "rms": [], "decoder": []}
+        for id_, blob in zip(pdf[id_col], pdf[blob_col]):
+            b = bytes(blob)
+            decoded = decoder(b) if decoder is not None else None
+            if decoded is None:
+                sig = np.frombuffer(b, dtype=np.uint8).astype(np.float64) - 128.0
+                decoded = (
+                    len(sig),
+                    len(sig) / sample_rate,
+                    float(np.sqrt((sig**2).mean())) if len(sig) else 0.0,
+                    "fake",
+                )
+            n, dur, rms, dec = decoded
+            out["id"].append(id_)
+            out["n_samples"].append(n)
+            out["duration_s"].append(dur)
+            out["rms"].append(rms)
+            out["decoder"].append(dec)
+        yield pd.DataFrame(out)
+
+
 def extract_audio_features(
     df: DataFrame,
     sample_rate: int = 16000,
@@ -1245,31 +1291,34 @@ def extract_audio_features(
 
     ensure_package_on_executors(df.sparkSession)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    return df.select(id_col, blob_col).mapInPandas(
+        partial(_audio_feature_batches, decoder, sample_rate, id_col, blob_col),
+        schema=AUDIO_FEATURE_SCHEMA,
+    )
 
-        for pdf in batches:
-            out = {"id": [], "n_samples": [], "duration_s": [], "rms": [], "decoder": []}
-            for id_, blob in zip(pdf[id_col], pdf[blob_col]):
-                b = bytes(blob)
-                decoded = decoder(b) if decoder is not None else None
-                if decoded is None:
-                    sig = np.frombuffer(b, dtype=np.uint8).astype(np.float64) - 128.0
-                    decoded = (
-                        len(sig),
-                        len(sig) / sample_rate,
-                        float(np.sqrt((sig**2).mean())) if len(sig) else 0.0,
-                        "fake",
-                    )
-                n, dur, rms, dec = decoded
+
+def _sample_frame_batches(
+    n_frames, id_col, blob_col, batches: Iterator[pd.DataFrame]
+) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        out = {"id": [], "frame_idx": [], "frame": []}
+        for id_, blob in zip(pdf[id_col], pdf[blob_col]):
+            b = bytes(blob)
+            if not b:
+                continue
+            # frame i spans [i*len/n, (i+1)*len/n) — genuinely
+            # evenly spaced over the WHOLE blob with no dropped tail
+            # (a fixed step of len//n leaves up to n-1 tail bytes in
+            # no frame and clusters all samples in the prefix).
+            for i in range(n_frames):
+                lo = i * len(b) // n_frames
+                hi = (i + 1) * len(b) // n_frames
+                if hi <= lo:
+                    continue  # blob shorter than n_frames: skip empties
                 out["id"].append(id_)
-                out["n_samples"].append(n)
-                out["duration_s"].append(dur)
-                out["rms"].append(rms)
-                out["decoder"].append(dec)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, blob_col).mapInPandas(extract, schema=AUDIO_FEATURE_SCHEMA)
+                out["frame_idx"].append(i)
+                out["frame"].append(b[lo:hi])
+        yield pd.DataFrame(out)
 
 
 def sample_frames(
@@ -1282,28 +1331,9 @@ def sample_frames(
 
     ensure_package_on_executors(df.sparkSession)
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"id": [], "frame_idx": [], "frame": []}
-            for id_, blob in zip(pdf[id_col], pdf[blob_col]):
-                b = bytes(blob)
-                if not b:
-                    continue
-                # frame i spans [i*len/n, (i+1)*len/n) — genuinely
-                # evenly spaced over the WHOLE blob with no dropped tail
-                # (a fixed step of len//n leaves up to n-1 tail bytes in
-                # no frame and clusters all samples in the prefix).
-                for i in range(n_frames):
-                    lo = i * len(b) // n_frames
-                    hi = (i + 1) * len(b) // n_frames
-                    if hi <= lo:
-                        continue  # blob shorter than n_frames: skip empties
-                    out["id"].append(id_)
-                    out["frame_idx"].append(i)
-                    out["frame"].append(b[lo:hi])
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, blob_col).mapInPandas(sample, schema=FRAME_SCHEMA)
+    return df.select(id_col, blob_col).mapInPandas(
+        partial(_sample_frame_batches, n_frames, id_col, blob_col), schema=FRAME_SCHEMA
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1628,6 +1658,25 @@ RGB_PLANES_SCHEMA = (
 )
 
 
+def _rgb_plane_batches(
+    dec, id_col, blob_col, batches: Iterator[pd.DataFrame]
+) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        out = {"id": [], "width": [], "height": [], "r": [], "g": [], "b": []}
+        for i, blob in zip(pdf[id_col], pdf[blob_col]):
+            got = dec(bytes(blob))
+            if got is None:
+                continue
+            w, h, px, _name = got
+            out["id"].append(i)
+            out["width"].append(w)
+            out["height"].append(h)
+            out["r"].append(px[:, :, 0].reshape(-1).astype("int32"))
+            out["g"].append(px[:, :, 1].reshape(-1).astype("int32"))
+            out["b"].append(px[:, :, 2].reshape(-1).astype("int32"))
+        yield pd.DataFrame(out)
+
+
 def decode_image_rgb_planes(
     df: DataFrame,
     id_col: str = "id",
@@ -1651,22 +1700,6 @@ def decode_image_rgb_planes(
     ensure_package_on_executors(df.sparkSession)
     dec = decoder or decode_image_jpeg_rgb
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"id": [], "width": [], "height": [], "r": [], "g": [], "b": []}
-            for i, blob in zip(pdf[id_col], pdf[blob_col]):
-                got = dec(bytes(blob))
-                if got is None:
-                    continue
-                w, h, px, _name = got
-                out["id"].append(i)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["r"].append(px[:, :, 0].reshape(-1).astype("int32"))
-                out["g"].append(px[:, :, 1].reshape(-1).astype("int32"))
-                out["b"].append(px[:, :, 2].reshape(-1).astype("int32"))
-            yield pd.DataFrame(out)
-
     return df.select(id_col, blob_col).mapInPandas(
-        extract, schema=RGB_PLANES_SCHEMA
+        partial(_rgb_plane_batches, dec, id_col, blob_col), schema=RGB_PLANES_SCHEMA
     )

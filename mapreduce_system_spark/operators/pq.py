@@ -58,8 +58,49 @@ extension.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _pq_partial_stats(m, ks, sub, books, batches):
+    import numpy as np
+    import pandas as pd
+
+    # accumulate across the WHOLE partition's Arrow batches and
+    # emit once, like clustering.kmeans_fit: per-batch emission
+    # would scale collected rows with corpus size instead of
+    # partitions × m × ks
+    sums = np.zeros((m, ks, sub))
+    counts = np.zeros((m, ks), dtype=np.int64)
+    seen = False
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        seen = True
+        x = np.asarray(
+            [list(v) for v in pdf["__v"]], dtype=np.float64
+        )
+        for j in range(m):
+            xs = x[:, j * sub : (j + 1) * sub]
+            cj = books[j]
+            # argmin_c |x-c|² == argmin_c (|c|² - 2 x·c)
+            assign = (
+                (cj * cj).sum(axis=1) - 2.0 * (xs @ cj.T)
+            ).argmin(axis=1)
+            for c in np.unique(assign):
+                sel = xs[assign == c]
+                counts[j, c] += len(sel)
+                sums[j, c] += sel.sum(axis=0)
+    if seen:
+        out = {"subspace": [], "cluster": [], "cnt": [], "vsum": []}
+        for j, c in zip(*np.nonzero(counts)):
+            out["subspace"].append(int(j))
+            out["cluster"].append(int(c))
+            out["cnt"].append(int(counts[j, c]))
+            out["vsum"].append(sums[j, c].tolist())
+        yield pd.DataFrame(out)
 
 
 def pq_fit(
@@ -109,48 +150,9 @@ def pq_fit(
         books = np.stack([seeds[:, j * sub : (j + 1) * sub] for j in range(m)])
         stats_schema = "subspace int, cluster int, cnt long, vsum array<double>"
         for _ in range(max_iter):
-            bk = books  # capture the current value in the task closure
-
-            def partial_stats(batches):
-                import pandas as pd
-
-                # accumulate across the WHOLE partition's Arrow batches and
-                # emit once, like clustering.kmeans_fit: per-batch emission
-                # would scale collected rows with corpus size instead of
-                # partitions × m × ks (r10 review)
-                sums = np.zeros((m, ks, sub))
-                counts = np.zeros((m, ks), dtype=np.int64)
-                seen = False
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    seen = True
-                    x = np.asarray(
-                        [list(v) for v in pdf["__v"]], dtype=np.float64
-                    )
-                    for j in range(m):
-                        xs = x[:, j * sub : (j + 1) * sub]
-                        cj = bk[j]
-                        # argmin_c |x-c|² == argmin_c (|c|² - 2 x·c)
-                        assign = (
-                            (cj * cj).sum(axis=1) - 2.0 * (xs @ cj.T)
-                        ).argmin(axis=1)
-                        for c in np.unique(assign):
-                            sel = xs[assign == c]
-                            counts[j, c] += len(sel)
-                            sums[j, c] += sel.sum(axis=0)
-                if seen:
-                    out = {"subspace": [], "cluster": [], "cnt": [], "vsum": []}
-                    for j, c in zip(*np.nonzero(counts)):
-                        out["subspace"].append(int(j))
-                        out["cluster"].append(int(c))
-                        out["cnt"].append(int(counts[j, c]))
-                        out["vsum"].append(sums[j, c].tolist())
-                    yield pd.DataFrame(out)
-
             parts = (
                 base.select("__v")
-                .mapInPandas(partial_stats, schema=stats_schema)
+                .mapInPandas(partial(_pq_partial_stats, m, ks, sub, books), schema=stats_schema)
                 .collect()
             )
             sums = np.zeros((m, ks, sub))
@@ -168,6 +170,21 @@ def pq_fit(
     finally:
         base.unpersist()
     return [[c.tolist() for c in books[j]] for j in range(m)]
+
+
+def _pq_encode_batches(books, c_sqn, m, sub, out_col, batches):
+    import numpy as np
+    import pandas as pd
+
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        x = np.asarray([list(v) for v in pdf["__v"]], dtype=np.float64)
+        codes = np.empty((len(x), m), dtype=np.int64)
+        for j in range(m):
+            xs = x[:, j * sub : (j + 1) * sub]
+            codes[:, j] = (c_sqn[j] - 2.0 * (xs @ books[j].T)).argmin(axis=1)
+        yield pd.DataFrame({"__id": pdf["__id"], out_col: list(codes)})
 
 
 def pq_encode(
@@ -194,26 +211,13 @@ def pq_encode(
     m, _, sub = books.shape
     c_sqn = (books * books).sum(axis=2)  # (m, ks)
 
-    def encode(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.asarray([list(v) for v in pdf["__v"]], dtype=np.float64)
-            codes = np.empty((len(x), m), dtype=np.int64)
-            for j in range(m):
-                xs = x[:, j * sub : (j + 1) * sub]
-                codes[:, j] = (c_sqn[j] - 2.0 * (xs @ books[j].T)).argmin(axis=1)
-            yield pd.DataFrame({"__id": pdf["__id"], out_col: list(codes)})
-
     out_schema = f"__id long, {out_col} array<int>"
     return (
         df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
         # NULL vectors are unencodable — drop them JVM-side before the
         # Arrow stage (cosine()'s NULL convention; ADVICE r10)
         .where(F.col("__v").isNotNull())
-        .mapInPandas(encode, schema=out_schema)
+        .mapInPandas(partial(_pq_encode_batches, books, c_sqn, m, sub, out_col), schema=out_schema)
         .withColumnRenamed("__id", id_col)
     )
 

@@ -27,6 +27,8 @@ form of an otherwise "approximate → unverifiable" operator).
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -418,6 +420,41 @@ def lsh_bucket_topk(
     return scored.withColumn("rn", F.row_number().over(w).cast("long")).where(F.col("rn") <= k)
 
 
+def _score_batches(qm, qids, k, id_col, vec_col, query_id_col, batches):
+    import pandas as pd
+
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        keep = pdf[vec_col].notna()
+        if not keep.all():
+            pdf = pdf[keep]  # NULL corpus embeddings rank out
+            if not len(pdf):
+                continue
+        ids = pdf[id_col].to_numpy()
+        m = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
+        n = np.linalg.norm(m, axis=1)
+        n[n == 0] = 1.0
+        s = (m / n[:, None]) @ qm.T  # B×Q cosine matrix
+        # frame columns are NAMED from the caller's id columns —
+        # mapInPandas assigns by name, so hardcoded labels would
+        # break any non-default id_col/query_id_col
+        out = {query_id_col: [], id_col: [], "cos": []}
+        for j, qid in enumerate(qids):
+            col = s[:, j]
+            mask = ids != qid
+            # per-batch prune orders on (rounded score, id) like the
+            # final window — a raw-score prune could drop a candidate
+            # that ties on the rounded key but wins the id tie-break
+            order = np.lexsort((ids[mask], -round_half_up(col[mask])))[:k]
+            sel_ids = ids[mask][order]
+            sel_cos = col[mask][order]
+            out[query_id_col].extend([qid] * len(sel_ids))
+            out[id_col].extend(sel_ids.tolist())
+            out["cos"].extend(sel_cos.tolist())
+        yield pd.DataFrame(out)
+
+
 def brute_force_topk_arrow(
     corpus: DataFrame,
     queries: DataFrame,
@@ -455,47 +492,13 @@ def brute_force_topk_arrow(
     qn[qn == 0] = 1.0
     qm = qm / qn[:, None]
 
-    import pandas as pd
-    from typing import Iterator
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            keep = pdf[vec_col].notna()
-            if not keep.all():
-                pdf = pdf[keep]  # NULL corpus embeddings rank out
-                if not len(pdf):
-                    continue
-            ids = pdf[id_col].to_numpy()
-            m = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            n = np.linalg.norm(m, axis=1)
-            n[n == 0] = 1.0
-            s = (m / n[:, None]) @ qm.T  # B×Q cosine matrix
-            # frame columns are NAMED from the caller's id columns —
-            # mapInPandas assigns by name, so hardcoded labels would
-            # break any non-default id_col/query_id_col
-            out = {query_id_col: [], id_col: [], "cos": []}
-            for j, qid in enumerate(qids):
-                col = s[:, j]
-                mask = ids != qid
-                # per-batch prune orders on (rounded score, id) like the
-                # final window — a raw-score prune could drop a candidate
-                # that ties on the rounded key but wins the id tie-break
-                order = np.lexsort((ids[mask], -round_half_up(col[mask])))[:k]
-                sel_ids = ids[mask][order]
-                sel_cos = col[mask][order]
-                out[query_id_col].extend([qid] * len(sel_ids))
-                out[id_col].extend(sel_ids.tolist())
-                out["cos"].extend(sel_cos.tolist())
-            yield pd.DataFrame(out)
-
     # id types come from the actual input schemas (string ids are as
     # legitimate as longs for this operator)
     qid_t = queries.schema[query_id_col].dataType.simpleString()
     cid_t = corpus.schema[id_col].dataType.simpleString()
     cand = corpus.select(id_col, vec_col).mapInPandas(
-        score, schema=f"{query_id_col} {qid_t}, {id_col} {cid_t}, cos double"
+        partial(_score_batches, qm, qids, k, id_col, vec_col, query_id_col),
+        schema=f"{query_id_col} {qid_t}, {id_col} {cid_t}, cos double",
     )
     w = W.partitionBy(query_id_col).orderBy(_rank_key().desc(), F.col(id_col))
     return cand.withColumn("rn", F.row_number().over(w).cast("long")).where(F.col("rn") <= k)
@@ -529,6 +532,25 @@ def cosine_dup_pairs(
     )
 
 
+def _block_pairs(threshold, id_col, vec_col, pdf):
+    import pandas as pd
+
+    ids = pdf[id_col].to_numpy()
+    m = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
+    n = np.linalg.norm(m, axis=1)
+    n[n == 0] = 1.0
+    u = m / n[:, None]
+    s = u @ u.T
+    # membership on the rounded score, in lockstep with the JVM twin's
+    # _rank_key threshold (SCORE_DIGITS) — raw BLAS vs fold ulps must
+    # not decide boundary pairs, and the rounding MODE is half-up to
+    # match F.round/DuckDB (np.round's half-even flips exact halves)
+    ia, ib = np.where(np.triu(round_half_up(s) >= threshold, k=1))
+    lo = np.minimum(ids[ia], ids[ib])
+    hi = np.maximum(ids[ia], ids[ib])
+    return pd.DataFrame({"id_a": lo, "id_b": hi, "cos": s[ia, ib]})
+
+
 def cosine_dup_pairs_arrow(
     corpus: DataFrame,
     threshold: float = 0.4,
@@ -551,24 +573,6 @@ def cosine_dup_pairs_arrow(
 
     ensure_package_on_executors(corpus.sparkSession)
 
-    def block_pairs(pdf):
-        import pandas as pd
-
-        ids = pdf[id_col].to_numpy()
-        m = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
-        n = np.linalg.norm(m, axis=1)
-        n[n == 0] = 1.0
-        u = m / n[:, None]
-        s = u @ u.T
-        # membership on the rounded score, in lockstep with the JVM twin's
-        # _rank_key threshold (SCORE_DIGITS) — raw BLAS vs fold ulps must
-        # not decide boundary pairs, and the rounding MODE is half-up to
-        # match F.round/DuckDB (np.round's half-even flips exact halves)
-        ia, ib = np.where(np.triu(round_half_up(s) >= threshold, k=1))
-        lo = np.minimum(ids[ia], ids[ib])
-        hi = np.maximum(ids[ia], ids[ib])
-        return pd.DataFrame({"id_a": lo, "id_b": hi, "cos": s[ia, ib]})
-
     # NULL vectors drop JVM-side before the Arrow stage: the JVM twin
     # excludes them via a NULL cosine failing the threshold, and one
     # list(None) here would crash the whole block task (r11 review —
@@ -576,7 +580,10 @@ def cosine_dup_pairs_arrow(
     return (
         corpus.where(F.col(vec_col).isNotNull())
         .groupBy(block_col)
-        .applyInPandas(block_pairs, schema="id_a long, id_b long, cos double")
+        .applyInPandas(
+            partial(_block_pairs, threshold, id_col, vec_col),
+            schema="id_a long, id_b long, cos double",
+        )
     )
 
 
@@ -586,6 +593,19 @@ def projection_matrix(in_dim: int, out_dim: int, seed: int = 42) -> "np.ndarray"
     the very same matrix an executor regenerates from the seed."""
     rng = np.random.default_rng(seed)
     return (rng.standard_normal((out_dim, in_dim)) / np.sqrt(out_dim)).astype(np.float64)
+
+
+def _project_batches(R, out_cols, vec_col, out_col, batches):
+    import pandas as pd
+
+    for pdf in batches:
+        if not len(pdf):
+            continue
+        m = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
+        proj = m @ R.T
+        out = pdf[out_cols].copy()
+        out[out_col] = [row.tolist() for row in proj]
+        yield out
 
 
 def random_projection(
@@ -624,25 +644,15 @@ def random_projection(
     R = projection_matrix(in_dim, out_dim, seed)
     out_cols = [c for c in df.columns if keep_input or c != vec_col]
 
-    def project(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.asarray([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            proj = m @ R.T
-            out = pdf[out_cols].copy()
-            out[out_col] = [row.tolist() for row in proj]
-            yield out
-
     schema = ", ".join(
         [f"{f.name} {f.dataType.simpleString()}" for f in df.schema if f.name in out_cols]
         + [f"{out_col} array<double>"]
     )
     # NULL vectors are unprojectable — drop JVM-side (cosine()'s NULL
     # convention; one list(None) would crash the Arrow stage, r11 review)
-    return df.where(F.col(vec_col).isNotNull()).mapInPandas(project, schema=schema)
+    return df.where(F.col(vec_col).isNotNull()).mapInPandas(
+        partial(_project_batches, R, out_cols, vec_col, out_col), schema=schema
+    )
 
 
 def matryoshka_norm_profile(

@@ -10,13 +10,36 @@ and registers it with ``sc.addPyFile``, which distributes it and prepends
 it to every worker's sys.path — the same mechanism used to deploy any
 PySpark library to a cluster (and the Spark-native analog of the
 reference's Go-plugin UDF shipping, README.MD:82).
+
+Every task a warm Python worker runs starts with PySpark's
+``setup_spark_files``, which calls ``importlib.invalidate_caches()``.
+Before Python 3.12 (CPython gh-103200) that makes every cached
+``zipimporter`` re-read its archive's central directory: pyspark.zip,
+the spark-core jar and this package's zip, about 0.2 s of CPU per task
+whatever the task does. ``install_zip_directory_cache`` makes zip
+importers re-read an archive only when its file changed. The package's
+``__init__`` installs it in PySpark worker processes on Python < 3.12.
+
+That only helps a worker that imports this package. cloudpickle ships a
+nested ``def`` or lambda by value, so a worker that runs one never
+imports the package. Every function this package hands to
+``mapInPandas``, ``mapInArrow``, ``applyInPandas``,
+``applyInPandasWithState`` or ``pandas_udf`` is therefore module-level,
+or a ``functools.partial`` of a module-level function: both pickle by
+reference, and the worker imports the package to resolve them
+(tests/test_bench_tools.py guards this). The one exception is the
+``transformWithStateInPandas`` processor, which a driver-side runner
+without the shipped package also unpickles
+(``streaming.stateful._tws_session_processor``).
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import tempfile
 import zipfile
+import zipimport
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -56,3 +79,53 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
         raise
     sc.addPyFile(zip_path)
     setattr(sc, _FLAG, True)
+
+
+# archive path -> (st_dev, st_ino, st_size, st_mtime_ns) of the file when
+# its directory was last read into zipimport._zip_directory_cache; None
+# when it could not be stat'ed
+_DIRECTORY_READ_AT: dict[str, tuple[int, int, int, int] | None] = {}
+
+
+def _file_key(path: str) -> tuple[int, int, int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
+
+
+class _StatKeyedZipImporter(zipimport.zipimporter):
+    """A ``zipimporter`` whose ``invalidate_caches`` re-reads the
+    archive's directory only when the archive file changed."""
+
+    def invalidate_caches(self):
+        # stat before reading: a change that lands mid-read leaves an old
+        # key behind, so the next call reads again
+        key = _file_key(self.archive)
+        files = zipimport._zip_directory_cache.get(self.archive)
+        unchanged = key is not None and _DIRECTORY_READ_AT.get(self.archive) == key
+        if unchanged and files is not None:
+            self._files = files
+            return
+        super().invalidate_caches()
+        _DIRECTORY_READ_AT[self.archive] = key
+
+
+def install_zip_directory_cache() -> bool:
+    """Make zip importers re-read an archive only when its file changed.
+
+    New zip importers come from ``sys.path_hooks``; the ones already in
+    ``sys.path_importer_cache`` change class in place, so the loaders of
+    modules imported from a zip stay the instances that get refreshed.
+    No stdlib function or method is patched. A second call changes
+    nothing and returns False.
+    """
+    hooks = [_StatKeyedZipImporter if h is zipimport.zipimporter else h for h in sys.path_hooks]
+    changed = hooks != sys.path_hooks
+    sys.path_hooks[:] = hooks
+    for finder in list(sys.path_importer_cache.values()):
+        if type(finder) is zipimport.zipimporter:
+            finder.__class__ = _StatKeyedZipImporter
+            changed = True
+    return changed

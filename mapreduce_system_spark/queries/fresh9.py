@@ -144,6 +144,36 @@ def _gif_path(sf_name: str) -> str:
     return f"/tmp/spark_graft_gif_planes_{sf_name}"
 
 
+def _gif_blob_batches(batches):
+    import pandas as pd
+
+    for pdf in batches:
+        ids, blobs = [], []
+        for i in pdf["doc_id"]:
+            i = int(i)
+            w = 13 + (i % 5) * 7   # 13..41
+            h = 9 + (i % 4) * 5    # 9..24
+            n_colors = (3, 7, 16, 33, 64)[i % 5]
+            palette = [
+                (
+                    (37 * j + i) % 256,
+                    (11 * j + 3 * i + 101) % 256,
+                    (59 * j + 7 * i + 23) % 256,
+                )
+                for j in range(n_colors)
+            ]
+            pixels = [
+                [(x * (1 + i % 3) + y * (2 + i % 5) + i) % n_colors
+                 for x in range(w)]
+                for y in range(h)
+            ]
+            ids.append(i)
+            blobs.append(
+                MM.encode_image_gif(pixels, palette, interlace=(i % 3 == 0))
+            )
+        yield pd.DataFrame({"id": ids, "blob": blobs})
+
+
 def _synth_gif_blobs(docs: DataFrame) -> DataFrame:
     """(doc_id) → (id, blob): a doc_id-parameterized palette image,
     encoded as a real GIF89a. Palette sizes sweep non-powers-of-two
@@ -154,36 +184,7 @@ def _synth_gif_blobs(docs: DataFrame) -> DataFrame:
 
     ensure_package_on_executors(docs.sparkSession)
 
-    def synth(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w = 13 + (i % 5) * 7   # 13..41
-                h = 9 + (i % 4) * 5    # 9..24
-                n_colors = (3, 7, 16, 33, 64)[i % 5]
-                palette = [
-                    (
-                        (37 * j + i) % 256,
-                        (11 * j + 3 * i + 101) % 256,
-                        (59 * j + 7 * i + 23) % 256,
-                    )
-                    for j in range(n_colors)
-                ]
-                pixels = [
-                    [(x * (1 + i % 3) + y * (2 + i % 5) + i) % n_colors
-                     for x in range(w)]
-                    for y in range(h)
-                ]
-                ids.append(i)
-                blobs.append(
-                    MM.encode_image_gif(pixels, palette, interlace=(i % 3 == 0))
-                )
-            yield pd.DataFrame({"id": ids, "blob": blobs})
-
-    return docs.select("doc_id").mapInPandas(synth, schema="id long, blob binary")
+    return docs.select("doc_id").mapInPandas(_gif_blob_batches, schema="id long, blob binary")
 
 
 # Stats are re-derived from the exported planes on both sides: per-pixel

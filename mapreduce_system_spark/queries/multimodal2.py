@@ -31,6 +31,26 @@ def _rgb_path(sf_name: str) -> str:
     return f"/tmp/spark_graft_rgb_planes_{sf_name}"
 
 
+def _jpeg_blob_batches(batches):
+    import numpy as np
+    import pandas as pd
+
+    for pdf in batches:
+        ids, blobs = [], []
+        for i in pdf["doc_id"]:
+            i = int(i)
+            w = 16 + (i % 3) * 4   # 16 / 20 / 24
+            h = 12 + (i % 2) * 9   # 12 / 21
+            yy, xx = np.mgrid[0:h, 0:w]
+            r = (yy * (3 + i % 5) + xx * (1 + i % 7) + i) % 256
+            g = (yy * 2 + xx * 11 + i * 13) % 256
+            b = (255 - yy * 5 - xx * 3 + i * 29) % 256
+            rgb = np.stack([r, g, b], axis=2).astype(np.uint8)
+            ids.append(i)
+            blobs.append(MM.encode_image_jpeg_baseline(rgb, subsampling=(2, 2)))
+        yield pd.DataFrame({"id": ids, "blob": blobs})
+
+
 def _synth_jpeg_blobs(docs: DataFrame) -> DataFrame:
     """(doc_id) → (id, blob): a doc_id-parameterized RGB gradient,
     encoded as a real 4:2:0 baseline JPEG. Sizes cycle through
@@ -39,26 +59,7 @@ def _synth_jpeg_blobs(docs: DataFrame) -> DataFrame:
 
     ensure_package_on_executors(docs.sparkSession)
 
-    def synth(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            ids, blobs = [], []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                w = 16 + (i % 3) * 4   # 16 / 20 / 24
-                h = 12 + (i % 2) * 9   # 12 / 21
-                yy, xx = np.mgrid[0:h, 0:w]
-                r = (yy * (3 + i % 5) + xx * (1 + i % 7) + i) % 256
-                g = (yy * 2 + xx * 11 + i * 13) % 256
-                b = (255 - yy * 5 - xx * 3 + i * 29) % 256
-                rgb = np.stack([r, g, b], axis=2).astype(np.uint8)
-                ids.append(i)
-                blobs.append(MM.encode_image_jpeg_baseline(rgb, subsampling=(2, 2)))
-            yield pd.DataFrame({"id": ids, "blob": blobs})
-
-    return docs.select("doc_id").mapInPandas(synth, schema="id long, blob binary")
+    return docs.select("doc_id").mapInPandas(_jpeg_blob_batches, schema="id long, blob binary")
 
 
 # Stats are re-derived from the exported planes on both sides: channel

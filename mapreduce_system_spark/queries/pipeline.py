@@ -246,6 +246,21 @@ ORDER BY l_returnflag
 """
 
 
+def _zscore(pdf):
+    v = pdf["l_extendedprice"]
+    sd = v.std(ddof=1)
+    # degenerate-group guard: a single-row group
+    # has sd = NaN and a constant group sd = 0 — pandas would emit
+    # NaN z-scores while the SQL oracle's stddev_samp/NULL division
+    # yields NULL (aggregates then skip the rows). Emit None to pin
+    # both engines to the same NULL answer.
+    if sd != sd or sd == 0:
+        pdf = pdf.assign(z=None)
+    else:
+        pdf = pdf.assign(z=(v - v.mean()) / sd)
+    return pdf[["l_returnflag", "z"]]
+
+
 @register("udf_grouped_map_zscore", _ZSCORE_SQL)
 def q_grouped_map_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group z-score normalization through a GROUPED_MAP pandas
@@ -265,21 +280,7 @@ def q_grouped_map_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_package_on_executors(spark)
     li = load_table(spark, sf_dir, "lineitem", columns=["l_returnflag", "l_extendedprice"])
 
-    def zscore(pdf):
-        v = pdf["l_extendedprice"]
-        sd = v.std(ddof=1)
-        # degenerate-group guard (ADVICE-r8 class): a single-row group
-        # has sd = NaN and a constant group sd = 0 — pandas would emit
-        # NaN z-scores while the SQL oracle's stddev_samp/NULL division
-        # yields NULL (aggregates then skip the rows). Emit None to pin
-        # both engines to the same NULL answer.
-        if sd != sd or sd == 0:
-            pdf = pdf.assign(z=None)
-        else:
-            pdf = pdf.assign(z=(v - v.mean()) / sd)
-        return pdf[["l_returnflag", "z"]]
-
-    z = li.groupBy("l_returnflag").applyInPandas(zscore, schema="l_returnflag string, z double")
+    z = li.groupBy("l_returnflag").applyInPandas(_zscore, schema="l_returnflag string, z double")
     return (
         z.groupBy("l_returnflag")
         .agg(

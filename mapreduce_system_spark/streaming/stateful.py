@@ -33,6 +33,7 @@ a bounded key slice.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator
 
 import pandas as pd
@@ -92,62 +93,61 @@ SESSION_OUTPUT_SCHEMA = "user_id long, session_start long, n_events long, dur_s 
 SESSION_STATE_SCHEMA = "start_es long, last_es long, n long"
 
 
-def _make_session_updater(gap_s: int):
-    def update(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        closed: list[tuple] = []
-        if state.hasTimedOut:
-            # watermark passed last_es + gap with no new events: the open
-            # session can never be extended — emit and evict. THIS is the
-            # state bound: idle keys leave the store instead of living
-            # forever (the running-totals demo's deliberate contrast).
-            s, l, n = state.get
-            closed.append((user_id, s, n, l - s))
-            state.remove()
-        else:
-            # Interval-merge sweep: the restored open session is an
-            # INTERVAL, not a point, so it enters the sorted sweep as
-            # (start, last, n) alongside the batch's single-event
-            # intervals. A point-vs-state loop would mishandle an
-            # admitted late event that precedes the open session by MORE
-            # than the gap (legal when the watermark delay exceeds the
-            # gap): min(s, es) used to merge it, fabricating one session
-            # spanning a silent gap — the sweep instead closes it as its
-            # own earlier session. Exactly-gap-sized intervals still
-            # merge (the session_window contract), and in-order replay
-            # reduces to the plain append path.
-            items: list[tuple[int, int, int]] = []
-            for pdf in pdfs:
-                items.extend((int(x), int(x), 1) for x in pdf["es"])
-            if state.exists:
-                items.append(tuple(state.get))
-            items.sort()
-            s, l, n = None, None, 0
-            for a, b, k in items:
-                if s is None:
-                    s, l, n = a, b, k
-                elif a - l > gap_s:
-                    closed.append((user_id, s, n, l - s))
-                    s, l, n = a, b, k
-                else:
-                    l, n = max(l, b), n + k
-            state.update((s, l, n))
-            # fire strictly after watermark passes last_es + gap: an event
-            # at exactly last_es + gap still merges, so the timer sits at
-            # +500 ms — past every merge-eligible instant, before the next
-            # whole second a new-session event could occupy
-            state.setTimeoutTimestamp((l + gap_s) * 1000 + 500)
-        if closed:  # most calls close nothing — skip the empty Arrow batch
-            yield pd.DataFrame(
-                {
-                    "user_id": [r[0] for r in closed],
-                    "session_start": [r[1] for r in closed],
-                    "n_events": [r[2] for r in closed],
-                    "dur_s": [r[3] for r in closed],
-                }
-            )
-
-    return update
+def _update_session(
+    gap_s: int, key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
+) -> Iterator[pd.DataFrame]:
+    (user_id,) = key
+    closed: list[tuple] = []
+    if state.hasTimedOut:
+        # watermark passed last_es + gap with no new events: the open
+        # session can never be extended — emit and evict. THIS is the
+        # state bound: idle keys leave the store instead of living
+        # forever (the running-totals demo's deliberate contrast).
+        s, l, n = state.get
+        closed.append((user_id, s, n, l - s))
+        state.remove()
+    else:
+        # Interval-merge sweep: the restored open session is an
+        # INTERVAL, not a point, so it enters the sorted sweep as
+        # (start, last, n) alongside the batch's single-event
+        # intervals. A point-vs-state loop would mishandle an
+        # admitted late event that precedes the open session by MORE
+        # than the gap (legal when the watermark delay exceeds the
+        # gap): min(s, es) used to merge it, fabricating one session
+        # spanning a silent gap — the sweep instead closes it as its
+        # own earlier session. Exactly-gap-sized intervals still
+        # merge (the session_window contract), and in-order replay
+        # reduces to the plain append path.
+        items: list[tuple[int, int, int]] = []
+        for pdf in pdfs:
+            items.extend((int(x), int(x), 1) for x in pdf["es"])
+        if state.exists:
+            items.append(tuple(state.get))
+        items.sort()
+        s, l, n = None, None, 0
+        for a, b, k in items:
+            if s is None:
+                s, l, n = a, b, k
+            elif a - l > gap_s:
+                closed.append((user_id, s, n, l - s))
+                s, l, n = a, b, k
+            else:
+                l, n = max(l, b), n + k
+        state.update((s, l, n))
+        # fire strictly after watermark passes last_es + gap: an event
+        # at exactly last_es + gap still merges, so the timer sits at
+        # +500 ms — past every merge-eligible instant, before the next
+        # whole second a new-session event could occupy
+        state.setTimeoutTimestamp((l + gap_s) * 1000 + 500)
+    if closed:  # most calls close nothing — skip the empty Arrow batch
+        yield pd.DataFrame(
+            {
+                "user_id": [r[0] for r in closed],
+                "session_start": [r[1] for r in closed],
+                "n_events": [r[2] for r in closed],
+                "dur_s": [r[3] for r in closed],
+            }
+        )
 
 
 def user_sessions_stateful(events: DataFrame, gap_s: int = 1800) -> DataFrame:
@@ -175,7 +175,7 @@ def user_sessions_stateful(events: DataFrame, gap_s: int = 1800) -> DataFrame:
 
     ensure_package_on_executors(events.sparkSession)
     return events.groupBy("user_id").applyInPandasWithState(
-        _make_session_updater(gap_s),
+        partial(_update_session, gap_s),
         outputStructType=SESSION_OUTPUT_SCHEMA,
         stateStructType=SESSION_STATE_SCHEMA,
         outputMode="append",
@@ -188,10 +188,13 @@ def user_sessions_stateful(events: DataFrame, gap_s: int = 1800) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _tws_session_processor(gap_s: int):
-    """Build the StatefulProcessor class lazily: importing
-    ``pyspark.sql.streaming.stateful_processor`` is cheap, but keeping
-    the subclass inside a factory mirrors the GST updater factory and
-    keeps the gap a constructor argument rather than module state."""
+    """Build the StatefulProcessor class inside a factory, so that it
+    pickles by value. Unlike every other worker function in the package
+    (see ``pyfiles``), a TWS processor is also unpickled by PySpark's
+    driver-side runner (``transform_with_state_driver_worker``), which
+    never adds the shipped package to its path: a module-level class
+    fails there with ``ModuleNotFoundError`` unless the driver's working
+    directory happens to hold the package."""
     from pyspark.sql.streaming.stateful_processor import (
         StatefulProcessor,
         StatefulProcessorHandle,
@@ -199,7 +202,7 @@ def _tws_session_processor(gap_s: int):
 
     class SessionProcessor(StatefulProcessor):
         """Sessionization on the modern typed-state API — the semantics
-        of ``_make_session_updater`` re-expressed with explicit state
+        of ``_update_session`` re-expressed with explicit state
         variables and TIMERS instead of GroupStateTimeout:
 
         - one ValueState ("open") holds the open session interval

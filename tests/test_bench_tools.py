@@ -128,6 +128,69 @@ def test_tools_import_no_private_names_from_queries():
     assert not offenders, offenders
 
 
+# transformWithStateInPandas is left out on purpose: PySpark's driver-side
+# TWS runner unpickles the processor without the shipped package, so it
+# must ship by value (tests/test_pyfiles.py pins that).
+_WORKER_APIS = {
+    "mapInPandas",
+    "mapInArrow",
+    "applyInPandas",
+    "applyInPandasWithState",
+    "pandas_udf",
+}
+
+
+def _callee_name(func: ast.expr) -> str | None:
+    if isinstance(func, ast.Attribute):
+        return func.attr
+    if isinstance(func, ast.Name):
+        return func.id
+    return None
+
+
+def test_worker_functions_are_importable():
+    """Every function the package hands to a Python-worker API pickles by
+    reference, so the worker imports the package (and its zip directory
+    cache, see pyfiles): the first argument is a module-level name or a
+    ``functools.partial`` of one — never a nested ``def``, a lambda or a
+    factory's closure."""
+    offenders = []
+    for path in sorted((REPO / "mapreduce_system_spark").rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        where = f"{path.relative_to(REPO)}"
+        top: set[str] = set()
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                top.add(node.name)
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                top |= {(a.asname or a.name).split(".")[0] for a in node.names}
+
+        def importable(arg: ast.expr) -> bool:
+            if isinstance(arg, ast.Call) and _callee_name(arg.func) == "partial":
+                arg = arg.args[0] if arg.args else arg
+            return isinstance(arg, ast.Name) and arg.id in top
+
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)) and node not in tree.body:
+                for dec in node.decorator_list:
+                    target = dec.func if isinstance(dec, ast.Call) else dec
+                    if _callee_name(target) == "pandas_udf":
+                        offenders.append(f"{where}:{node.lineno} @pandas_udf on nested {node.name}")
+            if not isinstance(node, ast.Call):
+                continue
+            api = _callee_name(node.func)
+            if isinstance(node.func, ast.Call) and _callee_name(node.func.func) == "pandas_udf":
+                api = "pandas_udf"  # pandas_udf("type")(fn)
+            elif api not in _WORKER_APIS:
+                continue
+            args = node.args or [k.value for k in node.keywords if k.arg in ("f", "func")]
+            if not args or (api == "pandas_udf" and isinstance(args[0], ast.Constant)):
+                continue  # the decorator form, checked on the def above
+            if not importable(args[0]):
+                offenders.append(f"{where}:{node.lineno} {api}({ast.unparse(args[0])})")
+    assert not offenders, offenders
+
+
 def _stub_tree(root: Path, name: str, walls: list[float], verify_rc: int = 0) -> Path:
     """A checkout whose bench.py prints the next of ``walls`` and whose
     tools/verify_local.py exits ``verify_rc``; both log to root/log."""

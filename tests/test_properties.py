@@ -285,6 +285,7 @@ def test_event_queries_match_oracle_on_random_corpora(spark, rows):
     (NULL keys/types/values, timestamp ties, malformed JSON, empty
     corpus). event_id is the enumeration index, so every tie-break the
     queries rely on stays unique — exactly the fixture contract."""
+    import shutil
     import tempfile
 
     import mapreduce_system_spark.queries  # noqa: F401
@@ -292,24 +293,27 @@ def test_event_queries_match_oracle_on_random_corpora(spark, rows):
 
     s = _get_spark(spark)
     d = tempfile.mkdtemp(prefix="fuzz_events_")
-    data = [
-        Row(event_id=i, ts=ts, user_id=u, event_type=et, value=v, props=p)
-        for i, (ts, u, et, v, p) in enumerate(rows, start=1)
-    ]
-    s.createDataFrame(
-        data,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    ).write.mode("overwrite").parquet(f"{d}/events.parquet")
-    con = _duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM "
-        f"read_parquet('{d}/events.parquet/*.parquet')"
-    )
-    for name in _FUZZ_QUERIES:
-        got = sorted(repr(tuple(r)) for r in QUERIES[name](s, d).collect())
-        want = sorted(repr(tuple(r)) for r in con.execute(ORACLE_SQL[name]).fetchall())
-        assert got == want, (name, rows, got[:4], want[:4])
+    try:
+        data = [
+            Row(event_id=i, ts=ts, user_id=u, event_type=et, value=v, props=p)
+            for i, (ts, u, et, v, p) in enumerate(rows, start=1)
+        ]
+        s.createDataFrame(
+            data,
+            "event_id long, ts timestamp, user_id long, event_type string, "
+            "value double, props string",
+        ).write.mode("overwrite").parquet(f"{d}/events.parquet")
+        con = _duckdb.connect()
+        con.execute(
+            "CREATE VIEW events AS SELECT * FROM "
+            f"read_parquet('{d}/events.parquet/*.parquet')"
+        )
+        for name in _FUZZ_QUERIES:
+            got = sorted(repr(tuple(r)) for r in QUERIES[name](s, d).collect())
+            want = sorted(repr(tuple(r)) for r in con.execute(ORACLE_SQL[name]).fetchall())
+            assert got == want, (name, rows, got[:4], want[:4])
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 _LI_ROW = st.tuples(
@@ -334,6 +338,7 @@ def test_rank_family_matches_oracle_on_random_corpora(spark, rows):
     values on rank boundaries, extreme magnitudes, empty corpus — the
     exact classes behind this round's eqNullSafe and all-NULL-group
     fixes, re-proved continuously instead of on one crafted corpus."""
+    import shutil
     import tempfile
 
     import mapreduce_system_spark.queries  # noqa: F401
@@ -341,31 +346,34 @@ def test_rank_family_matches_oracle_on_random_corpora(spark, rows):
 
     s = _get_spark(spark)
     d = tempfile.mkdtemp(prefix="fuzz_li_")
-    data = [
-        Row(
-            l_orderkey=i, l_partkey=i % 5, l_suppkey=i % 3, l_linenumber=1,
-            l_quantity=q, l_extendedprice=px, l_discount=0.05, l_tax=0.02,
-            l_returnflag=fl, l_linestatus="F",
-            l_shipdate=_dt.datetime(2024, 3, 1 + (i % 20)),
+    try:
+        data = [
+            Row(
+                l_orderkey=i, l_partkey=i % 5, l_suppkey=i % 3, l_linenumber=1,
+                l_quantity=q, l_extendedprice=px, l_discount=0.05, l_tax=0.02,
+                l_returnflag=fl, l_linestatus="F",
+                l_shipdate=_dt.datetime(2024, 3, 1 + (i % 20)),
+            )
+            for i, (fl, px, q) in enumerate(rows, start=1)
+        ]
+        s.createDataFrame(
+            data,
+            "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
+            "l_quantity double, l_extendedprice double, l_discount double, "
+            "l_tax double, l_returnflag string, l_linestatus string, "
+            "l_shipdate timestamp",
+        ).write.mode("overwrite").parquet(f"{d}/lineitem.parquet")
+        con = _duckdb.connect()
+        con.execute(
+            "CREATE VIEW lineitem AS SELECT * FROM "
+            f"read_parquet('{d}/lineitem.parquet/*.parquet')"
         )
-        for i, (fl, px, q) in enumerate(rows, start=1)
-    ]
-    s.createDataFrame(
-        data,
-        "l_orderkey long, l_partkey long, l_suppkey long, l_linenumber int, "
-        "l_quantity double, l_extendedprice double, l_discount double, "
-        "l_tax double, l_returnflag string, l_linestatus string, "
-        "l_shipdate timestamp",
-    ).write.mode("overwrite").parquet(f"{d}/lineitem.parquet")
-    con = _duckdb.connect()
-    con.execute(
-        "CREATE VIEW lineitem AS SELECT * FROM "
-        f"read_parquet('{d}/lineitem.parquet/*.parquet')"
-    )
-    for name in _LI_FUZZ_QUERIES:
-        got = sorted(repr(tuple(r)) for r in QUERIES[name](s, d).collect())
-        want = sorted(repr(tuple(r)) for r in con.execute(ORACLE_SQL[name]).fetchall())
-        assert got == want, (name, rows, got[:4], want[:4])
+        for name in _LI_FUZZ_QUERIES:
+            got = sorted(repr(tuple(r)) for r in QUERIES[name](s, d).collect())
+            want = sorted(repr(tuple(r)) for r in con.execute(ORACLE_SQL[name]).fetchall())
+            assert got == want, (name, rows, got[:4], want[:4])
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 # risky codepoints: sharp s, final sigma, capital sigma, combining
@@ -402,6 +410,7 @@ def test_text_queries_match_oracle_on_random_unicode_corpora(spark, texts):
     combining accents, ZWJ/NBSP, CJK, emoji, NULL/empty texts) must
     hash-match the registered oracles for the tokenize/fingerprint
     family — the Java-vs-RE2/ICU class, fuzzed instead of enumerated."""
+    import shutil
     import tempfile
 
     import mapreduce_system_spark.queries  # noqa: F401
@@ -409,28 +418,31 @@ def test_text_queries_match_oracle_on_random_unicode_corpora(spark, texts):
 
     s = _get_spark(spark)
     d = tempfile.mkdtemp(prefix="fuzz_docs_")
-    data = [
-        Row(
-            doc_id=i,
-            text=t,
-            lang=("en" if i % 2 else "de"),
-            source=f"src{i % 3}",
-            n_chars=(len(t) if t is not None else 0),
+    try:
+        data = [
+            Row(
+                doc_id=i,
+                text=t,
+                lang=("en" if i % 2 else "de"),
+                source=f"src{i % 3}",
+                n_chars=(len(t) if t is not None else 0),
+            )
+            for i, t in enumerate(texts)
+        ]
+        s.createDataFrame(
+            data, "doc_id long, text string, lang string, source string, n_chars long"
+        ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
+        con = _duckdb.connect()
+        con.execute(
+            "CREATE VIEW documents AS SELECT * FROM "
+            f"read_parquet('{d}/documents.parquet/*.parquet')"
         )
-        for i, t in enumerate(texts)
-    ]
-    s.createDataFrame(
-        data, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.mode("overwrite").parquet(f"{d}/documents.parquet")
-    con = _duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{d}/documents.parquet/*.parquet')"
-    )
-    for name in _DOC_FUZZ_QUERIES:
-        got = sorted(repr(tuple(r)) for r in QUERIES[name](s, d).collect())
-        want = sorted(repr(tuple(r)) for r in con.execute(ORACLE_SQL[name]).fetchall())
-        assert got == want, (name, texts, got[:4], want[:4])
+        for name in _DOC_FUZZ_QUERIES:
+            got = sorted(repr(tuple(r)) for r in QUERIES[name](s, d).collect())
+            want = sorted(repr(tuple(r)) for r in con.execute(ORACLE_SQL[name]).fetchall())
+            assert got == want, (name, texts, got[:4], want[:4])
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def test_dotted_capital_i_is_the_documented_lower_divergence(spark):
@@ -505,6 +517,7 @@ def test_embedding_queries_match_oracle_on_random_corpora(spark, vecs):
     antipodal/duplicate rows, mixed magnitudes — all on the exact grid)
     must hash-match the registered oracles for the embedding-statistics
     and PCA family."""
+    import shutil
     import tempfile
 
     import mapreduce_system_spark.queries  # noqa: F401
@@ -512,30 +525,33 @@ def test_embedding_queries_match_oracle_on_random_corpora(spark, vecs):
 
     s = _get_spark(spark)
     d = tempfile.mkdtemp(prefix="fuzz_emb_")
-    data = [
-        Row(vec_id=i, embedding=v, label=i % 3)
-        for i, v in enumerate(vecs)
-    ]
-    s.createDataFrame(
-        data, "vec_id long, embedding array<float>, label int"
-    ).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
-    con = _duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{d}/embeddings.parquet/*.parquet')"
-    )
-    no_vectors = not any(v is not None for v in vecs)
-    for name in _EMB_FUZZ_QUERIES:
-        if name == "emb_pca_topk_deflation" and no_vectors:
-            # pca_topk's documented contract: a corpus with no vector
-            # components raises loudly instead of emitting directions
-            # (operators/pca.py) — pin the contract, skip the compare
-            with pytest.raises(Exception, match="no vector components"):
-                QUERIES[name](s, d).collect()
-            continue
-        got = sorted(repr(tuple(r)) for r in QUERIES[name](s, d).collect())
-        want = sorted(repr(tuple(r)) for r in con.execute(ORACLE_SQL[name]).fetchall())
-        assert got == want, (name, vecs, got[:4], want[:4])
+    try:
+        data = [
+            Row(vec_id=i, embedding=v, label=i % 3)
+            for i, v in enumerate(vecs)
+        ]
+        s.createDataFrame(
+            data, "vec_id long, embedding array<float>, label int"
+        ).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
+        con = _duckdb.connect()
+        con.execute(
+            "CREATE VIEW embeddings AS SELECT * FROM "
+            f"read_parquet('{d}/embeddings.parquet/*.parquet')"
+        )
+        no_vectors = not any(v is not None for v in vecs)
+        for name in _EMB_FUZZ_QUERIES:
+            if name == "emb_pca_topk_deflation" and no_vectors:
+                # pca_topk's documented contract: a corpus with no vector
+                # components raises loudly instead of emitting directions
+                # (operators/pca.py) — pin the contract, skip the compare
+                with pytest.raises(Exception, match="no vector components"):
+                    QUERIES[name](s, d).collect()
+                continue
+            got = sorted(repr(tuple(r)) for r in QUERIES[name](s, d).collect())
+            want = sorted(repr(tuple(r)) for r in con.execute(ORACLE_SQL[name]).fetchall())
+            assert got == want, (name, vecs, got[:4], want[:4])
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 _ORDER_ROW = st.tuples(
@@ -576,6 +592,7 @@ def test_window_rank_queries_match_oracle_on_random_corpora(spark, rows, cust):
     pin class), NULL measures on rank boundaries, duplicate
     dates/prices/balances on tie-breaks, empty corpus. The enumeration
     index keys keep every deterministic tie-break unique."""
+    import shutil
     import tempfile
 
     import mapreduce_system_spark.queries  # noqa: F401
@@ -583,36 +600,39 @@ def test_window_rank_queries_match_oracle_on_random_corpora(spark, rows, cust):
 
     s = _get_spark(spark)
     d = tempfile.mkdtemp(prefix="fuzz_ord_")
-    data = [
-        Row(o_orderkey=i, o_custkey=c, o_orderstatus="O",
-            o_totalprice=p, o_orderdate=dt_, o_orderpriority=pr)
-        for i, (c, p, dt_, pr) in enumerate(rows, start=1)
-    ]
-    s.createDataFrame(
-        data,
-        "o_orderkey long, o_custkey long, o_orderstatus string, "
-        "o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(f"{d}/orders.parquet")
-    cdata = [
-        Row(c_custkey=i, c_name=f"c{i}", c_nationkey=nk, c_acctbal=ab,
-            c_mktsegment=seg)
-        for i, (nk, ab, seg) in enumerate(cust, start=1)
-    ]
-    s.createDataFrame(
-        cdata,
-        "c_custkey long, c_name string, c_nationkey int, c_acctbal double, "
-        "c_mktsegment string",
-    ).write.mode("overwrite").parquet(f"{d}/customer.parquet")
-    con = _duckdb.connect()
-    for t in ("orders", "customer"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{d}/{t}.parquet/*.parquet')"
-        )
-    for name in _ORD_FUZZ_QUERIES:
-        got = sorted(repr(tuple(r)) for r in QUERIES[name](s, d).collect())
-        want = sorted(repr(tuple(r)) for r in con.execute(ORACLE_SQL[name]).fetchall())
-        assert got == want, (name, rows, got[:4], want[:4])
+    try:
+        data = [
+            Row(o_orderkey=i, o_custkey=c, o_orderstatus="O",
+                o_totalprice=p, o_orderdate=dt_, o_orderpriority=pr)
+            for i, (c, p, dt_, pr) in enumerate(rows, start=1)
+        ]
+        s.createDataFrame(
+            data,
+            "o_orderkey long, o_custkey long, o_orderstatus string, "
+            "o_totalprice double, o_orderdate timestamp, o_orderpriority string",
+        ).write.mode("overwrite").parquet(f"{d}/orders.parquet")
+        cdata = [
+            Row(c_custkey=i, c_name=f"c{i}", c_nationkey=nk, c_acctbal=ab,
+                c_mktsegment=seg)
+            for i, (nk, ab, seg) in enumerate(cust, start=1)
+        ]
+        s.createDataFrame(
+            cdata,
+            "c_custkey long, c_name string, c_nationkey int, c_acctbal double, "
+            "c_mktsegment string",
+        ).write.mode("overwrite").parquet(f"{d}/customer.parquet")
+        con = _duckdb.connect()
+        for t in ("orders", "customer"):
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM "
+                f"read_parquet('{d}/{t}.parquet/*.parquet')"
+            )
+        for name in _ORD_FUZZ_QUERIES:
+            got = sorted(repr(tuple(r)) for r in QUERIES[name](s, d).collect())
+            want = sorted(repr(tuple(r)) for r in con.execute(ORACLE_SQL[name]).fetchall())
+            assert got == want, (name, rows, got[:4], want[:4])
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 _ASOF_EVENT = st.tuples(
@@ -649,6 +669,7 @@ def test_asof_queries_match_native_asof_on_random_corpora(spark, evs, ords):
     NULL keys, NULL/duplicate timestamps on the boundary, equal-time
     matches, and users with no history. The salted rewrite rides the
     same oracle, so its semantic invisibility is fuzzed too."""
+    import shutil
     import tempfile
 
     import mapreduce_system_spark.queries  # noqa: F401
@@ -656,36 +677,39 @@ def test_asof_queries_match_native_asof_on_random_corpora(spark, evs, ords):
 
     s = _get_spark(spark)
     d = tempfile.mkdtemp(prefix="fuzz_asof_")
-    edata = [
-        Row(event_id=i, ts=ts, user_id=u, event_type="open",
-            value=1.0, props=None)
-        for i, (ts, u) in enumerate(evs, start=1)
-    ]
-    s.createDataFrame(
-        edata,
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string",
-    ).write.mode("overwrite").parquet(f"{d}/events.parquet")
-    odata = [
-        Row(o_orderkey=i, o_custkey=c, o_orderstatus="O",
-            o_totalprice=p, o_orderdate=dt_, o_orderpriority="1-URGENT")
-        for i, (c, dt_, p) in enumerate(ords, start=1)
-    ]
-    s.createDataFrame(
-        odata,
-        "o_orderkey long, o_custkey long, o_orderstatus string, "
-        "o_totalprice double, o_orderdate timestamp, o_orderpriority string",
-    ).write.mode("overwrite").parquet(f"{d}/orders.parquet")
-    con = _duckdb.connect()
-    for t in ("events", "orders"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{d}/{t}.parquet/*.parquet')"
-        )
-    for name in _ASOF_FUZZ_QUERIES:
-        got = sorted(repr(tuple(r)) for r in QUERIES[name](s, d).collect())
-        want = sorted(repr(tuple(r)) for r in con.execute(ORACLE_SQL[name]).fetchall())
-        assert got == want, (name, evs, ords, got[:4], want[:4])
+    try:
+        edata = [
+            Row(event_id=i, ts=ts, user_id=u, event_type="open",
+                value=1.0, props=None)
+            for i, (ts, u) in enumerate(evs, start=1)
+        ]
+        s.createDataFrame(
+            edata,
+            "event_id long, ts timestamp, user_id long, event_type string, "
+            "value double, props string",
+        ).write.mode("overwrite").parquet(f"{d}/events.parquet")
+        odata = [
+            Row(o_orderkey=i, o_custkey=c, o_orderstatus="O",
+                o_totalprice=p, o_orderdate=dt_, o_orderpriority="1-URGENT")
+            for i, (c, dt_, p) in enumerate(ords, start=1)
+        ]
+        s.createDataFrame(
+            odata,
+            "o_orderkey long, o_custkey long, o_orderstatus string, "
+            "o_totalprice double, o_orderdate timestamp, o_orderpriority string",
+        ).write.mode("overwrite").parquet(f"{d}/orders.parquet")
+        con = _duckdb.connect()
+        for t in ("events", "orders"):
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM "
+                f"read_parquet('{d}/{t}.parquet/*.parquet')"
+            )
+        for name in _ASOF_FUZZ_QUERIES:
+            got = sorted(repr(tuple(r)) for r in QUERIES[name](s, d).collect())
+            want = sorted(repr(tuple(r)) for r in con.execute(ORACLE_SQL[name]).fetchall())
+            assert got == want, (name, evs, ords, got[:4], want[:4])
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -739,6 +763,7 @@ def test_graph_queries_match_oracle_on_random_graphs(spark, ocust, li, segs, sna
     query's documented contract — an empty effective seed cohort raises
     instead of dividing by zero — is pinned on exactly the corpora that
     produce it."""
+    import shutil
     import tempfile
 
     import mapreduce_system_spark.queries  # noqa: F401
@@ -746,62 +771,65 @@ def test_graph_queries_match_oracle_on_random_graphs(spark, ocust, li, segs, sna
 
     s = _get_spark(spark)
     d = tempfile.mkdtemp(prefix="fuzz_graph_")
-    s.createDataFrame(
-        [Row(o_orderkey=i, o_custkey=c) for i, c in enumerate(ocust, start=1)],
-        "o_orderkey long, o_custkey long",
-    ).write.mode("overwrite").parquet(f"{d}/orders.parquet")
-    s.createDataFrame(
-        [
-            Row(l_orderkey=ok, l_suppkey=sk, l_partkey=pk, l_quantity=q)
-            for ok, sk, pk, q in li
-        ],
-        "l_orderkey long, l_suppkey long, l_partkey long, l_quantity double",
-    ).write.mode("overwrite").parquet(f"{d}/lineitem.parquet")
-    s.createDataFrame(
-        [Row(c_custkey=i, c_mktsegment=seg) for i, seg in enumerate(segs, start=1)],
-        "c_custkey long, c_mktsegment string",
-    ).write.mode("overwrite").parquet(f"{d}/customer.parquet")
-    s.createDataFrame(
-        [Row(s_suppkey=i, s_nationkey=nk) for i, nk in enumerate(snat, start=1)],
-        "s_suppkey long, s_nationkey int",
-    ).write.mode("overwrite").parquet(f"{d}/supplier.parquet")
-    s.createDataFrame(
-        [Row(n_nationkey=0, n_name="NATION_0"), Row(n_nationkey=1, n_name="NATION_1")],
-        "n_nationkey int, n_name string",
-    ).write.mode("overwrite").parquet(f"{d}/nation.parquet")
+    try:
+        s.createDataFrame(
+            [Row(o_orderkey=i, o_custkey=c) for i, c in enumerate(ocust, start=1)],
+            "o_orderkey long, o_custkey long",
+        ).write.mode("overwrite").parquet(f"{d}/orders.parquet")
+        s.createDataFrame(
+            [
+                Row(l_orderkey=ok, l_suppkey=sk, l_partkey=pk, l_quantity=q)
+                for ok, sk, pk, q in li
+            ],
+            "l_orderkey long, l_suppkey long, l_partkey long, l_quantity double",
+        ).write.mode("overwrite").parquet(f"{d}/lineitem.parquet")
+        s.createDataFrame(
+            [Row(c_custkey=i, c_mktsegment=seg) for i, seg in enumerate(segs, start=1)],
+            "c_custkey long, c_mktsegment string",
+        ).write.mode("overwrite").parquet(f"{d}/customer.parquet")
+        s.createDataFrame(
+            [Row(s_suppkey=i, s_nationkey=nk) for i, nk in enumerate(snat, start=1)],
+            "s_suppkey long, s_nationkey int",
+        ).write.mode("overwrite").parquet(f"{d}/supplier.parquet")
+        s.createDataFrame(
+            [Row(n_nationkey=0, n_name="NATION_0"), Row(n_nationkey=1, n_name="NATION_1")],
+            "n_nationkey int, n_name string",
+        ).write.mode("overwrite").parquet(f"{d}/nation.parquet")
 
-    con = _duckdb.connect()
-    for t in ("orders", "lineitem", "customer", "supplier", "nation"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{d}/{t}.parquet/*.parquet')"
-        )
+        con = _duckdb.connect()
+        for t in ("orders", "lineitem", "customer", "supplier", "nation"):
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM "
+                f"read_parquet('{d}/{t}.parquet/*.parquet')"
+            )
 
-    # effective personalized seeds = BUILDING customers whose custkey is a
-    # graph node (has >= 1 order matched by >= 1 lineitem row) — computed
-    # from the generated rows so the raise-contract is asserted on exactly
-    # the corpora that trigger it
-    orderkeys_with_li = {ok for ok, _, _, _ in li}
-    cust_nodes = {
-        c
-        for i, c in enumerate(ocust, start=1)
-        if c is not None and i in orderkeys_with_li
-    }
-    building = {i for i, seg in enumerate(segs, start=1) if seg == "BUILDING"}
-    has_seeds = bool(cust_nodes & building)
-    # an EMPTY graph short-circuits to an empty result before seed
-    # validation (operators/graph.py n == 0 return) — the raise contract
-    # applies only to a non-empty graph with no effective seed
-    has_edges = any(ok <= len(ocust) for ok, _, _, _ in li)
+        # effective personalized seeds = BUILDING customers whose custkey is a
+        # graph node (has >= 1 order matched by >= 1 lineitem row) — computed
+        # from the generated rows so the raise-contract is asserted on exactly
+        # the corpora that trigger it
+        orderkeys_with_li = {ok for ok, _, _, _ in li}
+        cust_nodes = {
+            c
+            for i, c in enumerate(ocust, start=1)
+            if c is not None and i in orderkeys_with_li
+        }
+        building = {i for i, seg in enumerate(segs, start=1) if seg == "BUILDING"}
+        has_seeds = bool(cust_nodes & building)
+        # an EMPTY graph short-circuits to an empty result before seed
+        # validation (operators/graph.py n == 0 return) — the raise contract
+        # applies only to a non-empty graph with no effective seed
+        has_edges = any(ok <= len(ocust) for ok, _, _, _ in li)
 
-    for name in _GRAPH_FUZZ_QUERIES:
-        if name == "graph_pagerank_personalized" and has_edges and not has_seeds:
-            with pytest.raises(Exception, match="no seed id"):
-                QUERIES[name](s, d).collect()
-            continue
-        got = sorted(repr(tuple(r)) for r in QUERIES[name](s, d).collect())
-        want = sorted(repr(tuple(r)) for r in con.execute(ORACLE_SQL[name]).fetchall())
-        assert got == want, (name, ocust, li, segs, snat, got[:4], want[:4])
+        for name in _GRAPH_FUZZ_QUERIES:
+            if name == "graph_pagerank_personalized" and has_edges and not has_seeds:
+                with pytest.raises(Exception, match="no seed id"):
+                    QUERIES[name](s, d).collect()
+                continue
+            got = sorted(repr(tuple(r)) for r in QUERIES[name](s, d).collect())
+            want = sorted(repr(tuple(r)) for r in con.execute(ORACLE_SQL[name]).fetchall())
+            assert got == want, (name, ocust, li, segs, snat, got[:4], want[:4])
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
 
 
 @given(

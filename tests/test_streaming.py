@@ -507,9 +507,11 @@ def test_session_updater_closes_backward_gap_late_event():
     fabricated one session spanning the silent gap."""
     import pandas as pd
 
-    from mapreduce_system_spark.streaming.stateful import _make_session_updater
+    from functools import partial
 
-    upd = _make_session_updater(600)
+    from mapreduce_system_spark.streaming.stateful import _update_session
+
+    upd = partial(_update_session, 600)
     st = _FakeGroupState((36000, 36000, 1))  # open session at t=36000
     out = list(upd((1,), iter([pd.DataFrame({"es": [32400]})]), st))  # 1 h earlier
     closed = [
