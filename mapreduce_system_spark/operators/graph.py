@@ -432,12 +432,10 @@ def degree_census(pr: DataFrame) -> DataFrame:
 
 def orient_by_degree(pr: DataFrame, deg: DataFrame) -> DataFrame:
     """Compact-forward orientation: every edge directed away from its
-    lower-(degree, id) endpoint, as (s, t). Shared by ``triangle_stats``
-    and ``tools/scale_probe.tri_graph_profile`` so the probe's
-    oriented-wedge census measures the operator's ACTUAL orientation —
-    a private copy in the probe could silently drift if this rule ever
-    changes, leaving the scale record comparing wall time against the
-    wrong work volume."""
+    lower-(degree, id) endpoint, as (s, t), as ``triangle_stats`` uses
+    it. Any census of oriented wedges (Σ C(outdeg, 2), the volume the
+    triangle enumeration generates) should build on this function, not
+    a private copy that could drift from the operator's orientation."""
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
     lo_first = F.struct(F.col("du"), F.col("u")) < F.struct(F.col("dv"), F.col("v"))

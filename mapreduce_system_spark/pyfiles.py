@@ -9,7 +9,9 @@ nor on a real cluster. ``ensure_package_on_executors`` zips the package
 and registers it with ``sc.addPyFile``, which distributes it and prepends
 it to every worker's sys.path — the same mechanism used to deploy any
 PySpark library to a cluster (and the Spark-native analog of the
-reference's Go-plugin UDF shipping, README.MD:82).
+reference's Go-plugin UDF shipping, README.MD:82). The zip is written
+to the temp dir once per driver process and removed when that process
+exits normally.
 
 Every task a warm Python worker runs starts with PySpark's
 ``setup_spark_files``, which calls ``importlib.invalidate_caches()``.
@@ -35,6 +37,7 @@ without the shipped package also unpickles
 
 from __future__ import annotations
 
+import atexit
 import os
 import sys
 import tempfile
@@ -45,6 +48,16 @@ from pathlib import Path
 from pyspark.sql import SparkSession
 
 _FLAG = "_mapreduce_system_spark_shipped"
+# zips this process wrote; removed when it exits normally
+_WRITTEN: set[str] = set()
+
+
+def _remove_written() -> None:
+    for path in _WRITTEN:
+        try:
+            os.unlink(path)
+        except OSError:
+            pass
 
 
 def ensure_package_on_executors(spark: SparkSession) -> None:
@@ -77,6 +90,9 @@ def ensure_package_on_executors(spark: SparkSession) -> None:
         except OSError:
             pass
         raise
+    if not _WRITTEN:
+        atexit.register(_remove_written)
+    _WRITTEN.add(zip_path)
     sc.addPyFile(zip_path)
     setattr(sc, _FLAG, True)
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import ast
 import json
+import shutil
 import sys
 from pathlib import Path
 
@@ -243,6 +244,28 @@ def test_ab_alternates_first_arm_and_records_both_arms(tmp_path):
     assert rec["b_wins"] == 4
     assert rec["queries"] == ["q1"] and rec["pairs"] == 4
     assert rec["ncpu"] and len(rec["loadavg_start"]) == len(rec["loadavg_end"]) == 3
+    assert rec["a"] == ab.tree_digest(a) and rec["b"] == ab.tree_digest(b)
+    assert rec["a"] != rec["b"]
+    text = out.read_text()
+    assert str(tmp_path) not in text and '"/' not in text  # no absolute path
+
+
+def test_tree_digest_names_the_code_not_the_checkout(tmp_path):
+    a = _stub_tree(tmp_path, "a", [1.0])
+    (a / "mapreduce_system_spark" / "sub").mkdir(parents=True)
+    (a / "mapreduce_system_spark" / "sub" / "m.py").write_text("X = 1\n")
+    (a / "mapreduce_system_spark" / "notes.txt").write_text("not code\n")
+    copy = tmp_path / "elsewhere" / "copy"
+    shutil.copytree(a, copy)
+    assert ab.tree_digest(copy) == ab.tree_digest(a)
+    (copy / "mapreduce_system_spark" / "notes.txt").write_text("changed\n")
+    assert ab.tree_digest(copy) == ab.tree_digest(a)
+    (copy / "mapreduce_system_spark" / "sub" / "m.py").write_text("X = 2\n")
+    assert ab.tree_digest(copy) != ab.tree_digest(a)
+    shutil.copy(a / "mapreduce_system_spark" / "sub" / "m.py", copy / "mapreduce_system_spark" / "sub")
+    assert ab.tree_digest(copy) == ab.tree_digest(a)
+    (copy / "bench.py").write_bytes((a / "bench.py").read_bytes() + b" ")
+    assert ab.tree_digest(copy) != ab.tree_digest(a)
 
 
 def test_ab_spread_violation_exits_3_without_record(tmp_path):

@@ -223,3 +223,33 @@ def test_tws_processor_unpickles_without_the_package(tmp_path):
     assert proc.returncode == 0, proc.stderr.decode()
     assert proc.stdout.decode().split() == ["SessionProcessor", "60"]
 
+
+
+_SHIP = """
+import os, sys, tempfile
+sys.path.insert(0, {repo!r})
+from pyspark.sql import SparkSession
+from mapreduce_system_spark.pyfiles import ensure_package_on_executors
+spark = SparkSession.builder.master("local[1]").getOrCreate()
+ensure_package_on_executors(spark)
+zip_path = os.path.join(tempfile.gettempdir(), f"mapreduce_system_spark-{{os.getpid()}}.zip")
+assert os.path.exists(zip_path), zip_path
+print(zip_path)
+"""
+
+
+def test_package_zip_is_removed_when_the_driver_exits(tmp_path):
+    """The per-process package zip lives only as long as its driver."""
+    proc = subprocess.run(
+        [sys.executable, "-c", _SHIP.format(repo=str(REPO))],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        env={**os.environ, "TMPDIR": str(tmp_path)},
+        cwd=tmp_path,
+    )
+    assert proc.returncode == 0, proc.stderr
+    zip_path = Path(proc.stdout.split()[-1])
+    assert zip_path.parent == tmp_path
+    assert not zip_path.exists()
+    assert not list(tmp_path.glob("mapreduce_system_spark-*.zip"))

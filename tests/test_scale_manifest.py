@@ -13,9 +13,12 @@ record's meaning without failing CI.
 from __future__ import annotations
 
 import json
+import re
 import shutil
 import sys
 from pathlib import Path
+
+import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO / "tools"))
@@ -58,3 +61,47 @@ def test_record_out_defaults_to_latest_and_honors_out():
     assert _record_out(None, "scale_probe_latest.json").name == "scale_probe_latest.json"
     assert _record_out("scale_probe_r7.json", "x").name == "scale_probe_r7.json"
     assert _record_out(None, "sf1_manifest_latest.json").parent.name == "bench_runs"
+
+
+@pytest.mark.parametrize(
+    "argv",
+    [
+        ["--bloom", "--cms", "2"],  # two mode flags
+        ["--bogus"],  # an unknown flag
+        ["--graph", "10"],  # a retired mode
+        ["--cms", "2", "/some/dir", "7"],  # an extra positional
+        ["--manifest", "3"],
+    ],
+)
+def test_probe_rejects_bad_arguments_before_any_session(argv, monkeypatch):
+    import scale_probe
+
+    def no_session(*_args, **_kwargs):
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(scale_probe, "get_spark", no_session)
+    assert scale_probe.main(argv) == 2
+
+
+def test_probe_citations_name_live_modes():
+    """Every ``scale_probe[.py] --MODE`` citation in BASELINE.md, README.md
+    and the package names a mode the probe still has, and every mode is
+    in the probe's Usage block."""
+    import scale_probe
+
+    cited: dict[str, list[str]] = {}
+    for path in [
+        REPO / "BASELINE.md",
+        REPO / "README.md",
+        *sorted((REPO / "mapreduce_system_spark").rglob("*.py")),
+    ]:
+        for m in re.finditer(r"scale_probe(?:\.py)?\s+(--[\w-]+)", path.read_text()):
+            cited.setdefault(m.group(1), []).append(str(path.relative_to(REPO)))
+    assert cited, "the citation pattern matched nothing"
+    assert {k: v for k, v in cited.items() if k not in scale_probe.MODES} == {}
+
+    usage = scale_probe.__doc__.split("Usage::\n\n", 1)[1].split("\n\n", 1)[0]
+    assert [
+        k for k in scale_probe.MODES
+        if k and not re.search(rf"(?<![\w-]){re.escape(k)}(?![\w-])", usage)
+    ] == []

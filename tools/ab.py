@@ -20,11 +20,14 @@ trees that differ in that code; nothing is patched at run time.
    record untrustworthy; exit 3 without writing it.
 4. The record holds both arms' walls and medians, the b/a ratio, how
    many pairs B won, ``ncpu`` and the load averages at start and end.
+   Its ``a``/``b`` fields name the code each arm ran by
+   :func:`tree_digest`, not by where the checkout lives.
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import statistics
@@ -90,6 +93,19 @@ def assert_sane_walls(
         )
 
 
+def tree_digest(tree: Path) -> str:
+    """sha256 over the sorted relative paths and bytes of the code an arm
+    runs: ``bench.py`` and ``mapreduce_system_spark/**/*.py``. Two
+    checkouts of one commit, a ``git archive`` copy included, digest
+    alike wherever they live."""
+    files = [tree / "bench.py", *(tree / "mapreduce_system_spark").rglob("*.py")]
+    h = hashlib.sha256()
+    for rel in sorted(p.relative_to(tree).as_posix() for p in files if p.is_file()):
+        data = (tree / rel).read_bytes()
+        h.update(f"{rel}\0{len(data)}\0".encode() + data)
+    return "sha256:" + h.hexdigest()
+
+
 def _bench(tree: Path, queries: list[str]) -> dict:
     """One ``bench.py`` run in ``tree``; its JSON record."""
     proc = subprocess.run(
@@ -144,8 +160,8 @@ def main(argv: list[str] | None = None) -> int:
 
     med_a, med_b = (round(statistics.median(walls[k]), 3) for k in ("a", "b"))
     record = {
-        "a": str(trees["a"]),
-        "b": str(trees["b"]),
+        "a": tree_digest(trees["a"]),
+        "b": tree_digest(trees["b"]),
         "queries": args.queries,
         "sf": rec["sf"],
         "pairs": args.pairs,
