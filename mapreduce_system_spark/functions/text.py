@@ -109,7 +109,7 @@ def quality_features(text: Column | str) -> dict[str, Column]:
     # RE2/DuckDB \s does not, so a text containing a vertical tab would
     # count as punctuation in the oracle and as whitespace here — the
     # class below means the same thing in both engines (the paired SQL
-    # fragment in queries/textstats.py + queries/pipeline.py spells it
+    # fragment in queries/text.py + queries/pipeline.py spells it
     # identically)
     n_punct = n_chars - F.length(F.regexp_replace(col, r"[^\w \t\n\x0B\f\r]", ""))
     n_stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS)))

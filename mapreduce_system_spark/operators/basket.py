@@ -16,7 +16,7 @@ Spark-first shape, audited for 100 TB:
   self-join; pair generation is quadratic ONLY in basket size (bounded
   by the order-size cap the fixture inherits from TPC-H — an unbounded
   corpus takes a basket-size cap exactly like the dedup family's
-  stop-shingle DF cap, queries/_graphshared.py::copurchase_pairs
+  stop-shingle DF cap, queries/graph.py::copurchase_pairs
   documents the same trade);
 - item counts are a dimension-sized relation equi-joined into the rule
   join; the basket total is a ONE-ROW aggregate cross-joined broadcast

@@ -11,13 +11,13 @@ negatives — a key reported NEW is certainly new, so dedup can admit it
 without a second look; MAYBE-seen keys go to the exact path).
 
 The exact form of this question is already registered:
-``pipe_incremental_dedup`` (queries/fresh8f.py) LEFT-joins the batch's
+``pipe_incremental_dedup`` (queries/pipeline.py) LEFT-joins the batch's
 md5 fingerprints against the distinct corpus fingerprint set — correct,
 but the history side is corpus-sized and must be rescanned (or at best
 re-shuffled) every batch. The sketch replaces that recurring cost with
 an m-bounded summary: build once per corpus partition, merge summaries
 forever after, send only the maybe-seen residue to the exact join.
-And this is NOT Spark's runtime bloom-join (queries/fresh7.py), which
+And this is NOT Spark's runtime bloom-join (``rel_bloom_join_pruned``, queries/relational.py), which
 is an ephemeral optimizer artifact scoped to one join. This sketch is
 DATA:
 a persistable relation a pipeline materializes once per corpus
@@ -37,8 +37,7 @@ the DuckDB oracle can mirror row for row. Hashing: the repo-wide
 k independent positions per key, deterministically re-derivable on any
 engine (functions/hashing.py's single-spelling discipline).
 
-Landed and REGISTERED r15 (``dedup_bloom_prefilter``,
-queries/fresh13.py — the same-round fresh10 precedent): which batch
+Registered as ``dedup_bloom_prefilter`` (queries/dedup.py): which batch
 documents are definitely-new against the corpus-history sketch, with
 the false-positive audit against the exact answer shipped as data;
 tests/test_bloomsketch.py carries the pure-Python reference, the

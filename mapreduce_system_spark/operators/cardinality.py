@@ -1,6 +1,6 @@
 """Approximate join-cardinality estimation — diagnose before you join.
 
-``rel_skew_profile`` (queries/fresh8h.py) answers "is this key skewed?";
+``rel_skew_profile`` (queries/relational.py) answers "is this key skewed?";
 this operator answers the planner question one step earlier: HOW BIG
 would ``A JOIN B ON k`` be, without executing it. Two mechanisms, both
 pure relational algebra over per-key COUNT relations (the row-level

@@ -1,7 +1,7 @@
 """Parameterized ordered-funnel conversion — the generalization of the
 fixed three-step funnel the catalog already ships.
 
-``rel_funnel_conversion`` (queries/fresh7e.py, r7, driver-green) spells
+``rel_funnel_conversion`` (queries/relational.py) spells
 the view→click→purchase recurrence INLINE: chained per-stage min
 aggregates with strictly-after semantics. This operator lifts that
 exact algebra into a parameterized form — arbitrary step lists
@@ -11,12 +11,10 @@ cannot express: ``max_span``, the TIME-BOUNDED funnel ("converted
 within 30 minutes of entry", the attribution-window variant every
 product dashboard pairs with the unbounded one; ClickHouse's
 ``windowFunnel`` window argument, Amplitude's conversion window).
-fresh7e stays as-is — its driver-green plan is untouched; the planned
-registration asks the BOUNDED question the catalog lacks.
+``rel_funnel_conversion`` keeps its inline plan; the operator's
+registration asks the BOUNDED question the catalog lacked.
 
-Landed and REGISTERED r15 (``rel_funnel_time_bounded``,
-queries/fresh13.py — the same-round fresh10 precedent: operator +
-tests + oracle at birth, first driver row with the r16 window);
+Registered as ``rel_funnel_time_bounded`` (queries/relational.py);
 tests/test_funnel.py carries a pure-Python reference, the chained-CTE
 DuckDB oracle the registration interpolates (span clause included),
 and a 25-timeline fuzz sweep.

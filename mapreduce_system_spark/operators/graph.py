@@ -782,7 +782,8 @@ def connected_components_jump(
     instead of leaping past it — an 18-node random-orderkey chain
     measured UNCONVERGED at rounds=7. Callers with arbitrary ids must
     size ``rounds`` toward the min-label diameter bound, canonicalize
-    ids to sequence positions first (the fresh15 construction), or
+    ids to sequence positions first (``graph_components_jump``'s
+    construction), or
     assert the fixed point the way tests/test_fresh15_queries.py does.
 
     Scale shape: per round ONE edge-keyed equi-join + ONE node-keyed

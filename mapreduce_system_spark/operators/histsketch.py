@@ -1,6 +1,6 @@
 """Re-aggregatable fixed-range histogram sketches (mergeable quantiles).
 
-``approx_percentile`` (queries/advanced.py ``agg_approx_quantiles``) is
+``approx_percentile`` (queries/aggregates.py ``agg_approx_quantiles``) is
 ONE-SHOT like ``approx_count_distinct``: it answers "which quantile now"
 but exposes no state a pipeline can persist and re-aggregate. The
 sketch-table pattern the HLL rollup (operators/hll.py) establishes for

@@ -1,6 +1,6 @@
 """Re-aggregatable distinct-count sketches (Apache DataSketches HLL).
 
-``approx_count_distinct`` (queries/relational2.py ``agg_approx_distinct``)
+``approx_count_distinct`` (queries/aggregates.py ``agg_approx_distinct``)
 is ONE-SHOT: it answers "how many distinct now" but its internal HLL++
 state is not a value a pipeline can persist and re-aggregate. The
 incremental-analytics pattern a 100 TB warehouse actually runs is a
@@ -62,7 +62,7 @@ def distinct_sketch_rollup(
     Plan shape: one pre-distinct feeds both the exact count and the
     sketch per group (HLL is multiplicity-blind, and a mixed
     exact-distinct + sketch aggregation would plan an Expand —
-    queries/relational2.py's measured lesson); the total's exact count
+    ``agg_distinct_stats``' measured lesson); the total's exact count
     is a second distinct over values only; the merge is an aggregation
     of group-count-sized binary state."""
     if not 0.0 < band < 1.0:

@@ -1,7 +1,7 @@
 """Top-k PCA by power iteration with deflation — matrix-free at any scale.
 
 Extends the single-direction power iteration of ``emb_pca_power_iteration``
-(queries/fresh8m.py) to the top-k principal directions of the (uncentered)
+(queries/similarity.py) to the top-k principal directions of the (uncentered)
 embedding corpus without ever forming the Gram matrix: component c runs the
 same two corpus aggregates per round — scores ``s = X v`` keyed by row id,
 loadings ``w = Xᵀ s`` keyed by position — and DEFLATES against the

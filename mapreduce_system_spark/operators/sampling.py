@@ -2,8 +2,8 @@
 family, Efraimidis & Spirakis 2006) — the weighted complement of
 ``pipe_hash_sample``.
 
-A training-data pipeline's quota mixer (queries/fresh8h.py) and hash
-sampler (queries/pipeline.py) both select UNIFORMLY within a stratum.
+A training-data pipeline's quota mixer and hash sampler
+(queries/pipeline.py) both select UNIFORMLY within a stratum.
 The remaining selection primitive is WEIGHTED: "draw k documents where
 a document's chance of inclusion is proportional to its quality score /
 token count / upweight factor" — the op behind importance-weighted

@@ -1,10 +1,8 @@
 """Shared text-oracle fragments and scan helper — NO query registrations.
 
-Split out of ``queries/textstats.py`` so that modules needing the token
-algebra (``pipeline``, ``textstats2``) can import it WITHOUT triggering
-textstats' registrations: registration order is the driver's correctness
-window (see ``queries/__init__``), and a helper import must never drag a
-module's nine queries into (or ahead of) the window as a side effect.
+The token algebra's DuckDB spellings and the parallel documents scan,
+used by four domain modules (``text``, ``pipeline``, ``aggregates`` and
+``dedup``), so they live outside all of them.
 """
 
 from __future__ import annotations

@@ -1,19 +1,16 @@
-"""§2a MapReduce-core workloads (the reference's own surface).
+"""§2a MapReduce-core workloads: the reference's own surface.
 
-Physically these lived in registry.py through round 9; they moved here in
-r10 so that REGISTRATION ORDER IS A PURE FUNCTION OF queries/__init__.py
-regardless of which module a process imports first. With the definitions
-inside registry.py, an entry point that imported a queries submodule
-before registry (tests, tools/scale_probe.py) hit the circular-import
-fallthrough and registered mr-core FIRST, silently rotating this round's
-new queries out of the driver's first-50 correctness window — while an
-entry that imported registry first got the documented order. Now every
-path funnels through the package __init__, whose import list is the
-single source of window truth (pinned by
-tests/test_registry_smoke.py::test_r10_driver_window_composition).
+The OSDI'04 workloads the reference implements or cites — word count
+(its worked example, README.MD:25-53), grep, sort, inverted index, key
+counts — plus its reduce contract (the full sorted value list per key
+folded to a string, worker.go:161-165), the generic ``mapf``/``reducef``
+contract itself, and a whole-file text-sink round trip. Each carries a
+DuckDB oracle over the same corpus.
 
-The mr-core rows sit LAST this round (fresh r09 driver rows; rotate back
-into the window by r12 — see queries/__init__.py's ledger).
+Scale shape: word count and key counts are partial+final hash aggregates
+(the combiner the reference omits, README.MD:31-38); the sort's global
+top-k runs as ``TakeOrderedAndProject`` (per-partition top-k, driver merge
+of k × partitions rows) — no global sort, no shuffle of the corpus.
 """
 
 from __future__ import annotations
@@ -26,10 +23,10 @@ from mapreduce_system_spark.operators import mapreduce as MR
 from mapreduce_system_spark.registry import register
 from mapreduce_system_spark.sources.tables import load_table
 
+
 # ---------------------------------------------------------------------------
 # §2a MapReduce-core workloads (the reference's own surface)
 # ---------------------------------------------------------------------------
-
 _WORD_COUNT_SQL = r"""
 SELECT word, count(*) AS cnt
 FROM (SELECT unnest(string_split_regex(lower(text), '\W+')) AS word FROM documents)

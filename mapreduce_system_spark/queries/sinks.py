@@ -1,29 +1,38 @@
-"""Registered sink/scan round-trip queries.
+"""Sink/scan round-trip queries: every write format and layout read back and
+checked against the source.
 
 The reference's sink contract (partitioned files + atomic rename commit,
 worker.go:154-170 / coordinator.go:50-79) is exercised by pytest round
 trips and by ``mr_whole_text_files_wc`` (text sink → wholeTextFiles).
 These queries put the remaining format surface on the driver's
-correctness record too:
+correctness record too. Each oracle computes the same aggregate straight
+from the source parquet, so a round trip that corrupts any value
+hash-mismatches.
 
 - ``sink_partitioned_roundtrip``: orders hive-partitioned by priority,
   re-scanned with a partition filter — only the selected partition
   directories are touched (pruning asserted in tests/test_sinks_query.py).
 - ``scan_csv_json_roundtrip``: customer staged through the csv AND json
   sinks, read back with explicit schemas, unioned, aggregated.
-- ``sink_bucketed_join_roundtrip``: orders and lineitem staged through
-  the bucketed sink on the join key, then joined co-located (the join
-  itself runs with ZERO Exchange — asserted in
-  tests/test_sinks_query.py).
+- ``sink_bucketed_join_roundtrip``: orders and lineitem staged through the
+  bucketed sink on the join key, then joined co-located (the join itself
+  runs with ZERO Exchange — asserted in tests/test_sinks_query.py).
+- ``sink_bucket_pruned_lookup`` — the READ-side payoff of the bucketed
+  sink: a key lookup against the ``bucketBy(8, o_orderkey)`` table scans
+  only the buckets the keys hash to (``SelectedBucketsCount`` in the plan,
+  pinned by a guard test). At 100 TB the difference between touching 1/N
+  of the files and all of them for every point query.
 - ``scan_orc_roundtrip``: customer staged through the ORC sink and
   re-aggregated (pushdown on the ORC scan pinned in
   tests/test_sinks_query.py).
-- ``sink_dpp_join_pruned``: the partitioned-sink payoff under a
-  dim-side filter — the fact's partitions prune only via Catalyst's
-  runtime dynamicpruningexpression (pinned in tests/test_sinks_query.py).
-
-Each oracle computes the same aggregate straight from the source parquet,
-so a round trip that corrupts any value hash-mismatches.
+- ``sink_dpp_join_pruned``: the partitioned-sink payoff under a dim-side
+  filter — the fact's partitions prune only via Catalyst's runtime
+  dynamicpruningexpression (pinned in tests/test_sinks_query.py).
+- ``sink_merge_upsert``: the incremental MERGE/upsert write path
+  (``sources/merge.py``) folding the events changelog in three batches;
+  its oracle is ``rel_cdc_latest_state``'s one-pass compaction, since
+  folding the changelog through the upsert sink in ANY batch order must
+  land on the same latest-state view.
 """
 
 from __future__ import annotations
@@ -33,7 +42,9 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_system_spark.caches import tracked_cache
 from mapreduce_system_spark.registry import register
+from mapreduce_system_spark.sources.merge import merge_upsert, read_latest
 from mapreduce_system_spark.sources.sinks import write_parquet
 from mapreduce_system_spark.sources.tables import load_table
 
@@ -323,3 +334,97 @@ def q_sink_dpp_join_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(base, ignore_errors=True)
     return out
+
+
+# ---------------------------------------------------------------------------
+# sink_merge_upsert — MERGE-style keyed compaction write path
+# ---------------------------------------------------------------------------
+
+# The oracle is rel_cdc_latest_state's algebra verbatim (kept literal so
+# the sink's oracle reads on its own): folding the changelog through the
+# upsert sink in ANY batch order must land on the same latest-state view
+# a single-pass compaction computes.
+_MERGE_SQL = """
+SELECT user_id,
+       CAST(epoch_us(ts) AS BIGINT) AS last_ts_us,
+       event_type AS last_type,
+       round(value, 2) AS last_value
+FROM (
+  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+  FROM events
+)
+WHERE rn = 1
+ORDER BY user_id
+"""
+
+
+@register("sink_merge_upsert", _MERGE_SQL)
+def q_sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental MERGE/upsert write path (VERDICT r7 #6): the events
+    changelog is split into three batches (pmod(hash(event_id), 3) — the
+    split is arbitrary and the result must not depend on it), each folded
+    into a bucket-partitioned keyed sink via ``sources/merge.py``; the
+    returned view is the sink's latest state, which must hash-match the
+    one-pass CDC compaction oracle.
+
+    Scale shape: each merge reads back only the bucket partitions the
+    batch touches and rewrites only those (dynamic partition overwrite);
+    recovery is idempotent replay (tests/test_merge_sink.py)."""
+    ev = load_table(
+        spark, sf_dir, "events",
+        columns=["event_id", "ts", "user_id", "event_type", "value"],
+    )
+    root = _staging_path("merge_upsert", sf_dir, spark)
+    for i in range(3):
+        batch = ev.where(F.pmod(F.hash("event_id"), F.lit(3)) == i)
+        merge_upsert(
+            spark, root, batch,
+            key_cols=["user_id"], order_cols=["ts", "event_id"],
+        )
+    back = read_latest(spark, root)
+    return back.select(
+        "user_id",
+        F.unix_micros("ts").alias("last_ts_us"),
+        F.col("event_type").alias("last_type"),
+        F.round("value", 2).alias("last_value"),
+    ).orderBy("user_id")
+
+
+# ---------------------------------------------------------------------------
+# sink_bucket_pruned_lookup — point lookups scan only the hashed buckets
+# ---------------------------------------------------------------------------
+_LOOKUP_KEYS = (7, 42, 999)  # present at every fixture sf (orderkeys are dense)
+
+_LOOKUP_SQL = f"""
+SELECT o_orderkey, max(o_orderstatus) AS o_orderstatus
+FROM orders
+WHERE o_orderkey IN ({", ".join(str(k) for k in _LOOKUP_KEYS)})
+GROUP BY o_orderkey
+ORDER BY o_orderkey
+"""
+
+
+@register("sink_bucket_pruned_lookup", _LOOKUP_SQL)
+def q_bucket_pruned_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Key lookup against the bucketed orders table: the scan reads ONLY
+    the buckets the literal keys hash to (``SelectedBucketsCount ≤ 3
+    out of 8`` in the plan — guard-tested), not the whole table.
+
+    Reuses ``bucketed_tables``'s staging, so the
+    write cost is shared with the co-located-join query. The lookup is
+    phrased as a per-key aggregate — an exchange-free HashAggregate on
+    the bucket column — because Spark's auto-bucketed-scan planner
+    only keeps the bucketed (and therefore PRUNABLE) scan when some
+    operator consumes the bucket partitioning; a bare filter+project
+    reads the same files through a plain scan with no pruning. This is
+    the second half of the bucketing contract: pay the layout once,
+    then point/range queries on the bucket key touch 1/N of the files
+    and the join never shuffles. (Reference contrast: its sink is
+    opaque files with no read-back index at all — worker.go:154-170.)"""
+    orders_b, _ = bucketed_tables(spark, sf_dir)
+    return (
+        orders_b.where(F.col("o_orderkey").isin(*_LOOKUP_KEYS))
+        .groupBy("o_orderkey")
+        .agg(F.max("o_orderstatus").alias("o_orderstatus"))
+        .orderBy("o_orderkey")
+    )

@@ -44,8 +44,8 @@ def register(name: str, oracle: str | None = None, sf_bound: bool = False):
             # a dict overwrite here is SILENT catalog corruption: which
             # implementation answers to the name becomes an accident of
             # import order, and the loser's oracle replaces the winner's
-            # (found r16: a new registration collided with fresh7f's
-            # pipe_weighted_sample and lost without a sound)
+            # (a new registration once collided with pipe_weighted_sample
+            # and lost without a sound)
             raise ValueError(
                 f"duplicate query registration: {name!r} "
                 f"(already registered by {QUERIES[name].__module__})"
@@ -60,17 +60,6 @@ def register(name: str, oracle: str | None = None, sf_bound: bool = False):
     return deco
 
 
-# Every query module — including the §2a MapReduce-core workloads, which
-# live in queries/mrcore.py since r10 — self-registers on this package
-# import. REGISTRATION ORDER IS LOAD-BEARING (the driver's correctness
-# sweep covers the first 50 registered queries) and is a pure function of
-# queries/__init__.py's import list from EVERY entry point: a process
-# that imports a queries submodule first reaches this line through the
-# circular path (submodule -> register -> this body), which runs the full
-# package __init__ before any registration happens, and a process that
-# imports registry first takes the same package import directly. (Through
-# r9 the mr-core definitions sat in this file ABOVE a bottom package
-# import, so those two entry paths produced two different windows — the
-# r10 self-review's headline finding.) The window composition is pinned
-# by tests/test_registry_smoke.py::test_r10_driver_window_composition.
+# Importing the package registers every domain module's queries and puts
+# the driver's gate window (queries.DRIVER_WINDOW) first.
 from mapreduce_system_spark import queries as _queries  # noqa: E402,F401

@@ -3,7 +3,7 @@
 The write path a production corpus pipeline runs daily: fold an
 incremental changelog batch into a keyed sink, keeping the latest
 record per key. The read-side algebra is ``rel_cdc_latest_state``
-(queries/fresh7c.py) — ``max(struct(order_cols…, payload…))`` per key,
+(queries/relational.py) — ``max(struct(order_cols…, payload…))`` per key,
 an ordinary aggregate with map-side partial combine; this module adds
 the write side.
 

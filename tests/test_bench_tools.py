@@ -6,12 +6,15 @@
   as a floor regression.
 - tools/ab.py: the spread rule, and the alternating two-tree protocol
   driven against stub trees.
+- every default smoke-output record the tools write is git-ignored.
 """
 
 from __future__ import annotations
 
 import ast
+import fnmatch
 import json
+import re
 import shutil
 import sys
 from pathlib import Path
@@ -285,3 +288,30 @@ def test_ab_failing_oracle_gate_aborts_before_timing(tmp_path, failing):
     assert rc != 0
     assert not out.exists()
     assert not [e for e in log if e.startswith("bench:")]
+
+
+def _gitignored(path: str, patterns: list[str]) -> bool:
+    """``path`` (repo-relative) matches a .gitignore pattern: one with a
+    slash anchors at the root, one without matches the file name."""
+    return any(
+        fnmatch.fnmatchcase(path if "/" in p else path.rsplit("/", 1)[-1], p)
+        for p in patterns
+    )
+
+
+def test_smoke_outputs_are_git_ignored():
+    """A smoke run never dirties the tree: every record name bench.py,
+    tools/verify_local.py and tools/scale_probe.py write by default
+    (``latest*.json``, ``verify_full_latest.json``, the probe's
+    ``*_latest.json``) lands on a git-ignored path under bench_runs/."""
+    names = set()
+    for tool in ["bench.py", "tools/verify_local.py", "tools/scale_probe.py"]:
+        names |= set(re.findall(r'"(\w*latest\w*\.json)"', (REPO / tool).read_text()))
+    assert {"latest.json", "latest_partial.json", "verify_full_latest.json",
+            "scale_probe_latest.json", "sf1_manifest_latest.json"} <= names
+    patterns = [
+        line.strip()
+        for line in (REPO / ".gitignore").read_text().splitlines()
+        if line.strip() and not line.startswith("#")
+    ]
+    assert sorted(n for n in names if not _gitignored(f"bench_runs/{n}", patterns)) == []

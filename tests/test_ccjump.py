@@ -106,7 +106,7 @@ def _ccjump_round_cte(prev: str, cur: str, r: int) -> str:
     jump's inner join is total: every label value is itself a node id
     present in the relation (mins over node ids stay node ids).
     MATERIALIZED is load-bearing (the k-truss r16 lesson,
-    queries/fresh14.py): DuckDB 1.0 INLINES CTEs at every reference
+    queries/graph.py): DuckDB 1.0 INLINES CTEs at every reference
     site — m{{r}} is referenced twice (jump self-join) and l{{r}} twice
     (neighbor-min union), so the plain spelling re-expands 4^rounds."""
     return f"""m{r} AS MATERIALIZED (

@@ -24,7 +24,7 @@ def test_components_jump_rounds_is_a_fixed_point(spark):
     customers have no edge) and n_chains sums to the multi-order
     customer count."""
     from mapreduce_system_spark.operators.graph import connected_components_jump
-    from mapreduce_system_spark.queries.fresh15 import _CC_ROUNDS
+    from mapreduce_system_spark.queries.graph import _CC_ROUNDS
     from mapreduce_system_spark.sources.tables import load_table
     from pyspark.sql import Window as W
 

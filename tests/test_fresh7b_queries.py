@@ -15,7 +15,7 @@ def test_gap_fill_emits_complete_calendar(spark):
     """Every (event_type, day) cell of the spine must appear exactly once,
     days are contiguous min..max, and non-zero cells equal the plain
     aggregate (the oracle pins values; this pins the spine shape)."""
-    from mapreduce_system_spark.queries.fresh7b2 import q_gap_fill_daily
+    from mapreduce_system_spark.queries.temporal import q_gap_fill_daily
 
     out = q_gap_fill_daily(spark, SF_DIR_MID)
     rows = out.collect()
@@ -39,10 +39,7 @@ def test_bm25_rare_term_dominates_and_ranks_are_dense(spark):
     """The 'dup stream' query must rank dup-bearing documents above
     stream-only ones (the planted rare term has far higher idf), and
     each query's ranks must be exactly 1..k with scores non-increasing."""
-    from mapreduce_system_spark.queries.fresh7b import (
-        _BM25_TOPK,
-        q_bm25_topk,
-    )
+    from mapreduce_system_spark.queries.text import _BM25_TOPK, q_bm25_topk
 
     rows = q_bm25_topk(spark, SF_DIR_MID).collect()
     by_query: dict[str, list] = {}
@@ -72,7 +69,7 @@ def test_bm25_rare_term_dominates_and_ranks_are_dense(spark):
 def test_hash_split_is_deterministic_and_proportioned(spark):
     """Same input → identical assignment (pure function of doc_id); the
     bucket thresholds put roughly 80/10/10 of docs in train/val/test."""
-    from mapreduce_system_spark.queries.fresh7b2 import q_hash_split
+    from mapreduce_system_spark.queries.pipeline import q_hash_split
 
     a = {(r.split, r.lang): (r.n_docs, r.chars) for r in q_hash_split(spark, SF_DIR_MID).collect()}
     b = {(r.split, r.lang): (r.n_docs, r.chars) for r in q_hash_split(spark, SF_DIR_MID).collect()}
@@ -92,7 +89,7 @@ def test_unigram_surprisal_matches_entropy_scale(spark):
     """Every doc's surprisal lies between the corpus min/max token
     surprisal, and the token-weighted mean surprisal equals the corpus
     unigram entropy (a distribution identity, independent of DuckDB)."""
-    from mapreduce_system_spark.queries.fresh7b import q_unigram_surprisal
+    from mapreduce_system_spark.queries.text import q_unigram_surprisal
 
     rows = q_unigram_surprisal(spark, SF_DIR_MID).collect()
     assert len(rows) == 500
@@ -116,7 +113,7 @@ def test_int8_quantization_error_is_bounded_by_step(spark):
     (mx-mn)/510, so each label's MSE must be below the worst-case
     mean-of-squared-half-steps — and strictly positive (the embeddings
     are not already 8-bit)."""
-    from mapreduce_system_spark.queries.fresh7b import q_int8_quantize_error
+    from mapreduce_system_spark.queries.similarity import q_int8_quantize_error
 
     rows = q_int8_quantize_error(spark, SF_DIR_MID).collect()
     assert [r.label for r in rows] == sorted({r.label for r in rows})
@@ -139,7 +136,7 @@ def test_int8_quantization_constant_dimension_passes_through(spark, tmp_path):
     on a synthetic table: dim0 constant, dim1 varying."""
     from pyspark.sql import types as T
     import pyspark.sql.functions as F
-    from mapreduce_system_spark.queries.fresh7b import q_int8_quantize_error
+    from mapreduce_system_spark.queries.similarity import q_int8_quantize_error
 
     schema = T.StructType(
         [
@@ -165,7 +162,7 @@ def test_weighted_sample_prefers_heavy_docs_and_is_topk_shaped(spark):
     n_chars above the corpus mean), and (c) run as TakeOrderedAndProject
     — per-partition top-k, no global sort exchange."""
     from mapreduce_system_spark.plans.checks import formatted_plan
-    from mapreduce_system_spark.queries.fresh7f import _K, q_weighted_sample
+    from mapreduce_system_spark.queries.pipeline import _K, q_weighted_sample
 
     df = q_weighted_sample(spark, SF_DIR_MID)
     plan = formatted_plan(df)
@@ -189,7 +186,7 @@ def test_shingle_novelty_separates_dup_family_from_unique_text(spark):
     the planted near-dup family (docs whose text contains the 'dup'
     marker) must score well below the corpus mean — they share almost
     all shingles with their clones by construction."""
-    from mapreduce_system_spark.queries.fresh7f import q_shingle_novelty
+    from mapreduce_system_spark.queries.text import q_shingle_novelty
 
     rows = q_shingle_novelty(spark, SF_DIR_MID).collect()
     assert len(rows) == 500
@@ -211,7 +208,7 @@ def test_moments_profile_is_partial_aggregable_and_sane(spark):
     window, no sort) and satisfy the Cauchy-Schwarz identity
     |corr| <= 1 with covar = corr * sd_x * sd_y up to rounding."""
     from mapreduce_system_spark.plans.checks import formatted_plan
-    from mapreduce_system_spark.queries.fresh7f import q_moments_profile
+    from mapreduce_system_spark.queries.aggregates import q_moments_profile
 
     df = q_moments_profile(spark, SF_DIR_MID)
     plan = formatted_plan(df)

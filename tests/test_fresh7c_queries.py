@@ -14,7 +14,7 @@ from tests.conftest import SF_DIR_MID
 def test_cdc_latest_state_equals_window_formulation(spark):
     """max(struct(...)) compaction must agree row-for-row with the
     row_number()=1 window formulation — the two canonical CDC shapes."""
-    from mapreduce_system_spark.queries.fresh7c import q_cdc_latest_state
+    from mapreduce_system_spark.queries.relational import q_cdc_latest_state
     from mapreduce_system_spark.sources.tables import load_table
 
     agg = q_cdc_latest_state(spark, SF_DIR_MID)
@@ -41,7 +41,7 @@ def test_cdc_latest_state_plan_is_partial_aggregable(spark):
     """The scale rationale: the compaction must run as a two-phase hash
     aggregate (map-side partial combine before the shuffle), and must
     NOT contain a Window or per-key Sort of the full changelog."""
-    from mapreduce_system_spark.queries.fresh7c import q_cdc_latest_state
+    from mapreduce_system_spark.queries.relational import q_cdc_latest_state
 
     plan = formatted_plan(q_cdc_latest_state(spark, SF_DIR_MID))
     assert "partial_max" in plan or "partial_max".upper() in plan.upper(), plan
@@ -53,7 +53,7 @@ def test_scd2_intervals_are_a_partition_per_user(spark):
     (each valid_to equals the next valid_from), exactly one open
     (is_current) interval — and the first interval starts at the user's
     first event."""
-    from mapreduce_system_spark.queries.fresh7c import q_scd2_intervals
+    from mapreduce_system_spark.queries.relational import q_scd2_intervals
     from mapreduce_system_spark.sources.tables import load_table
 
     rows = q_scd2_intervals(spark, SF_DIR_MID).collect()
@@ -94,7 +94,7 @@ def test_scd2_intervals_are_a_partition_per_user(spark):
 def test_scd2_plan_reuses_one_exchange(spark):
     """lag and lead share the same window spec, so the physical plan
     must contain exactly one shuffle exchange (on user_id)."""
-    from mapreduce_system_spark.queries.fresh7c import q_scd2_intervals
+    from mapreduce_system_spark.queries.relational import q_scd2_intervals
 
     plan = formatted_plan(q_scd2_intervals(spark, SF_DIR_MID))
     # final orderBy adds a rangepartitioning exchange; count only the

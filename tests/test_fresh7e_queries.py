@@ -21,7 +21,7 @@ def test_funnel_requires_strict_order(spark, tmp_path):
       u3 click(1) view(2) click(3)      -> click counts only after view
       u4 purchase(1)                    -> no view: not even stage 1
     """
-    from mapreduce_system_spark.queries.fresh7e import q_funnel_conversion
+    from mapreduce_system_spark.queries.relational import q_funnel_conversion
 
     rows = [
         (1, _ts(1), "view"), (1, _ts(2), "click"), (1, _ts(3), "purchase"),
@@ -48,7 +48,7 @@ def test_funnel_requires_strict_order(spark, tmp_path):
 def test_funnel_is_monotone_on_fixture(spark):
     """Stage populations can only shrink, gaps are positive, and steps
     come back ordered 1..3."""
-    from mapreduce_system_spark.queries.fresh7e import q_funnel_conversion
+    from mapreduce_system_spark.queries.relational import q_funnel_conversion
 
     rows = q_funnel_conversion(spark, SF_DIR_MID).collect()
     assert [r.step for r in rows] == [1, 2, 3]

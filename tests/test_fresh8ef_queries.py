@@ -76,7 +76,7 @@ def test_triangle_query_plan_has_no_cartesian(spark):
     """Every join in the census must be an equi-join (the crossJoins are
     1-row broadcast assemblies) — a Cartesian/BNLJ over edges is the
     Θ(E²) failure mode."""
-    from mapreduce_system_spark.queries.fresh8f import q_triangle_count
+    from mapreduce_system_spark.queries.graph import q_triangle_count
 
     plan = formatted_plan(q_triangle_count(spark, SF_DIR))
     assert "CartesianProduct" not in plan
@@ -95,7 +95,7 @@ def test_triangle_query_plan_has_no_cartesian(spark):
 def test_q17_matches_explicit_two_pass_formulation(spark):
     """The correlated scalar subquery must equal the hand-decorrelated
     two-pass query (per-part avg, joined back, filtered, rolled up)."""
-    from mapreduce_system_spark.queries.fresh8e import q_scalar_subquery_q17
+    from mapreduce_system_spark.queries.relational import q_scalar_subquery_q17
     from mapreduce_system_spark.sources.tables import load_table
 
     got = q_scalar_subquery_q17(spark, SF_DIR_MID)
@@ -123,7 +123,7 @@ def test_q17_plan_is_decorrelated_to_aggregate_join(spark):
     """Catalyst must rewrite the subquery into an aggregate + join — the
     physical plan may not re-scan lineitem per outer row (no subquery
     node survives into the executed plan)."""
-    from mapreduce_system_spark.queries.fresh8e import q_scalar_subquery_q17
+    from mapreduce_system_spark.queries.relational import q_scalar_subquery_q17
 
     plan = formatted_plan(q_scalar_subquery_q17(spark, SF_DIR))
     assert "Subquery" not in plan, plan
@@ -136,7 +136,7 @@ def test_q17_plan_is_decorrelated_to_aggregate_join(spark):
 
 
 def test_centroid_outliers_shape_and_ordering(spark):
-    from mapreduce_system_spark.queries.fresh8e import q_centroid_outliers
+    from mapreduce_system_spark.queries.similarity import q_centroid_outliers
 
     rows = q_centroid_outliers(spark, SF_DIR).collect()
     by_label: dict[int, list] = {}
@@ -155,7 +155,7 @@ def test_centroid_outliers_agrees_with_driver_math(spark):
     """Recompute one label's centroid cosine in plain Python from the
     parquet floats and compare the rounded scores — an engine-free
     oracle for the HOF fold."""
-    from mapreduce_system_spark.queries.fresh8e import q_centroid_outliers
+    from mapreduce_system_spark.queries.similarity import q_centroid_outliers
     from mapreduce_system_spark.sources.tables import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings").collect()
@@ -187,7 +187,7 @@ def test_centroid_outliers_plan_broadcasts_centroids_not_corpus(spark):
     """The scoring join must be a broadcast of the #labels-row centroid
     table; the exploded stream may shuffle only into the (label, pos)
     aggregate — no sort-merge join over n·d rows."""
-    from mapreduce_system_spark.queries.fresh8e import q_centroid_outliers
+    from mapreduce_system_spark.queries.similarity import q_centroid_outliers
 
     plan = formatted_plan(q_centroid_outliers(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
@@ -207,7 +207,7 @@ def test_ewma_equals_sequential_recurrence(spark):
     With α = 0.5 and normalization by Σ 2^-i, the closed form equals
     folding the recurrence with the OLDEST kept value as the seed —
     verified per user against plain Python."""
-    from mapreduce_system_spark.queries.fresh8f import _EWMA_K, q_ewma_user_value
+    from mapreduce_system_spark.queries.temporal import _EWMA_K, q_ewma_user_value
     from mapreduce_system_spark.sources.tables import load_table
 
     ev = load_table(spark, SF_DIR, "events").collect()
@@ -251,7 +251,7 @@ def test_interpolation_brackets_and_observed_rows(spark):
     """Observed days carry their exact count (interpolated = 0); every
     interpolated value lies within [min, max] of its bracketing
     observations; the spine is complete (span × priorities rows)."""
-    from mapreduce_system_spark.queries.fresh8f import q_linear_interpolate_daily
+    from mapreduce_system_spark.queries.temporal import q_linear_interpolate_daily
 
     rows = q_linear_interpolate_daily(spark, SF_DIR).collect()
     by_prio: dict[str, list] = {}
@@ -285,7 +285,7 @@ def test_interpolation_brackets_and_observed_rows(spark):
 
 def test_interpolation_has_real_gaps_at_small_sf(spark):
     """The fixture must actually exercise the interpolation branch."""
-    from mapreduce_system_spark.queries.fresh8f import q_linear_interpolate_daily
+    from mapreduce_system_spark.queries.temporal import q_linear_interpolate_daily
 
     df = q_linear_interpolate_daily(spark, SF_DIR)
     n_interp = df.where(F.col("interpolated") == 1).count()
@@ -300,7 +300,7 @@ def test_interpolation_has_real_gaps_at_small_sf(spark):
 def test_incremental_dedup_counts_are_consistent(spark):
     """n_new per language must equal the left-anti-join count, and batch
     totals must match the bucket arithmetic."""
-    from mapreduce_system_spark.queries.fresh8f import q_incremental_dedup
+    from mapreduce_system_spark.queries.pipeline import q_incremental_dedup
     from mapreduce_system_spark.sources.tables import load_table
 
     got = {r["lang"]: r for r in q_incremental_dedup(spark, SF_DIR_MID).collect()}
@@ -333,7 +333,7 @@ def test_incremental_dedup_counts_are_consistent(spark):
 
 
 def test_q8_share_bounds_and_broadcast_chain(spark):
-    from mapreduce_system_spark.queries.fresh8f import q_sql_api_q8
+    from mapreduce_system_spark.queries.relational import q_sql_api_q8
 
     df = q_sql_api_q8(spark, SF_DIR_MID)
     rows = df.collect()
@@ -356,7 +356,7 @@ def test_centroid_outliers_null_cosine_ranks_last_on_both_engines(spark, tmp_pat
     import duckdb
     from pyspark.sql import Row
 
-    from mapreduce_system_spark.queries.fresh8e import (
+    from mapreduce_system_spark.queries.similarity import (
         _CENTROID_OUTLIERS_SQL,
         q_centroid_outliers,
     )

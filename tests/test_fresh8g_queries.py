@@ -17,7 +17,7 @@ from tests.conftest import SF_DIR, SF_DIR_MID
 
 
 def test_table_profile_matches_direct_aggregates(spark):
-    from mapreduce_system_spark.queries.fresh8g import q_table_profile
+    from mapreduce_system_spark.queries.relational import q_table_profile
     from mapreduce_system_spark.sources.tables import load_table
 
     rows = {r["col"]: r for r in q_table_profile(spark, SF_DIR_MID).collect()}
@@ -63,7 +63,7 @@ def test_table_profile_scan_and_aggregate_shape(spark):
     SortAggregate — that is the demotion; (b) no Sort node may sit
     below the Expand — that is the demotion's cost; (c) the slim pass's
     scan must stay pruned to exactly the string columns."""
-    from mapreduce_system_spark.queries.fresh8g import _STR_COLS, q_table_profile
+    from mapreduce_system_spark.queries.relational import _STR_COLS, q_table_profile
     from mapreduce_system_spark.plans.checks import physical_subtrees
 
     df = q_table_profile(spark, SF_DIR)
@@ -97,7 +97,7 @@ def test_table_profile_scan_and_aggregate_shape(spark):
 
 
 def test_not_exists_equals_dataframe_anti_join(spark):
-    from mapreduce_system_spark.queries.fresh8g import q_not_exists_subquery
+    from mapreduce_system_spark.queries.relational import q_not_exists_subquery
     from mapreduce_system_spark.sources.tables import load_table
 
     got = q_not_exists_subquery(spark, SF_DIR_MID)
@@ -123,7 +123,7 @@ def test_not_exists_equals_dataframe_anti_join(spark):
 
 
 def test_not_exists_plan_is_anti_join_no_subquery(spark):
-    from mapreduce_system_spark.queries.fresh8g import q_not_exists_subquery
+    from mapreduce_system_spark.queries.relational import q_not_exists_subquery
 
     plan = formatted_plan(q_not_exists_subquery(spark, SF_DIR))
     assert "LeftAnti" in plan, plan
@@ -136,7 +136,7 @@ def test_not_exists_plan_is_anti_join_no_subquery(spark):
 
 
 def test_grouped_mode_matches_python_counter_with_tie_contract(spark):
-    from mapreduce_system_spark.queries.fresh8g import q_grouped_mode_argmax
+    from mapreduce_system_spark.queries.aggregates import q_grouped_mode_argmax
     from mapreduce_system_spark.sources.tables import load_table
 
     ev = load_table(spark, SF_DIR, "events", columns=["user_id", "event_type"]).collect()
@@ -158,7 +158,7 @@ def test_grouped_mode_matches_python_counter_with_tie_contract(spark):
 def test_grouped_mode_plan_has_no_window(spark):
     """The scale contract: two hash aggregates, no Window / per-key sort
     of the raw event stream."""
-    from mapreduce_system_spark.queries.fresh8g import q_grouped_mode_argmax
+    from mapreduce_system_spark.queries.aggregates import q_grouped_mode_argmax
 
     plan = formatted_plan(q_grouped_mode_argmax(spark, SF_DIR))
     assert "Window" not in plan, plan
@@ -173,7 +173,7 @@ def test_grouped_mode_plan_has_no_window(spark):
 def test_bigram_surprisal_bookkeeping(spark):
     """Each doc with ≥2 tokens appears with exactly token_count−1
     bigrams; scores are positive (smoothed probabilities < 1)."""
-    from mapreduce_system_spark.queries.fresh8g import q_bigram_surprisal
+    from mapreduce_system_spark.queries.text import q_bigram_surprisal
     from mapreduce_system_spark.functions.text import tokens
     from mapreduce_system_spark.sources.tables import load_table
 
@@ -194,8 +194,8 @@ def test_bigram_surprisal_orders_transitions_not_words(spark):
     """Sanity of the LM direction: common-word docs can still score high
     — the metric must not simply mirror unigram surprisal. Pin a weak
     but real property: the two scores are not identical as multisets."""
-    from mapreduce_system_spark.queries.fresh7b import q_unigram_surprisal
-    from mapreduce_system_spark.queries.fresh8g import q_bigram_surprisal
+    from mapreduce_system_spark.queries.text import q_unigram_surprisal
+    from mapreduce_system_spark.queries.text import q_bigram_surprisal
 
     uni = {
         r["doc_id"]: r["surprisal"]

@@ -41,7 +41,7 @@ def test_bfs_query_census_partitions_the_node_set(spark):
     """Hop buckets partition the graph's nodes: counts sum to the node
     total, hop 0 equals the seed suppliers present in the graph, and
     bipartiteness puts suppliers on even hops and customers on odd."""
-    from mapreduce_system_spark.queries.fresh8h import q_bfs_reachability
+    from mapreduce_system_spark.queries.graph import q_bfs_reachability
 
     rows = q_bfs_reachability(spark, SF_DIR_MID).collect()
     by_hop = {r.hop: r.n_nodes for r in rows}
@@ -74,7 +74,7 @@ def test_grouped_linreg_degenerate_group_is_null_on_both_engines(spark):
     expression would keep passing."""
     import duckdb
 
-    from mapreduce_system_spark.queries.fresh8h import _LINREG_SQL, _linreg_slope
+    from mapreduce_system_spark.queries.aggregates import _LINREG_SQL, _linreg_slope
 
     assert "nullif(var_samp(l.l_quantity), 0)" in _LINREG_SQL
     x, y = F.col("x"), F.col("y")
@@ -111,7 +111,7 @@ def test_grouped_linreg_matches_numpy_on_one_brand(spark):
     squares on the same points (sample covariance definitions)."""
     import numpy as np
 
-    from mapreduce_system_spark.queries.fresh8h import q_grouped_linreg
+    from mapreduce_system_spark.queries.aggregates import q_grouped_linreg
 
     rows = q_grouped_linreg(spark, SF_DIR_MID).collect()
     brand = rows[0].brand
@@ -139,7 +139,7 @@ def test_grouped_linreg_matches_numpy_on_one_brand(spark):
 def test_time_weighted_avg_matches_python_for_one_user(spark):
     """TWAP for one user equals the hand fold over its time-ordered
     events; span is last-minus-first µs; value bounds hold."""
-    from mapreduce_system_spark.queries.fresh8h import q_time_weighted_avg
+    from mapreduce_system_spark.queries.temporal import q_time_weighted_avg
 
     rows = q_time_weighted_avg(spark, SF_DIR_MID).collect()
     uid = rows[0].user_id
@@ -171,7 +171,7 @@ def test_equi_depth_buckets_are_balanced_and_ordered(spark):
     """Per priority: all 10 deciles present, counts sum to the group
     size and differ by ≤ 1 row, and [lo, hi] ranges are
     non-overlapping and increasing."""
-    from mapreduce_system_spark.queries.fresh8h import q_histogram_equi_depth
+    from mapreduce_system_spark.queries.relational import q_histogram_equi_depth
 
     rows = q_histogram_equi_depth(spark, SF_DIR_MID).collect()
     orders = spark.read.parquet(f"{SF_DIR_MID}/orders.parquet")
@@ -196,7 +196,7 @@ def test_equi_depth_buckets_are_balanced_and_ordered(spark):
 def test_skew_profile_arithmetic_and_ordering(spark):
     """Top-5 keys descend by count; share and skew ratio reproduce the
     direct per-key counts; a uniform-ish key keeps ratios near 1."""
-    from mapreduce_system_spark.queries.fresh8h import q_skew_profile
+    from mapreduce_system_spark.queries.relational import q_skew_profile
 
     rows = q_skew_profile(spark, SF_DIR_MID).collect()
     assert len(rows) == 5
@@ -218,7 +218,7 @@ def test_snapshot_diff_class_accounting(spark):
     """Class counts reconcile with the md5 buckets recomputed in
     Python: added = buckets 95-99, removed = 0-4, changed = 5-14,
     unchanged = the rest; totals tie out to both snapshot sizes."""
-    from mapreduce_system_spark.queries.fresh8h import q_snapshot_diff
+    from mapreduce_system_spark.queries.relational import q_snapshot_diff
 
     got = {r.diff_class: r.n for r in q_snapshot_diff(spark, SF_DIR_MID).collect()}
     keys = [

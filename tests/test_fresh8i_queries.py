@@ -14,7 +14,7 @@ from tests.conftest import SF_DIR_MID
 def test_group_kfold_partitions_sources_without_leakage(spark):
     """Folds partition the documents exactly; each source's fold is the
     md5 value recomputed in Python; no source spans two folds."""
-    from mapreduce_system_spark.queries.fresh8i import _KFOLD_K, q_group_kfold
+    from mapreduce_system_spark.queries.pipeline import _KFOLD_K, q_group_kfold
 
     rows = q_group_kfold(spark, SF_DIR_MID).collect()
     docs = (
@@ -47,7 +47,7 @@ def test_ttr_matches_python_for_one_doc(spark):
     the same tokenizer; bounds 0 < ttr ≤ 1 hold corpus-wide."""
     import re
 
-    from mapreduce_system_spark.queries.fresh8i import q_ttr_lexical_diversity
+    from mapreduce_system_spark.queries.text import q_ttr_lexical_diversity
 
     rows = q_ttr_lexical_diversity(spark, SF_DIR_MID).collect()
     assert len(rows) == 500
@@ -75,7 +75,7 @@ def test_centroid_matrix_shape_and_numpy_parity(spark):
     per-label mean vectors; all cosines lie in [-1, 1]."""
     import numpy as np
 
-    from mapreduce_system_spark.queries.fresh8i import q_centroid_distance_matrix
+    from mapreduce_system_spark.queries.similarity import q_centroid_distance_matrix
 
     rows = q_centroid_distance_matrix(spark, SF_DIR_MID).collect()
     assert len(rows) == 45  # C(10, 2)
@@ -94,7 +94,7 @@ def test_centroid_matrix_shape_and_numpy_parity(spark):
 def test_moving_window_stats_fold_for_one_user(spark):
     """The trailing 7-row mean/min/max for one user equal a Python fold
     over its time-ordered events; n_window ramps 1..7 then stays 7."""
-    from mapreduce_system_spark.queries.fresh8i import q_moving_window_stats
+    from mapreduce_system_spark.queries.temporal import q_moving_window_stats
 
     out = q_moving_window_stats(spark, SF_DIR_MID)
     uid = out.first().user_id

@@ -15,7 +15,7 @@ def test_cohort_retention_triangle_invariants(spark):
     """Offset-0 retention is exactly 1 (everyone is active in their own
     cohort week); cohort sizes sum to the distinct-user count;
     retention never exceeds 1 and n_active ≤ cohort_size."""
-    from mapreduce_system_spark.queries.fresh8j import q_cohort_retention
+    from mapreduce_system_spark.queries.temporal import q_cohort_retention
 
     rows = q_cohort_retention(spark, SF_DIR_MID).collect()
     assert rows, "empty retention triangle"
@@ -41,7 +41,7 @@ def test_vocab_coverage_matches_python_and_is_monotone(spark):
     total_tokens matches the corpus token count."""
     import re
 
-    from mapreduce_system_spark.queries.fresh8j import q_vocab_coverage
+    from mapreduce_system_spark.queries.text import q_vocab_coverage
 
     rows = sorted(q_vocab_coverage(spark, SF_DIR_MID).collect(), key=lambda r: r.k)
     texts = [
@@ -67,7 +67,7 @@ def test_vocab_coverage_matches_python_and_is_monotone(spark):
 def test_degree_distribution_accounts_for_every_node(spark):
     """Bin node counts sum to the graph's node count; per-bin
     [min, max] degrees sit inside [2^bin, 2^(bin+1)); bins ascend."""
-    from mapreduce_system_spark.queries.fresh8j import q_degree_distribution
+    from mapreduce_system_spark.queries.graph import q_degree_distribution
 
     rows = q_degree_distribution(spark, SF_DIR_MID).collect()
     li = (

@@ -12,7 +12,7 @@ def test_source_manifest_checksum_is_order_and_partition_independent(spark):
     """Reversing row order and changing the partitioning must not move
     any per-source checksum; mutating ONE document must move exactly
     its source's checksum (content sensitivity)."""
-    from mapreduce_system_spark.queries.fresh8k import q_source_manifest
+    from mapreduce_system_spark.queries.pipeline import q_source_manifest
     from mapreduce_system_spark.sources.tables import load_table
 
     base = {r.source: r.content_checksum for r in q_source_manifest(spark, SF_DIR_MID).collect()}

@@ -32,7 +32,7 @@ def test_pit_join_attributes_clicks_to_the_interval_state(spark):
     ev = spark.createDataFrame(
         rows, "event_id long, ts timestamp, user_id long, event_type string, value double"
     )
-    import mapreduce_system_spark.queries.fresh8l as M
+    import mapreduce_system_spark.queries.relational as M
 
     orig = M.load_table
     M.load_table = lambda _s, _d, _n, columns=None: ev.select(*(columns or ev.columns))
@@ -46,7 +46,7 @@ def test_pit_join_attributes_clicks_to_the_interval_state(spark):
 def test_pit_join_never_amplifies_clicks(spark):
     """Every click appears exactly once in the attribution totals —
     non-overlapping intervals make the join 1:≤1."""
-    from mapreduce_system_spark.queries.fresh8l import q_pit_join_scd2
+    from mapreduce_system_spark.queries.relational import q_pit_join_scd2
     from mapreduce_system_spark.sources.tables import load_table
 
     out = q_pit_join_scd2(spark, SF_DIR_MID)
@@ -64,7 +64,11 @@ def test_mad_outliers_matches_numpy_and_resists_contamination(spark):
     inflated a stddev-based cut (the robustness property)."""
     import numpy as np
 
-    from mapreduce_system_spark.queries.fresh8l import _MAD_CUT, _MAD_K, q_mad_outliers
+    from mapreduce_system_spark.queries.aggregates import (
+        _MAD_CUT,
+        _MAD_K,
+        q_mad_outliers,
+    )
     from mapreduce_system_spark.sources.tables import load_table
 
     rows = q_mad_outliers(spark, SF_DIR_MID).collect()
@@ -105,7 +109,7 @@ def test_group_median_handles_tiny_and_even_groups(spark):
     → mean of the two middles; odd count → exact middle."""
     from pyspark.sql import functions as F
 
-    from mapreduce_system_spark.queries.fresh8l import _group_median
+    from mapreduce_system_spark.queries.aggregates import _group_median
 
     df = spark.createDataFrame(
         [("one", 7.0), ("two", 1.0), ("two", 3.0), ("odd", 1.0), ("odd", 9.0), ("odd", 5.0)],
@@ -122,7 +126,7 @@ def test_group_median_ignores_null_values(spark):
     from pyspark.sql import Row
     from pyspark.sql import functions as F
 
-    from mapreduce_system_spark.queries.fresh8l import _group_median
+    from mapreduce_system_spark.queries.aggregates import _group_median
 
     df = spark.createDataFrame(
         [Row(g="a", v=1.0), Row(g="a", v=None), Row(g="a", v=3.0),
@@ -140,7 +144,7 @@ def test_group_median_keeps_all_null_groups_with_null_median(spark):
     from pyspark.sql import Row
     from pyspark.sql import functions as F
 
-    from mapreduce_system_spark.queries.fresh8l import _group_median
+    from mapreduce_system_spark.queries.aggregates import _group_median
 
     df = spark.createDataFrame(
         [Row(g="a", v=1.0), Row(g="a", v=3.0),
@@ -205,7 +209,7 @@ def test_group_median_computes_median_for_null_keyed_group(spark):
     from pyspark.sql import Row
     from pyspark.sql import functions as F
 
-    from mapreduce_system_spark.queries.fresh8l import _group_median
+    from mapreduce_system_spark.queries.aggregates import _group_median
 
     df = spark.createDataFrame(
         [Row(g=None, v=1.0), Row(g=None, v=3.0), Row(g="a", v=2.0),

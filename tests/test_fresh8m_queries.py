@@ -13,7 +13,7 @@ def test_ohlc_bars_match_python_fold_for_one_bucket(spark):
     """The densest (type, hour) bar's open/high/low/close equal a
     Python fold over its time-ordered events; low ≤ {open, close} ≤
     high holds for every bar; bar counts sum to the stream size."""
-    from mapreduce_system_spark.queries.fresh8m import q_ohlc_hourly
+    from mapreduce_system_spark.queries.temporal import q_ohlc_hourly
     from mapreduce_system_spark.sources.tables import load_table
 
     rows = q_ohlc_hourly(spark, SF_DIR_MID).collect()
@@ -44,7 +44,7 @@ def test_ohlc_bars_match_python_fold_for_one_bucket(spark):
 def test_keep_latest_k_fold_for_one_user(spark):
     """One user's kept set is exactly its 3 most recent events; users
     with fewer than 3 events keep them all."""
-    from mapreduce_system_spark.queries.fresh8m import _KEEP_K, q_keep_latest_k
+    from mapreduce_system_spark.queries.pipeline import _KEEP_K, q_keep_latest_k
     from mapreduce_system_spark.sources.tables import load_table
 
     rows = q_keep_latest_k(spark, SF_DIR_MID).collect()
@@ -76,7 +76,7 @@ def test_pca_loading_matches_the_numpy_recurrence(spark):
     the near-isotropic fixture keeps deliberately small)."""
     import numpy as np
 
-    from mapreduce_system_spark.queries.fresh8m import q_pca_power_iteration
+    from mapreduce_system_spark.queries.similarity import q_pca_power_iteration
     from mapreduce_system_spark.sources.tables import load_table
 
     rows = sorted(q_pca_power_iteration(spark, SF_DIR_MID).collect(), key=lambda r: r.pos)

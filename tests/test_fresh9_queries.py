@@ -14,7 +14,7 @@ def test_join_cardinality_exact_equals_materialized_join(spark):
     """Σ cA(k)·cB(k) must equal the count of the ACTUAL join, computed
     here by materializing it in Spark (the oracle materializes it in
     DuckDB — this pin removes even the shared-sf_dir coincidence)."""
-    from mapreduce_system_spark.queries.fresh9 import q_join_cardinality_exact
+    from mapreduce_system_spark.queries.relational import q_join_cardinality_exact
     from mapreduce_system_spark.sources.tables import load_table
 
     got = q_join_cardinality_exact(spark, SF_DIR).collect()[0].cardinality
@@ -28,7 +28,7 @@ def test_join_cardinality_sampled_is_deterministic_and_scaled(spark):
     """The coordinated md5 key sample has no RNG: two invocations (and
     a repartitioned input) return the SAME BIGINT, which is an exact
     multiple of the integer scale factor."""
-    from mapreduce_system_spark.queries.fresh9 import (
+    from mapreduce_system_spark.queries.relational import (
         _SAMPLE_PCT,
         q_join_cardinality_sampled,
     )
@@ -61,7 +61,7 @@ def test_gif_stats_cover_every_blob_and_match_direct_decode(spark):
     (150 in → 150 rows), and one image's mean_luma must equal the
     module-level single-blob decoder run directly on its blob."""
     from mapreduce_system_spark.operators.multimodal import decode_image_gif
-    from mapreduce_system_spark.queries.fresh9 import (
+    from mapreduce_system_spark.queries.multimodal import (
         _N_GIFS,
         _synth_gif_blobs,
         q_image_gif_stats,
@@ -84,7 +84,7 @@ def test_sketch_rollup_total_row_is_the_corpus_distinct(spark):
     """The merged-total row's EXACT anchor equals the corpus's distinct
     user count, the per-day exacts sum to >= it (days overlap users),
     and every band boolean holds at fixture scale."""
-    from mapreduce_system_spark.queries.fresh9 import q_distinct_sketch_rollup
+    from mapreduce_system_spark.queries.aggregates import q_distinct_sketch_rollup
     from mapreduce_system_spark.sources.tables import load_table
 
     rows = q_distinct_sketch_rollup(spark, SF_DIR).collect()
@@ -101,7 +101,7 @@ def test_state_audit_equals_batch_aggregate(spark):
     """What the store persisted == what a batch groupBy computes,
     value-for-value at fixture scale (the NULL-value bookkeeping rides
     n_vals; fixture values are non-NULL so totals are all present)."""
-    from mapreduce_system_spark.queries.fresh9 import q_stream_state_audit
+    from mapreduce_system_spark.queries.streaming import q_stream_state_audit
     from mapreduce_system_spark.sources.tables import load_table
 
     got = {

@@ -12,7 +12,7 @@ def test_asof_salted_query_matches_plain(spark):
     """The registered salted query must equal the registered plain as-of
     query row-for-row — the driver checks both against the same DuckDB
     ASOF oracle, so any divergence is a double failure."""
-    from mapreduce_system_spark.queries.fresh import q_asof_salted
+    from mapreduce_system_spark.queries.temporal import q_asof_salted
     from mapreduce_system_spark.queries.temporal import q_asof
 
     plain = q_asof(spark, SF_DIR_MID)
@@ -26,7 +26,7 @@ def test_recall_at_k_bounds_and_floor(spark):
     """Per-query recall is n_hits/5 in [0, 1]; the IVF configuration's
     mean recall must clear the pytest floor the query was promoted from
     (tests/test_similarity.py: 0.3)."""
-    from mapreduce_system_spark.queries.fresh import q_recall_at_k
+    from mapreduce_system_spark.queries.similarity import q_recall_at_k
 
     rows = q_recall_at_k(spark, SF_DIR_MID).collect()
     assert len(rows) == 10
@@ -50,7 +50,7 @@ def test_range_frame_is_value_based_not_row_based(spark):
     got = [r.s for r in df.select(F.sum("value").over(w).alias("s")).orderBy("es").collect()]
     assert got == [10.0, 30.0, 60.0]  # 3605-10 ≤ 3600 keeps the 2nd; 3605-0 > 3600 drops the 1st
 
-    from mapreduce_system_spark.queries.fresh import q_window_range_frames
+    from mapreduce_system_spark.queries.relational import q_window_range_frames
 
     out = q_window_range_frames(spark, SF_DIR_MID)
     assert [f.name for f in out.schema.fields] == [
@@ -65,7 +65,7 @@ def test_sessionize_gap_splits_and_counts(spark):
     """30-minute gap rule on a hand-built trace: 3 events 10 min apart are
     one session; a 31-min gap starts a new one; per-user profile counts
     both with the right durations."""
-    from mapreduce_system_spark.queries.fresh import _GAP_S
+    from mapreduce_system_spark.queries.relational import _GAP_S
 
     assert _GAP_S == 1800
     rows = [
@@ -119,7 +119,7 @@ def test_stateful_stream_query_matches_batch_twin(spark):
     """The registered applyInPandasWithState query runs a REAL multi-batch
     file stream; its final state must equal the batch GROUP BY twin
     row-for-row (both ordered by user_id, both rounded in Spark)."""
-    from mapreduce_system_spark.queries.fresh6 import q_stateful_user_totals
+    from mapreduce_system_spark.queries.streaming import q_stateful_user_totals
     from mapreduce_system_spark.queries.streaming import q_user_totals
 
     got = q_stateful_user_totals(spark, SF_DIR).collect()

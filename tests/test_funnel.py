@@ -247,7 +247,7 @@ def test_funnel_registered_oracle_empty_input_parity(spark):
     both engines emit 3 rows with n_users=0 AND frac_of_first=0.0 —
     the registered oracle's coalesce(..., 0.0) must match the
     operator's pinned 0.0 (pre-fix the oracle yielded NULL)."""
-    from mapreduce_system_spark.queries import fresh13
+    from mapreduce_system_spark.queries import relational
 
     empty = spark.createDataFrame([], _SCHEMA)
     got = sorted(
@@ -263,6 +263,6 @@ def test_funnel_registered_oracle_empty_input_parity(spark):
         "CAST(NULL AS TIMESTAMP) AS ts, "
         "CAST(NULL AS VARCHAR) AS event_type WHERE FALSE"
     )
-    want = sorted(tuple(r) for r in con.execute(fresh13._FUNNEL_TB_SQL).fetchall())
+    want = sorted(tuple(r) for r in con.execute(relational._FUNNEL_TB_SQL).fetchall())
     assert got == want
     assert all(r[2] == 0 and r[3] == 0.0 for r in got)

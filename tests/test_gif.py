@@ -293,7 +293,7 @@ def test_gif_stats_query_matches_path_substituted_oracle_off_fixture(spark, tmp_
     parameterized palette/size/interlace sweep at different moduli)."""
     import duckdb
 
-    from mapreduce_system_spark.queries.fresh9 import (
+    from mapreduce_system_spark.queries.multimodal import (
         _GIF_STATS_SQL,
         _gif_path,
         q_image_gif_stats,

@@ -38,7 +38,7 @@ def test_pagerank_conserves_probability_mass(spark):
     """With no dangling nodes (undirected input), total rank is exactly
     1 after every iteration count."""
     from mapreduce_system_spark.operators.graph import pagerank
-    from mapreduce_system_spark.queries.fresh7d import q_graph_pagerank
+    from mapreduce_system_spark.queries.graph import q_graph_pagerank
 
     out = q_graph_pagerank(spark, SF_DIR_MID)
     total_ppm = out.agg(F.sum("rank_ppm")).first()[0]
@@ -54,7 +54,7 @@ def test_pagerank_query_ranks_suppliers_above_customers(spark):
     """Suppliers aggregate ~15x the fan-in of customers in the purchase
     graph, so the mean supplier rank must dominate; both node families
     are complete (1500 customers + 100 suppliers at sf0.01)."""
-    from mapreduce_system_spark.queries.fresh7d import q_graph_pagerank
+    from mapreduce_system_spark.queries.graph import q_graph_pagerank
 
     rows = q_graph_pagerank(spark, SF_DIR_MID).collect()
     cust = [r.rank_ppm for r in rows if r.node.startswith("c")]
@@ -197,7 +197,7 @@ def test_pagerank_rejects_unknown_dangling_mode(spark):
 def test_pagerank_dangling_query_mass_sums_to_one(spark):
     """Every supplier dangles in the directed purchase graph; the
     redistribute correction keeps the reported ppm total at ~1e6."""
-    from mapreduce_system_spark.queries.fresh8a import q_graph_pagerank_dangling
+    from mapreduce_system_spark.queries.graph import q_graph_pagerank_dangling
 
     out = q_graph_pagerank_dangling(spark, SF_DIR_MID)
     total_ppm = out.agg(F.sum("rank_ppm")).first()[0]

@@ -104,7 +104,7 @@ def test_ktruss_rejects_bad_params(spark):
 
 def _ktruss_round_cte(prev: str, cur: str, r: int, k: int) -> str:
     """One unrolled synchronous truss round — the draft the registered
-    oracle interpolates (queries/fresh14.py). Triangle listing is the
+    oracle interpolates (queries/graph.py). Triangle listing is the
     simple a<b<c form (orientation-independent support); MATERIALIZED
     mirrors the registration (DuckDB 1.0 inlines CTEs per reference —
     the nested stack re-expands exponentially without it)."""

@@ -111,7 +111,7 @@ def test_rank_selection_quantiles_plan_shape(spark):
     contains no `percentile` aggregate (the per-group value buffer the
     rework removed)."""
     from mapreduce_system_spark.plans.checks import formatted_plan, has_broadcast_join
-    from mapreduce_system_spark.queries.advanced import q_quantiles
+    from mapreduce_system_spark.queries.aggregates import q_quantiles
 
     df = q_quantiles(spark, SF_DIR)
     plan = formatted_plan(df)
@@ -150,7 +150,10 @@ def test_bloom_join_runtime_filter_injected_and_exact(spark):
     it did not, which is the guard — and the pruned result must equal the
     plain join bit-for-bit. Session confs the exhibit binds (broadcast
     threshold, bloom thresholds) must be restored afterwards."""
-    from mapreduce_system_spark.queries.fresh7 import _BLOOM_CONFS, bloom_pruned_revenue
+    from mapreduce_system_spark.queries.relational import (
+        _BLOOM_CONFS,
+        bloom_pruned_revenue,
+    )
 
     before = {}
     for key in _BLOOM_CONFS:
@@ -222,7 +225,7 @@ def _tree_lines(plan: str) -> list[tuple[int, str]]:
 
 
 def test_bm25_is_broadcast_driven(spark):
-    from mapreduce_system_spark.queries.fresh7b import q_bm25_topk
+    from mapreduce_system_spark.queries.text import q_bm25_topk
 
     plan = formatted_plan(q_bm25_topk(spark, SF_DIR))
     assert "SortMergeJoin" not in plan, plan
@@ -237,7 +240,7 @@ def test_bm25_df_broadcast_build_side_is_query_filtered(spark):
     query-terms broadcast join INSIDE the df broadcast subtree, so the plan
     must contain a BroadcastExchange with another BroadcastExchange below it
     — the semi-reduction that bounds the shipped relation to |query terms|."""
-    from mapreduce_system_spark.queries.fresh7b import q_bm25_topk
+    from mapreduce_system_spark.queries.text import q_bm25_topk
 
     plan = formatted_plan(q_bm25_topk(spark, SF_DIR))
     tree = _tree_lines(plan)
@@ -255,7 +258,7 @@ def test_bm25_df_broadcast_build_side_is_query_filtered(spark):
 
 def test_funnel_pushes_event_type_to_scan(spark):
     from mapreduce_system_spark.plans.checks import has_pushed_filters
-    from mapreduce_system_spark.queries.fresh7e import q_funnel_conversion
+    from mapreduce_system_spark.queries.relational import q_funnel_conversion
 
     df = q_funnel_conversion(spark, SF_DIR)
     assert has_pushed_filters(df)
@@ -264,7 +267,7 @@ def test_funnel_pushes_event_type_to_scan(spark):
 
 
 def test_int8_quantize_stats_join_broadcasts(spark):
-    from mapreduce_system_spark.queries.fresh7b import q_int8_quantize_error
+    from mapreduce_system_spark.queries.similarity import q_int8_quantize_error
 
     plan = formatted_plan(q_int8_quantize_error(spark, SF_DIR))
     assert "SortMergeJoin" not in plan, plan
@@ -272,7 +275,7 @@ def test_int8_quantize_stats_join_broadcasts(spark):
 
 
 def test_gap_fill_spine_join_has_no_shuffle_join(spark):
-    from mapreduce_system_spark.queries.fresh7b2 import q_gap_fill_daily
+    from mapreduce_system_spark.queries.temporal import q_gap_fill_daily
 
     plan = formatted_plan(q_gap_fill_daily(spark, SF_DIR))
     assert "SortMergeJoin" not in plan, plan
@@ -287,7 +290,7 @@ def test_skew_profile_topk_avoids_global_sort(spark):
     """The heavy-keys report must take its top-k with per-partition
     heaps (TakeOrderedAndProject), and the one-row totals must come
     back via broadcast, not a shuffle join."""
-    from mapreduce_system_spark.queries.fresh8h import q_skew_profile
+    from mapreduce_system_spark.queries.relational import q_skew_profile
 
     plan = formatted_plan(q_skew_profile(spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan, plan
@@ -298,7 +301,7 @@ def test_equi_depth_histogram_counts_ride_broadcast_not_window(spark):
     """Group sizes must join in via broadcast — an unbounded count(*)
     window would buffer whole groups; the decile assignment itself
     stays window-free beyond the single row_number sort."""
-    from mapreduce_system_spark.queries.fresh8h import q_histogram_equi_depth
+    from mapreduce_system_spark.queries.relational import q_histogram_equi_depth
 
     plan = formatted_plan(q_histogram_equi_depth(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan, plan
@@ -310,7 +313,7 @@ def test_equi_depth_histogram_counts_ride_broadcast_not_window(spark):
 def test_grouped_linreg_is_partial_final_aggregate(spark):
     """The fit must run as hash aggregates (partial+final) with the
     part dimension broadcast — no window, no sort-based fallback."""
-    from mapreduce_system_spark.queries.fresh8h import q_grouped_linreg
+    from mapreduce_system_spark.queries.aggregates import q_grouped_linreg
 
     plan = formatted_plan(q_grouped_linreg(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan, plan
@@ -321,7 +324,7 @@ def test_grouped_linreg_is_partial_final_aggregate(spark):
 def test_snapshot_diff_is_single_equi_join(spark):
     """The reconciliation must be one equi full-outer join — never a
     cartesian/nested-loop shape."""
-    from mapreduce_system_spark.queries.fresh8h import q_snapshot_diff
+    from mapreduce_system_spark.queries.relational import q_snapshot_diff
 
     plan = formatted_plan(q_snapshot_diff(spark, SF_DIR))
     for op in _ALL_PAIRS_OPS:
@@ -334,7 +337,7 @@ def test_bucket_lookup_scans_only_selected_buckets(spark):
     buckets for a key lookup is the regression this pins."""
     import re
 
-    from mapreduce_system_spark.queries.fresh8k import (
+    from mapreduce_system_spark.queries.sinks import (
         _LOOKUP_KEYS,
         q_bucket_pruned_lookup,
     )
@@ -349,7 +352,7 @@ def test_ohlc_is_window_free_partial_final_aggregate(spark):
     """The OHLC bars must plan as hash aggregates with map-side partial
     combine — no window sort of the raw stream (the formulation the
     argmin/argmax struct algebra exists to avoid)."""
-    from mapreduce_system_spark.queries.fresh8m import q_ohlc_hourly
+    from mapreduce_system_spark.queries.temporal import q_ohlc_hourly
 
     plan = formatted_plan(q_ohlc_hourly(spark, SF_DIR))
     assert "windowspecdefinition" not in plan, plan
@@ -363,7 +366,7 @@ def test_keep_latest_k_rides_window_group_limit(spark):
     """The rn <= K retention filter must be pushed into the sort as a
     WindowGroupLimit — per-key K-row heaps, not a full partition sort
     followed by a filter."""
-    from mapreduce_system_spark.queries.fresh8m import q_keep_latest_k
+    from mapreduce_system_spark.queries.pipeline import q_keep_latest_k
 
     plan = formatted_plan(q_keep_latest_k(spark, SF_DIR))
     assert "WindowGroupLimit" in plan, plan
@@ -378,14 +381,20 @@ def test_degenerate_division_guards_survive_in_both_engines(spark):
     Asserting on the real plan (not a re-typed expression) means
     reverting any one guard fails here — the linreg guard has its own
     executable degenerate-input test in test_fresh8h_queries."""
-    from mapreduce_system_spark.queries.fresh8d import _HIST_SQL, q_histogram_equi_width
-    from mapreduce_system_spark.queries.fresh8f import _TRIANGLE_SQL, q_triangle_count
-    from mapreduce_system_spark.queries.fresh8h import _TWAP_SQL, q_time_weighted_avg
-    from mapreduce_system_spark.queries.fresh8i import (
+    from mapreduce_system_spark.queries.relational import (
+        _HIST_SQL,
+        q_histogram_equi_width,
+    )
+    from mapreduce_system_spark.queries.graph import _TRIANGLE_SQL, q_triangle_count
+    from mapreduce_system_spark.queries.temporal import _TWAP_SQL, q_time_weighted_avg
+    from mapreduce_system_spark.queries.similarity import (
         _CENTROID_MATRIX_SQL,
         q_centroid_distance_matrix,
     )
-    from mapreduce_system_spark.queries.fresh8m import _PCA_SQL, q_pca_power_iteration
+    from mapreduce_system_spark.queries.similarity import (
+        _PCA_SQL,
+        q_pca_power_iteration,
+    )
 
     for fn, alias, sql, spelling in [
         (q_time_weighted_avg, "AS twap", _TWAP_SQL, "nullif(sum(dur_us), 0)"),
@@ -416,7 +425,7 @@ def test_weighted_pagerank_edge_build_prunes_and_equi_joins(spark):
     guard belongs on the pre-loop relation): the fact-fact join must be
     an equi-join with the lineitem scan pruned to exactly the three
     join/weight columns."""
-    from mapreduce_system_spark.queries._graphshared import purchase_edges_weighted
+    from mapreduce_system_spark.queries.graph import purchase_edges_weighted
 
     orders = load_table(spark, SF_DIR, "orders", columns=["o_orderkey", "o_custkey"])
     li = load_table(
@@ -500,9 +509,7 @@ def test_personalized_pagerank_seed_semi_join_is_equi(spark):
     """The seeded teleport construction (seeds ∩ nodes + the per-node tp
     left join) must stay equi-join-shaped: at graph scale the node list
     is corpus-sized and any nested-loop against it is O(n·|S|)."""
-    from mapreduce_system_spark.queries.graphml2 import (
-        q_graph_pagerank_personalized,
-    )
+    from mapreduce_system_spark.queries.graph import q_graph_pagerank_personalized
 
     _assert_equi_join_only(q_graph_pagerank_personalized(spark, SF_DIR))
 
@@ -557,7 +564,7 @@ def test_label_propagation_argmax_is_aggregate_not_window(spark, monkeypatch):
     from pyspark.sql.classic.dataframe import DataFrame as _DF
 
     from mapreduce_system_spark.operators.graph import label_propagation
-    from mapreduce_system_spark.queries._graphshared import copurchase_pairs
+    from mapreduce_system_spark.queries.graph import copurchase_pairs
 
     round_plans = []
     orig = _DF.localCheckpoint
@@ -643,9 +650,7 @@ def test_kcore_checkpoints_node_sized_and_unhinted(spark, monkeypatch):
     from pyspark.sql.classic.dataframe import DataFrame as _DF
 
     from mapreduce_system_spark.operators.graph import k_core_peel
-    from mapreduce_system_spark.queries._graphshared import (
-        copurchase_pairs_supported,
-    )
+    from mapreduce_system_spark.queries.graph import copurchase_pairs_supported
 
     checkpointed: list[list[str]] = []
     orig = _DF.localCheckpoint

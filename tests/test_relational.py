@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from mapreduce_system_spark.operators import relational as REL
 from mapreduce_system_spark.plans import checks
 from mapreduce_system_spark.queries import relational as QREL
-from mapreduce_system_spark.queries import relational2 as QREL2
+from mapreduce_system_spark.queries import aggregates as QAGG
 
 
 def test_broadcast_join_plan_is_broadcast_only(spark, sf_dir):
@@ -28,7 +28,7 @@ def test_semi_join_pushes_predicate(spark, sf_dir):
 
 
 def test_star_pricing_pushes_shipdate(spark, sf_dir):
-    df = QREL2.q_star_pricing(spark, sf_dir)
+    df = QAGG.q_star_pricing(spark, sf_dir)
     assert checks.has_pushed_filters(df)
     # scan must be pruned to the 6 needed columns, not the full table
     plan = checks.formatted_plan(df)
@@ -83,7 +83,10 @@ def test_approx_quantiles_close_to_exact(spark, sf_dir):
     must all be True with group counts matching the exact query."""
     from pyspark.sql import functions as F
 
-    from mapreduce_system_spark.queries.advanced import q_approx_quantiles, q_quantiles
+    from mapreduce_system_spark.queries.aggregates import (
+        q_approx_quantiles,
+        q_quantiles,
+    )
     from mapreduce_system_spark.sources.tables import load_table
 
     exact = {r.l_returnflag: (r.p50, r.p90) for r in q_quantiles(spark, sf_dir).collect()}
@@ -109,7 +112,7 @@ def test_rank_selection_percentiles_equal_percentile_agg(spark, sf_dir):
     """The spill-safe rank-based selection must be bit-equal (after the
     shared round-4) to Spark's exact percentile aggregate — same linear
     interpolation, different physical shape."""
-    from mapreduce_system_spark.queries.advanced import q_quantiles
+    from mapreduce_system_spark.queries.aggregates import q_quantiles
     from mapreduce_system_spark.sources.tables import load_table
 
     got = {r.l_returnflag: (r.p50, r.p90, r.cnt) for r in q_quantiles(spark, sf_dir).collect()}
@@ -154,7 +157,7 @@ def test_quantile_queries_ignore_null_values(spark, tmp_path):
     unguarded ranking selects shifted positions — r10 review). Synthetic
     lineitem: group A = values 1..9 plus two NULL rows; p50 must be 5,
     p90 must be 8.2, cnt stays count(*) = 11."""
-    from mapreduce_system_spark.queries.advanced import (
+    from mapreduce_system_spark.queries.aggregates import (
         q_approx_quantiles,
         q_quantiles,
     )

@@ -440,7 +440,7 @@ def test_stateful_queries_identical_under_rocksdb_state_store(spark, sf_dir):
     state on the JVM heap) must produce row-for-row identical results.
     Each query starts its stream from a fresh checkpoint, so the provider
     conf binds cleanly per run."""
-    from mapreduce_system_spark.queries.fresh6 import (
+    from mapreduce_system_spark.queries.streaming import (
         q_stateful_sessions,
         q_stateful_user_totals,
     )
@@ -592,7 +592,7 @@ def test_tws_sessions_row_identical_to_gst(spark, sf_dir):
     a semantic drift between GroupStateTimeout and explicit timers
     cannot hide."""
     _tws_or_skip()
-    from mapreduce_system_spark.queries.fresh6 import (
+    from mapreduce_system_spark.queries.streaming import (
         q_stateful_sessions,
         q_stateful_sessions_tws,
     )

@@ -108,7 +108,7 @@ def test_heavy_hitter_candidates_are_a_superset_of_true_heavy_hitters(spark):
     """The two-pass heavy-hitter query is only correct if freqItems'
     candidate set contains every token above the FINAL support — pin the
     superset guarantee at the candidate support actually used."""
-    from mapreduce_system_spark.queries.textstats2 import (
+    from mapreduce_system_spark.queries.text import (
         _HH_CAND_SUPPORT,
         _HH_SUPPORT,
         q_heavy_hitters,
@@ -193,10 +193,7 @@ def test_quality_profile_cross_engine_on_adversarial_strings(spark, tmp_path):
     import duckdb
     from pyspark.sql import Row
 
-    from mapreduce_system_spark.queries.textstats import (
-        _QUALITY_SQL,
-        q_quality_profile,
-    )
+    from mapreduce_system_spark.queries.text import _QUALITY_SQL, q_quality_profile
 
     texts = [
         None,

@@ -60,7 +60,7 @@ QUERIES = [
     "txt_bm25_topk",
     "txt_unigram_surprisal",
     "emb_int8_quantize_error",
-    # late round-8 batch (fresh8e/fresh8f)
+    # the round-8 additions
     "emb_centroid_outliers",
     "rel_scalar_subquery_q17",
     "graph_triangle_count",
@@ -72,29 +72,23 @@ QUERIES = [
     "rel_not_exists_subquery",
     "agg_grouped_mode_argmax",
     "txt_bigram_surprisal",
-    # eighth batch (fresh8h)
     "graph_bfs_reachability",
     "agg_grouped_linreg",
     "fn_time_weighted_avg",
     "rel_histogram_equi_depth",
     "rel_skew_profile",
     "rel_snapshot_diff",
-    # ninth batch (fresh8i)
     "pipe_group_kfold",
     "txt_ttr_lexical_diversity",
     "emb_centroid_distance_matrix",
     "fn_moving_window_stats",
-    # tenth batch (fresh8j)
     "fn_cohort_retention",
     "txt_vocab_coverage",
     "graph_degree_distribution",
-    # eleventh batch (fresh8k)
     "sink_bucket_pruned_lookup",
     "pipe_source_manifest",
-    # twelfth batch (fresh8l)
     "rel_pit_join_scd2",
     "agg_mad_outliers",
-    # thirteenth batch (fresh8m)
     "fn_ohlc_hourly",
     "pipe_keep_latest_k",
     "emb_pca_power_iteration",

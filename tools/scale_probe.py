@@ -753,9 +753,9 @@ def stream_main(reps: int = 10, src: str = SF01, out_name=None) -> int:
     (keys × batches + closed-session flushes), not superlinearly; (2)
     the store's row count peaks at O(live keys), the eviction bound
     user_sessions_stateful documents — measured from the query's own
-    replay progress (queries/fresh6.py::replay_sessions), not a
+    replay progress (queries/streaming.py::replay_sessions), not a
     re-derived replay."""
-    from mapreduce_system_spark.queries import fresh6
+    from mapreduce_system_spark.queries import streaming
     from mapreduce_system_spark.streaming import stateful as ST
 
     dst = f"{SCRATCH}/stream_sf1"
@@ -765,7 +765,7 @@ def stream_main(reps: int = 10, src: str = SF01, out_name=None) -> int:
 
     def run(d: str):
         t0 = time.time()
-        out, progress = fresh6.replay_sessions(
+        out, progress = streaming.replay_sessions(
             spark, d, "probe_stream", ST.user_sessions_stateful, _ROCKSDB_CONF,
         )
         closed = int(out.count())
@@ -777,7 +777,7 @@ def stream_main(reps: int = 10, src: str = SF01, out_name=None) -> int:
     timed = _two_scales(run, scales)
     record: dict = {
         "mode": "stream", "reps": reps, "src": src,
-        "provider": "rocksdb", "gap_s": fresh6.GAP_S, "scales": {},
+        "provider": "rocksdb", "gap_s": streaming.GAP_S, "scales": {},
     }
     for label, d in scales:
         closed = {c for c, _ in timed[label].results}
@@ -824,7 +824,7 @@ def sessions_main(reps: int = 10, src: str = SF01, out_name=None) -> int:
     from contextlib import nullcontext
 
     from mapreduce_system_spark.pbshim import tws_protobuf_env
-    from mapreduce_system_spark.queries import fresh6
+    from mapreduce_system_spark.queries import streaming
     from mapreduce_system_spark.streaming import stateful as ST
 
     dst = f"{SCRATCH}/sessions_sf1"
@@ -837,7 +837,7 @@ def sessions_main(reps: int = 10, src: str = SF01, out_name=None) -> int:
         env = tws_protobuf_env(spark) if variant == "tws" else nullcontext()
         t0 = time.time()
         with env:
-            out, progress = fresh6.replay_sessions(
+            out, progress = streaming.replay_sessions(
                 spark, d, f"probe_sess_{variant}", sessionizers[variant], _ROCKSDB_CONF,
             )
             closed = int(out.count())
@@ -847,7 +847,7 @@ def sessions_main(reps: int = 10, src: str = SF01, out_name=None) -> int:
 
     record: dict = {
         "mode": "sessions", "reps": reps, "src": src,
-        "provider": "rocksdb", "gap_s": fresh6.GAP_S, "variants": {},
+        "provider": "rocksdb", "gap_s": streaming.GAP_S, "variants": {},
     }
     default_name = "scale_probe_sessions_latest.json"
     header = ["variant", "scale", "closed", "wall s", "peak state rows", "peak state bytes"]
@@ -896,7 +896,7 @@ def boilerplate_main(reps: int = 10, src: str = SF01, out_name=None) -> int:
     is the free variable. The registered query itself is what runs (it
     stages the banner/footer condition internally from ``source``, which
     the suffix keeps per-replica distinct) — no private re-derivation."""
-    from mapreduce_system_spark.queries.fresh10 import q_pipe_strip_boilerplate
+    from mapreduce_system_spark.queries.pipeline import q_pipe_strip_boilerplate
 
     dst = f"{SCRATCH}/boilerplate_sf1"
     spark = get_spark("scale_probe_boilerplate")
@@ -1080,7 +1080,7 @@ def tfidf_main(reps: int = 10, src: str = SF01, out_name=None) -> int:
 
     # cap 250, NOT the registered query's 200 or the shingle family's
     # 100: token DF is per-SHARD under the disjoint construction, and the
-    # fixture's measured token-DF cliff (queries/fresh10.py) means caps
+    # fixture's measured token-DF cliff (queries/dedup.py) means caps
     # <= 200 leave ZERO shared postings at sf0.1 — a probe that measures
     # nothing; 250 admits the mid-frequency stratum (675 pairs @0.3 at
     # sf0.1) so candidate growth is actually exercised
@@ -1162,7 +1162,7 @@ def lpa_main(reps: int = 10, src: str = SF01, out_name=None) -> int:
     partial+final aggregates, so wall should grow far slower than
     reps."""
     from mapreduce_system_spark.operators.graph import label_propagation
-    from mapreduce_system_spark.queries._graphshared import copurchase_pairs
+    from mapreduce_system_spark.queries.graph import copurchase_pairs
 
     dst = f"{SCRATCH}/lpa_sf1"
     spark = get_spark("scale_probe_lpa")
@@ -1223,7 +1223,7 @@ def kcore_main(reps: int = 10, src: str = SF01, organic_pct: int = 0, out_name=N
     gates only on sanity (survivors and the degree tail must grow,
     never shrink)."""
     from mapreduce_system_spark.operators.graph import k_core_peel
-    from mapreduce_system_spark.queries._graphshared import copurchase_pairs
+    from mapreduce_system_spark.queries.graph import copurchase_pairs
 
     k, rounds = 3, 3
     dst = f"{SCRATCH}/kcore_sf1"
@@ -1339,7 +1339,7 @@ def ccjump_main(reps: int = 10, src: str = SF01, out_name=None) -> int:
     synthetic by necessity: no fixture relation carries diameter in
     the thousands, and depth IS the stressor here."""
     from mapreduce_system_spark.operators.graph import connected_components_jump
-    from mapreduce_system_spark.queries._graphshared import copurchase_pairs
+    from mapreduce_system_spark.queries.graph import copurchase_pairs
 
     dst = f"{SCRATCH}/ccjump_sf1"
     spark = get_spark("scale_probe_ccjump")
@@ -1551,7 +1551,7 @@ def bloom_main(reps: int = 10, src: str = SF01, out_name=None) -> int:
 
     FP_TARGET = 0.01                   # the registered query's target
     K = bloom_params(1, FP_TARGET)[1]  # k is n-independent (= 7 at 1%)
-    BATCH_BUCKET, RECRAWL_MOD = 90, 7  # (queries/fresh13.py)
+    BATCH_BUCKET, RECRAWL_MOD = 90, 7  # (queries/dedup.py)
     spark = get_spark("scale_probe_bloom")
     docs = load_table(spark, src, "documents", columns=["doc_id", "text"])
     b = (
@@ -1658,7 +1658,7 @@ def bloom_main(reps: int = 10, src: str = SF01, out_name=None) -> int:
 
 def ktruss_main(reps: int = 10, src: str = SF01, out_name=None) -> int:
     """k-truss peeling at 1× vs reps× on the disjoint co-purchase
-    replicas, with the REGISTERED constants (queries/fresh14.py: raw
+    replicas, with the REGISTERED constants (queries/graph.py: raw
     graph, k=8, rounds=2 — the support-2 graph at k=3 has a 3-edge truss
     at sf0.1 and measures nothing). Hard gates: the surviving EDGE
     census scales EXACTLY reps× AND the survivor SUPPORT histogram
@@ -1670,7 +1670,7 @@ def ktruss_main(reps: int = 10, src: str = SF01, out_name=None) -> int:
     docstring), so expect a HIGHER wall ratio than k-core's (three
     E-sized materializations ride the rounds by design, not defect)."""
     from mapreduce_system_spark.operators.graph import k_truss_edges
-    from mapreduce_system_spark.queries._graphshared import copurchase_pairs
+    from mapreduce_system_spark.queries.graph import copurchase_pairs
 
     k, rounds = 8, 2
     dst = f"{SCRATCH}/ktruss_sf1"

@@ -8,9 +8,10 @@ and order-insensitive values. Usage:
 
 Full-catalog runs (no explicit query args) also write a JSON artifact to
 ``bench_runs/verify_full_latest.json`` — one entry per query with status/
-rows/seconds — so each round can commit a durable record of out-of-window
-health next to the driver's 50-query CORRECTNESS window (VERDICT r8 #6).
-Copy it to ``bench_runs/verify_full_r{N}.json`` when committing.
+rows/seconds. Like bench.py's ``latest.json`` it is git-ignored, so a run
+never dirties the tree; copy it to ``bench_runs/verify_full_r{N}.json`` to
+commit a durable record of out-of-window health next to the driver's
+50-query CORRECTNESS window.
 """
 
 from __future__ import annotations
