@@ -130,12 +130,6 @@ def _build_shim() -> str | None:
     return _SHIM_BASE
 
 
-def tws_available() -> bool:
-    """True when transformWithStateInPandas can run here (site protobuf
-    or a buildable shim)."""
-    return _site_protobuf_available() or _build_shim() is not None
-
-
 @contextmanager
 def tws_protobuf_env(spark):
     """Bind the protobuf shim into the Python-worker environment for the

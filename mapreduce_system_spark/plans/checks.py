@@ -33,26 +33,6 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
 
-def physical_subtrees(df: DataFrame):
-    """Yield ``(node_name, head, subtree)`` for every node of the
-    initial (pre-AQE) physical plan — ``head`` is the node's own
-    one-line description, ``subtree`` the text of the node and its
-    whole subtree. This is what STRUCTURAL guards need: "operator X's
-    subtree contains operator Y" is a parent/child claim that substring
-    counts over the flat plan cannot express (ADVICE r14 #4 — a
-    regression can keep every node present while inverting the
-    nesting)."""
-
-    def walk(node):
-        yield node
-        for i in range(node.children().size()):
-            yield from walk(node.children().apply(i))
-
-    for n in walk(df._jdf.queryExecution().sparkPlan()):
-        s = n.toString()
-        yield n.nodeName(), s.split("\n", 1)[0], s
-
-
 def wholestage_codegen_spans(df: DataFrame) -> int:
     """Count DISTINCT whole-stage-codegen spans — wider/fewer is better.
 

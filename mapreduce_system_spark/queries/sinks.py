@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_system_spark.caches import tracked_cache
+from mapreduce_system_spark.queries.relational import _CDC_SQL
 from mapreduce_system_spark.registry import register
 from mapreduce_system_spark.sources.merge import merge_upsert, read_latest
 from mapreduce_system_spark.sources.sinks import write_parquet
@@ -137,7 +138,6 @@ def q_scan_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     unioned 50/50 by an even/odd key split. The aggregate equals the same
     profile computed straight from the parquet table, proving both text
     codecs round-trip values (longs, doubles, strings) exactly."""
-    from mapreduce_system_spark.caches import tracked_cache
     from mapreduce_system_spark.sources.sinks import write_csv
     from mapreduce_system_spark.sources.text import read_csv, read_json
 
@@ -340,25 +340,12 @@ def q_sink_dpp_join_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sink_merge_upsert — MERGE-style keyed compaction write path
 # ---------------------------------------------------------------------------
 
-# The oracle is rel_cdc_latest_state's algebra verbatim (kept literal so
-# the sink's oracle reads on its own): folding the changelog through the
+# The oracle is rel_cdc_latest_state's: folding the changelog through the
 # upsert sink in ANY batch order must land on the same latest-state view
 # a single-pass compaction computes.
-_MERGE_SQL = """
-SELECT user_id,
-       CAST(epoch_us(ts) AS BIGINT) AS last_ts_us,
-       event_type AS last_type,
-       round(value, 2) AS last_value
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-  FROM events
-)
-WHERE rn = 1
-ORDER BY user_id
-"""
 
 
-@register("sink_merge_upsert", _MERGE_SQL)
+@register("sink_merge_upsert", _CDC_SQL)
 def q_sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental MERGE/upsert write path (VERDICT r7 #6): the events
     changelog is split into three batches (pmod(hash(event_id), 3) — the

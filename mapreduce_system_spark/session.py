@@ -23,6 +23,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Streams commit state-store deltas, their checksum files and offset and
+# commit log entries through this manager's rename. Spark's default
+# (FileContext-based) manager asks RawLocalFileSystem for the link status
+# of source and destination, and each ask forks a ``readlink`` process
+# from the driver JVM; FileSystem.rename is File.renameTo on a local
+# path. The overwrite check is the same either way: ``exists(dst)``, then
+# rename. A/B on the stateful stream queries:
+# bench_runs/r19_checkpoint_fm_ab.json.
+CHECKPOINT_FILE_MANAGER = {
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
+}
+
 
 def get_spark(
     app_name: str = "mapreduce_system_spark",
@@ -75,6 +90,7 @@ def get_spark(
         # sources.tables.load_table (floor to microseconds — same truncation
         # DuckDB applies, keeping the oracle comparison exact).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config(map=CHECKPOINT_FILE_MANAGER)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -26,9 +26,14 @@ batch boundary cannot match.
   files get strictly increasing mtimes, which is the file source's
   arrival order. It returns the file stream (``maxFilesPerTrigger=1``).
 - ``run``: starts the caller's writer with ``availableNow`` under the
-  pinned confs, waits, and always stops it. It then checks that progress
-  shows one input micro-batch per staged file and returns the caller's
-  result checkpointed, so the result outlives the scratch dir.
+  pinned confs (``_PINS``), waits, and always stops it. It then checks
+  that progress shows one input micro-batch per staged file and returns
+  the caller's result checkpointed, so the result outlives the scratch
+  dir.
+- ``_PINS`` pins ``session.CHECKPOINT_FILE_MANAGER`` too, so a stream in
+  a session ``get_spark`` did not build (the driver's vanilla one) still
+  commits state and log files by ``FileSystem.rename``, which forks no
+  ``readlink`` process per rename.
 """
 
 from __future__ import annotations
@@ -45,8 +50,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
 
 from mapreduce_system_spark import caches
+from mapreduce_system_spark.session import CHECKPOINT_FILE_MANAGER
 
 _PINS = {
+    **CHECKPOINT_FILE_MANAGER,
     # One state-store instance per shuffle partition per batch. On 32
     # cores the constant 8 ran stream_stateful_user_totals in 3.39 s and
     # stream_stateful_sessions in 7.26 s (bench_runs/r18a.json), where
@@ -64,9 +71,9 @@ class Replay:
     """One replayed stream over a scratch dir (see the module docstring).
 
     ``conf`` holds extra session confs pinned while the stream starts and
-    runs, e.g. the RocksDB state-store provider. The shuffle-partition
-    and progress-retention pins always apply. Every pinned conf is
-    restored afterwards; an unset one stays unset."""
+    runs, e.g. the RocksDB state-store provider. The ``_PINS`` (shuffle
+    partitions, progress retention, checkpoint manager) always apply.
+    Every pinned conf is restored afterwards; an unset one stays unset."""
 
     def __init__(
         self,

@@ -36,3 +36,22 @@ def persisted_rdd_ids(spark) -> set[int]:
     while it.hasNext():
         ids.add(it.next())
     return ids
+
+
+def physical_subtrees(df):
+    """Yield ``(node_name, head, subtree)`` for every node of the
+    initial (pre-AQE) physical plan — ``head`` is the node's own
+    one-line description, ``subtree`` the text of the node and its
+    whole subtree. Structural guards need this: "operator X's subtree
+    contains operator Y" is a parent/child claim that substring counts
+    over the flat plan cannot express (a regression can keep every
+    node present while inverting the nesting)."""
+
+    def walk(node):
+        yield node
+        for i in range(node.children().size()):
+            yield from walk(node.children().apply(i))
+
+    for n in walk(df._jdf.queryExecution().sparkPlan()):
+        s = n.toString()
+        yield n.nodeName(), s.split("\n", 1)[0], s

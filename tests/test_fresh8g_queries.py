@@ -64,7 +64,7 @@ def test_table_profile_scan_and_aggregate_shape(spark):
     below the Expand — that is the demotion's cost; (c) the slim pass's
     scan must stay pruned to exactly the string columns."""
     from mapreduce_system_spark.queries.relational import _STR_COLS, q_table_profile
-    from mapreduce_system_spark.plans.checks import physical_subtrees
+    from tests.conftest import physical_subtrees
 
     df = q_table_profile(spark, SF_DIR)
     nodes = list(physical_subtrees(df))

@@ -601,7 +601,7 @@ def test_rrf_fusion_coverage_reads_shared_tf(spark):
     Plus the cheap global proxies: no CartesianProduct, no SortMergeJoin
     (the BM25 subtree's one-row corpus-stats BroadcastNestedLoopJoin is
     the only nested-loop allowed)."""
-    from mapreduce_system_spark.plans.checks import physical_subtrees
+    from tests.conftest import physical_subtrees
     from mapreduce_system_spark.registry import QUERIES
 
     df = QUERIES["txt_rrf_fusion"](spark, SF_DIR)

@@ -312,6 +312,54 @@ def test_checkpoint_recovery_resumes_without_reprocessing(spark, tmp_path):
     assert got == [(1, 1.0), (2, 2.0), (3, 3.0)]
 
 
+def _checkpoint_file_manager(session) -> str:
+    """Class of the manager a stream in ``session`` commits files with."""
+    jvm = session.sparkContext._jvm
+    path = jvm.org.apache.hadoop.fs.Path("/tmp/spark_graft_fm_probe")
+    hadoop_conf = session._jsparkSession.sessionState().newHadoopConf()
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    return manager.CheckpointFileManager.create(path, hadoop_conf).getClass().getName()
+
+
+def test_stream_checkpoints_use_filesystem_manager(spark):
+    """Every stream the engine starts renames checkpoint files with
+    FileSystem.rename (no forked ``readlink``): the engine session sets
+    the manager, and ``Replay`` pins it for a session that does not and
+    unsets it again afterwards. Checkpoint checksums stay on."""
+    from mapreduce_system_spark import caches
+    from mapreduce_system_spark.session import CHECKPOINT_FILE_MANAGER
+    from mapreduce_system_spark.streaming.replay import Replay
+
+    (key,) = CHECKPOINT_FILE_MANAGER
+    checksums = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
+    fs_manager = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    assert _checkpoint_file_manager(spark) == fs_manager
+    assert spark.conf.get(checksums, "true") != "false"
+
+    vanilla = spark.newSession()
+    vanilla.conf.unset(key)
+    assert _checkpoint_file_manager(vanilla) != fs_manager
+    seen = {}
+
+    def record(batch_df, _i):
+        session = batch_df.sparkSession
+        seen["manager"] = _checkpoint_file_manager(session)
+        seen["checksums"] = session.conf.get(checksums, "true")
+
+    try:
+        with Replay(vanilla, "test_fm", "unit") as r:
+            stream = r.stage(vanilla.range(10).withColumnRenamed("id", "user_id"))
+            r.run(stream.writeStream.foreachBatch(record), lambda: vanilla.range(1))
+        assert seen["manager"] == fs_manager
+        assert seen["checksums"] != "false"
+        assert vanilla.conf.get(key, None) is None
+    finally:
+        caches.release()
+
+
 def test_stateful_sessions_close_on_gap_and_timeout(spark, tmp_path):
     """Custom stateful sessionization (EventTimeTimeout): a session is
     appended exactly once — either a later event breaks the gap, or the
@@ -558,7 +606,8 @@ _ROCKSDB = (
 def _tws_or_skip():
     from mapreduce_system_spark import pbshim
 
-    if not pbshim.tws_available():
+    # transformWithStateInPandas runs with a site protobuf or a buildable shim
+    if not (pbshim._site_protobuf_available() or pbshim._build_shim() is not None):
         pytest.skip("no google.protobuf and no vendored runtime to shim")
     return pbshim
 
